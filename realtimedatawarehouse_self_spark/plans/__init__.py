@@ -16,19 +16,10 @@ from realtimedatawarehouse_self_spark.plans import (
     advanced,
     behavior,
     core,
-    corpus_ops,
-    curation,
-    drift,
     experiment,
     extras,
-    featurize,
-    llm_ops,
     mining,
-    entity,
-    python_path,
-    sft_ops,
     state_ops,
-    retrieval,
     sketches,
     streaming_twins,
     timeseries,
@@ -37,25 +28,16 @@ from realtimedatawarehouse_self_spark.plans import (
 
 _MODULES = (
     core,
-    curation,
     behavior,
     tpch,
-    llm_ops,
-    corpus_ops,
     experiment,
     extras,
     advanced,
-    retrieval,
     mining,
     state_ops,
-    drift,
-    entity,
-    featurize,
     sketches,
     streaming_twins,
     timeseries,
-    python_path,
-    sft_ops,
 )
 
 # The external driver verifies queries in registry order and stops at a
@@ -81,118 +63,31 @@ _MODULES = (
 # funnel, SCD2, r2 streaming twins, keyword/baselog/dim-config), then the
 # stalest r1 tail.
 _VERIFY_FIRST = [
-    "top_users_by_event_type",
-    "tpch_q10_returned_revenue",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_lines",
-    "tpch_q14_promo_share",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_variety",
-    "tpch_q19_branch_revenue",
-    "tpch_q1_pricing_summary",
-    "tpch_q20_dominant_supplier",
-    "tpch_q21_waiting_supplier",
-    "tpch_q22_idle_balances",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_late_orders",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_nation_trade",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "vocab_topk",
-    "column_profile",
-    "cube_part_stats",
-    "decontaminate_ngram_overlap",
-    "dedup_clusters",
-    "dedup_embedding_cosine",
-    "dedup_lsh_verified",
-    "doc_chunking",
-    "doc_pack_greedy",
-    "embedding_quantize_int8",
-    "keyword_page_view_udf",
-    "kmeans_ivf_train",
-    "knn_label_vote",
-    "lang_mix_rebalance",
-    "multimodal_decode",
-    "multimodal_frame_sample",
-    "pii_scrub_stats",
-    "repetition_filter",
-    "semi_anti_customers",
-    "similarity_topk_filtered",
-    "similarity_topk_ivf_multiprobe",
-    "tpch_q13_order_distribution",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_orders",
-    "tpch_q5_local_supplier",
-    "dim_config_routing",
-    "abandoned_view_rate",
-    "active_users_rolling",
-    "anomaly_zscore_daily",
-    "approx_daily_users",
-    "attribution_last_touch",
     "audience_overlap_jaccard",
-    "bm25_doc_search",
-    "collocation_pmi",
-    "dedup_clusters_star",
-    "dedup_containment",
-    "dedup_incoming_batch",
-    "dedup_jaccard_prefix_filter",
-    "dedup_survivorship",
-    "dedup_token_yield",
-    "domain_mixture_temperature",
     "dq_constraint_audit",
     "event_type_markov_transitions",
     "ewma_anomaly_daily",
     "heavy_hitter_users",
     "kcore_peeling_rounds",
-    "lm_quality_probability",
     "market_basket_lift",
-    "multimodal_audio_windows",
-    "pretrain_data_recipe",
     "quantile_normalize_values",
     "rfm_user_features",
-    "similarity_topk_ivf_adc_rerank",
-    "similarity_topk_pq_adc",
     "snapshot_diff_user_state",
-    "source_span_overlap",
-    "span_dedup_stats",
     "streaming_abandoned_views",
     "streaming_ewma_daily",
     "streaming_incremental_rollup",
     "streaming_join_view_purchase",
-    "subsample_mean_variance",
-    "tfidf_doc_keywords",
     "triangle_count_co_engagement",
     "user_journey_paths",
     "user_retention_cohorts",
     "array_function_surface",
-    "bpe_pair_counts",
     "change_point_cusum",
-    "contamination_longest_match",
     "conversion_lag_profile",
-    "cross_source_dup_matrix",
     "decayed_user_score",
-    "dedup_cluster_quality",
-    "distribution_shift_chi2",
-    "doc_lexical_diversity",
-    "embedding_centroid_drift",
-    "embedding_gram_matrix",
-    "embedding_norm_profile",
-    "eval_slice_sample_exact",
-    "feature_hashing_counts",
     "fifo_credit_matching",
     "gap_fill_interpolate",
     "incremental_hourly_rollup",
-    "ivf_recall_audit",
-    "lang_confusion_matrix",
     "link_prediction_common_neighbors",
-    "lm_bigram_coverage",
-    "lsh_recall_audit",
-    "mad_anomaly_daily",
-    "minhash_band_tuning",
-    "minhash_estimate_error",
-    "ngram_novelty_rate",
     "ols_daily_trend",
     "order_reconciliation_audit",
     "pagerank_co_engagement",
@@ -203,8 +98,6 @@ _VERIFY_FIRST = [
     "running_balance_floor",
     "seasonal_baseline_residual",
     "seasonal_naive_backtest",
-    "split_leakage_audit",
-    "target_encoding_oof",
     "unpivot_revenue_components",
     "user_churn_labels",
     "user_day_bitmap_retention",
@@ -216,32 +109,23 @@ _VERIFY_FIRST = [
     "window_rank_surface",
     "winsorized_value_stats",
     "zorder_layout_audit",
-    "autocorrelation_daily_lags",
     "bucketed_join_colocation",
     "degree_distribution_histogram",
     "interval_coverage_sweep",
-    "trimmed_mean_value_udaf",
     "attribution_linear_apportion",
     "topk_churn_daily",
     "ab_experiment_lift",
     "cuped_variance_reduction",
     "k_anonymity_audit",
-    "embedding_power_iteration",
     "diff_in_diff",
     "survival_hazard_daily",
     "kmv_distinct_daily",
     "kmv_rolling_distinct",
-    "bloom_prefilter_audit",
     "shuffle_skew_audit",
-    "phrase_search_positional",
     "join_cardinality_estimate",
-    "mmr_diversified_topk",
-    "weighted_sample_priority",
     "kmv_audience_intersection",
     "file_skipping_audit",
     "deletion_impact_audit",
-    "entity_match_parts",
-    "entity_golden_record",
     "late_dim_reattribution",
     "cms_frequency_audit",
     "topk_merge_audit",
@@ -249,7 +133,6 @@ _VERIFY_FIRST = [
     "watermark_lateness_audit",
     "l_diversity_audit",
     "join_order_recommendation",
-    "multimodal_byte_profile",
     "quantile_rolling_merge",
     "map_function_surface",
     "t_closeness_audit",
@@ -257,7 +140,6 @@ _VERIFY_FIRST = [
     "holt_linear_forecast",
     "revenue_concentration_hhi",
     "streaming_cdc_apply_twin",
-    "streaming_dedup_incoming",
     "streaming_kmv_daily",
     "streaming_funnel_3way",
     "streaming_late_drop_twin",
@@ -283,66 +165,25 @@ _VERIFY_FIRST = [
     "streaming_pv_hourly",
     "streaming_uv_daily",
     "community_label_propagation",
-    "cooccurrence_window_pmi",
     "item_cf_recommend",
-    "pit_training_matrix",
-    "hard_negative_mining",
-    "multimodal_resize",
-    "bpe_merge_rounds",
-    "kneser_ney_counts",
-    "sequence_length_bucketing",
     "hll_union_rolling",
     "dp_sensitivity_audit",
     "srm_guardrail_audit",
-    "annotator_agreement_kappa",
-    "bpe_apply_fertility",
     "conformal_calibration_audit",
-    "importance_weight_selection",
     "incremental_join_maintenance",
-    "multimodal_phash_dedup",
     "pass_at_k_estimator",
     "streaming_hll_merge_twin",
-    "classifier_calibration_ece",
     "kmv_audience_difference",
     "markov_removal_effect",
     "recsys_holdout_eval",
     "streaming_ivm_join_twin",
-    "vocab_concentration_simpson",
     "encoding_choice_audit",
-    "filter_ablation_matrix",
     "next_event_prediction_accuracy",
     "streaming_update_mode_twin",
     "binary_classifier_auc",
-    "dataset_card_rollup",
     "degree_assortativity",
     "streaming_complete_mode_twin",
     "streaming_session_windows",
-    "domain_frequency_cap",
-    "html_text_extraction",
-    "epoch_shard_plan",
-    "robots_blocklist_filter",
-    "streaming_domain_cap_twin",
-    "tokenizer_vocab_coverage",
-    "warc_record_parse",
-    "web_front_door_recipe",
-    "token_budget_mixture",
-    "bradley_terry_strength",
-    "dawid_skene_vote",
-    "episode_discounted_returns",
-    "fasttext_hash_quality",
-    "pairwise_preference_matrix",
-    "perplexity_bucket_assign",
-    "rouge_bigram_eval",
-    "semdedup_eps_sweep",
-    "confident_learning_audit",
-    "episode_advantage_baseline",
-    "importance_weight_ess",
-    "pack_attention_waste",
-    "preference_holdout_accuracy",
-    "streaming_episode_return_twin",
-    "keyphrase_rake",
-    "mixture_temperature_sweep",
-    "negative_sampling_table",
     "asof_join_purchase_signup",
     "cdc_changelog_snapshot",
     "event_value_percentiles",
@@ -357,65 +198,39 @@ _VERIFY_FIRST = [
     "skewed_salted_revenue",
     "sliding_window_traffic",
     "window_frames_running_spend",
-    "corpus_clean_pipeline",
-    "corpus_split_assign",
-    "dedup_edit_distance",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "doc_fingerprint",
-    "doc_length_histogram",
-    "dedup_duplicated_spans",
-    "crawl_to_train_funnel",
-    "bleu_ngram_eval",
-    "cdc_chunk_dedup",
-    "curriculum_order_plan",
-    "duplicated_span_removal",
-    "streaming_chunk_owner_twin",
-    "crawl_frontier_plan",
-    "host_quality_shrinkage",
-    "robots_rule_eval",
-    "chrf_char_eval",
-    "distinct_ngram_diversity",
-    "quality_threshold_sweep",
-    "streaming_vocab_growth_twin",
-    "vocab_growth_curve",
-    "badword_ratio_filter",
-    "code_switch_profile",
-    "mixture_shard_conformance",
-    "bitext_margin_mining",
-    "episode_return_to_go",
-    "streaming_frontier_twin",
-    "sft_turn_structure_audit",
-    "sft_template_render_overhead",
-    "sft_loss_masking_plan",
-    "streaming_sft_gate_twin",
-    "unicode_normalization_audit",
-    "caption_image_alignment",
-    "preference_length_bias_probe",
-    "synthetic_watermark_detect",
-    "dpo_pair_extraction",
-    "retrieval_ndcg_eval",
-    "fim_transform_plan",
-    "streaming_watermark_twin",
-    "memorization_risk_audit",
-    "tokenizer_parity_audit",
-    "inbatch_negative_collision_audit",
-    "filter_cascade_order_plan",
-    "repeated_epoch_value_plan",
-    "sft_complexity_score",
-    "quantization_outlier_audit",
-    "prompt_prefix_cache_plan",
-    "lang_id_ngram",
-    "multimodal_metadata",
     "scalar_function_surface",
-    "similarity_topk_bruteforce",
-    "similarity_topk_ivf",
-    "similarity_topk_lsh_bucketed",
-    "stratified_sample_corpus",
-    "text_quality_score",
-    "token_count_stats",
+    "dim_config_routing",
+    "top_users_by_event_type",
+    "tpch_q10_returned_revenue",
+    "tpch_q11_important_stock",
+    "tpch_q12_priority_lines",
+    "tpch_q14_promo_share",
+    "tpch_q15_top_supplier",
+    "tpch_q16_supplier_variety",
+    "tpch_q19_branch_revenue",
+    "tpch_q1_pricing_summary",
+    "tpch_q20_dominant_supplier",
+    "tpch_q21_waiting_supplier",
+    "tpch_q22_idle_balances",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q3_shipping_priority",
+    "tpch_q4_late_orders",
+    "tpch_q6_forecast_revenue",
+    "tpch_q7_nation_trade",
+    "tpch_q8_market_share",
+    "tpch_q9_product_profit",
+    "column_profile",
+    "cube_part_stats",
+    "keyword_page_view_udf",
+    "semi_anti_customers",
+    "tpch_q13_order_distribution",
+    "tpch_q17_small_quantity_revenue",
+    "tpch_q18_large_orders",
+    "tpch_q5_local_supplier",
+    "abandoned_view_rate",
+    "active_users_rolling",
+    "anomaly_zscore_daily",
+    "attribution_last_touch",
 ]
 
 

@@ -49,9 +49,30 @@ TABLES = (
 # shuffle the fact side.
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
-# path -> inferred StructType; see load_table. Keyed on the full path so
-# different sf_dirs (bench vs tests vs driver) can never cross-talk.
+# path -> ((mtime_ns, size), inferred StructType); see _schema. Keyed on the
+# full path so different sf_dirs can never cross-talk, and stamped so a
+# table rewritten in place is re-inferred.
 _SCHEMA_CACHE: dict = {}
+
+
+def _schema(spark: SparkSession, path: str):
+    """Parquet schema of ``path``, inferred once per (path, mtime, size).
+
+    Without an explicit schema every load_table call runs a footer-read JOB
+    at query CONSTRUCTION — one per table per build. The schema is
+    metadata, not data: caching it changes no result and every run still
+    computes from the parquet bytes. A path that cannot be stat'ed (absent,
+    or not on the local filesystem) is inferred by Spark every time, which
+    also lets Spark report a missing path itself."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    stamp = (st.st_mtime_ns, st.st_size)
+    cached = _SCHEMA_CACHE.get(path)
+    if cached is None or cached[0] != stamp:
+        cached = _SCHEMA_CACHE[path] = (stamp, spark.read.parquet(path).schema)
+    return cached[1]
 
 
 def load_table(
@@ -72,19 +93,7 @@ def load_table(
     if name in TS_COLUMNS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # Schema-inference cache (r11): without an explicit schema every
-    # load_table call runs a footer-read JOB at query CONSTRUCTION — one
-    # per table per build, ~1000 tiny jobs per full bench run (288
-    # queries × warmup + 2 timed rebuilds). The SCHEMA is metadata, not
-    # data: caching it per path changes no result and every timed run
-    # still computes from the parquet bytes. First touch per process
-    # still infers (and pays the job); everything after reads with the
-    # explicit schema, which skips inference entirely.
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[path] = schema
-    df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(_schema(spark, path)).parquet(path)
     for c in TS_COLUMNS.get(name, ()):
         dt = df.schema[c].dataType
         if isinstance(dt, LongType):

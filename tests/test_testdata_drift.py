@@ -95,3 +95,17 @@ def test_synthetic_nanos_int64_events_still_load(spark, tmp_path):
 def test_all_tables_load_nonempty(spark):
     for name in TABLES:
         assert load_table(spark, SF_SMOKE, name).limit(1).count() == 1, name
+
+
+def test_table_rewritten_in_place_is_reinferred(spark, tmp_path):
+    """A table rewritten at the same path with an extra column must not be
+    read through the schema cached from the old file."""
+    path = os.path.join(str(tmp_path), "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]}), path
+    )
+    rows = load_table(spark, str(tmp_path), "region").orderBy("r_regionkey").collect()
+    assert [r["r_name"] for r in rows] == ["AFRICA", "AMERICA"]
