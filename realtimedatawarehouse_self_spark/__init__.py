@@ -13,7 +13,11 @@ capabilities of the reference real-time data-warehouse project
   processors plus window-function batch twins;
 - watermarked tumbling-window aggregations with window-boundary stamping;
 - multi-way stream joins (inner / left-outer / lookup) re-planned as
-  Catalyst-optimized DataFrame joins with broadcast dimension sides.
+  Catalyst-optimized DataFrame joins with broadcast dimension sides;
+- large-scale training-data pipeline operators: exact/MinHash-LSH/SimHash/
+  n-gram-Jaccard dedup, embedding similarity search (brute-force + bucketed),
+  text quality analysis, language id, document fingerprinting, and
+  multimodal (binary column) plumbing.
 
 Design rules (see SURVEY.md section 7):
 - DataFrame/SQL first; Catalyst plans everything; no hand-scheduling.

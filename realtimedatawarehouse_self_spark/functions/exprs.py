@@ -52,6 +52,37 @@ def sql_cents_amount(expr: str) -> str:
     return f"CAST({expr} AS DOUBLE) / 100.0"
 
 
+INT64_MAX = (1 << 63) - 1
+INT64_MIN = -(1 << 63)
+
+
+def checked_bigint(col, name: str) -> Column:
+    """Cast a wide (DECIMAL/internal) value to BIGINT, RAISING on overflow.
+
+    The engine keeps wide-integer arithmetic internal and emits int64 at the
+    output boundary (the driver's value-hash renders DECIMAL/HUGEINT
+    differently from BIGINT even for equal values — the r5 hash-red class).
+    Non-ANSI Spark would silently NULL an overflowing decimal->bigint cast;
+    this helper turns that into a loud failure so a 100 TB run can never
+    ship a wrapped/NULLed metric. The DuckDB oracle side gets the same
+    guard for free: HUGEINT->BIGINT casts error on overflow.
+    """
+    c = col if isinstance(col, Column) else F.col(col)
+    in_range = (c >= F.lit(INT64_MIN)) & (c <= F.lit(INT64_MAX))
+    return (
+        F.when(in_range, c.cast("bigint"))
+        .otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"int64 overflow at output boundary '{name}': "),
+                    c.cast("string"),
+                )
+            ).cast("bigint")
+        )
+        .alias(name)
+    )
+
+
 def window_bounds(window_col: str = "w") -> list[Column]:
     """Stamp window start/end as `stt`/`edt` strings.
 
@@ -76,6 +107,25 @@ def tokens(text_col: str = "text") -> Column:
     return F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
 
 
+def word_shingles(tokens_col: Column, n: int = 3) -> Column:
+    """n-gram word shingles as an array column (dedup primitives).
+
+    Built with `transform(sequence(...))` so shingling runs inside codegen —
+    no Python involved even at 100 TB.
+    """
+    parts = [
+        "tok_arr[i]" if k == 0 else f"tok_arr[i+{k}]" for k in range(n)
+    ]
+    concat = ", ' ', ".join(parts)
+    expr = (
+        f"CASE WHEN size(tok_arr) < {n} THEN array() "
+        f"ELSE transform(sequence(0, size(tok_arr) - {n}), "
+        f"i -> concat({concat})) END"
+    )
+    # expression refers to tok_arr; caller binds via a named intermediate col
+    return F.expr(expr)
+
+
 def dot_product(a: Column, b: Column) -> Column:
     """Sequential-fold dot product over array<double> columns.
 
@@ -96,6 +146,36 @@ def l2_norm_sq(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot_product(a, b) / (F.sqrt(l2_norm_sq(a)) * F.sqrt(l2_norm_sq(b)))
+
+
+def occurrence_tagged(sorted_col: str) -> str:
+    """SQL expression: SORTED array<string> multiset -> occurrence-tagged
+    string SET (each element suffixed with ' <k>', k = 0-based index of
+    the occurrence within its equal-run).
+
+    Turns multiset intersection into plain set intersection:
+    |A ∩multiset B| = |tag(A) ∩set tag(B)| because min(cA(g), cB(g)) =
+    |{(g,k) : k < cA(g) and k < cB(g)}|. The tag is unambiguous whenever
+    both arrays hold grams of one fixed n (fixed token count or fixed
+    char length): equal tagged strings then decompose into equal
+    (gram, k). Runs inside the JVM (higher-order functions, no Python);
+    per-row cost is O(G) on an already-sorted array. `sorted_col` MUST be
+    array_sort()-ed — the run detection compares adjacent elements.
+    """
+    s = sorted_col
+    starts = (
+        f"filter(sequence(0, size({s}) - 1),"
+        f" i_ -> i_ = 0 OR {s}[i_] != {s}[i_ - 1])"
+    )
+    ends = f"concat(slice({starts}, 2, size({s})), array(size({s})))"
+    # lambda vars carry a trailing underscore so a caller's column name
+    # can never be shadowed by them
+    return (
+        f"CASE WHEN size({s}) = 0 THEN array() ELSE "
+        f"flatten(zip_with({starts}, {ends},"
+        f" (rs_, re_) -> transform(sequence(rs_, re_ - 1),"
+        f" p_ -> concat({s}[rs_], ' ', CAST(p_ - rs_ AS STRING))))) END"
+    )
 
 
 def ordered_pair_structs(arr_col: str, a_alias: str, b_alias: str) -> Column:

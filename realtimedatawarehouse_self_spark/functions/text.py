@@ -82,3 +82,55 @@ def explode_keywords(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("keyword", F.explode(tokenize_udf(F.col(text_col))))
 
 
+# ---------------------------------------------------------------------------
+# Unicode NFC normalization audit (r10 wave 48) — the canonicalization
+# screen every multilingual corpus runs before dedup/tokenization:
+# visually-identical strings with different codepoint sequences (e +
+# COMBINING ACUTE vs precomposed é) hash differently, so exact dedup,
+# shingles, and vocab counts all silently fragment until the corpus is
+# NFC-normalized (Unicode UAX #15; C4/mC4 and CCNet both normalize up
+# front). Catalyst has no normalize() expression, so this is a genuine
+# Python-path operator: one Arrow-batched mapInPandas pass over
+# (doc_id, aug), no shuffle, embarrassingly parallel.
+# ---------------------------------------------------------------------------
+NFC_AUDIT_SCHEMA = (
+    "doc_id long, n_chars_raw long, n_chars_nfc long, nfc_changed long, "
+    "ascii_only long, combining_marks long"
+)
+
+
+def nfc_audit(df: DataFrame, text_col: str = "aug") -> DataFrame:
+    """mapInPandas NFC audit: (doc_id, text) -> per-doc normalization
+    stats. len() counts code points (matches DuckDB length()); the
+    combining-mark count uses unicodedata.combining, which on the
+    injected-suffix corpus equals the oracle's fixed-codepoint regexp
+    count (the ASCII-corpus contract in tests/test_contract.py keeps the
+    base text free of other marks)."""
+    import unicodedata
+
+    from collections.abc import Iterator as _Iter
+
+    def audit(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
+        for pdf in batches:
+            texts = pdf[text_col].astype(str)
+            nfc = texts.map(lambda s: unicodedata.normalize("NFC", s))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "n_chars_raw": texts.str.len().astype("int64"),
+                    "n_chars_nfc": nfc.str.len().astype("int64"),
+                    "nfc_changed": (nfc != texts).astype("int64"),
+                    "ascii_only": texts.map(
+                        lambda s: int(s.isascii())
+                    ).astype("int64"),
+                    "combining_marks": texts.map(
+                        lambda s: sum(
+                            1 for c in s if unicodedata.combining(c)
+                        )
+                    ).astype("int64"),
+                }
+            )
+
+    return df.select("doc_id", text_col).mapInPandas(
+        audit, NFC_AUDIT_SCHEMA
+    )

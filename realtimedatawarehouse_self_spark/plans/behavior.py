@@ -1346,7 +1346,8 @@ GROUP BY 1
 # widths (30 min / FUNNEL_WINDOW_MIN / 24 h) and exact discrete lag
 # percentiles. FUNNEL_WINDOW_MIN = 480 was picked from exactly this
 # table; the doctrine is that tuned constants stay auditable from the
-# data, not folklore.
+# data, not folklore (same spirit as minhash_band_tuning choosing the
+# banding).
 #
 # One combine for first views, one min-reduce over the user-keyed
 # purchase join, discrete percentiles via row_number over the

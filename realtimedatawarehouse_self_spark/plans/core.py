@@ -33,7 +33,6 @@ from realtimedatawarehouse_self_spark.functions.exprs import (
     money_cents,
     window_bounds,
 )
-from realtimedatawarehouse_self_spark.functions.text import tokenize_udf
 from realtimedatawarehouse_self_spark.session import apply_runtime_confs
 from realtimedatawarehouse_self_spark.sources.tables import load_table
 
@@ -559,19 +558,6 @@ GROUP BY 1, 2
 """
 
 
-def keyword_page_view_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U1 via the pluggable pandas-UDF tokenizer (Arrow batches), instead of
-    the JVM split path of `keyword_page_view` — same oracle semantics."""
-    apply_runtime_confs(spark)
-    docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    words = docs.select(
-        "lang", F.explode(tokenize_udf(F.col("text"))).alias("keyword")
-    )
-    return words.groupBy("lang", "keyword").agg(
-        F.count(F.lit(1)).alias("keyword_ct")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Scalar-function surface (F1-F9, P11): one wide projection exercising the
 # reference's entire scalar vocabulary. Reference: DateFormatUtil.java:14-39,
@@ -819,7 +805,6 @@ QUERIES = {
     "dim_config_routing": dim_config_routing,
     "baselog_stream_split": baselog_stream_split,
     "keyword_page_view": keyword_page_view,
-    "keyword_page_view_udf": keyword_page_view_udf,
     "scalar_function_surface": scalar_function_surface,
     "cdc_changelog_snapshot": cdc_changelog_snapshot,
     "retraction_rollup": retraction_rollup,
@@ -837,7 +822,6 @@ ORACLE = {
     "dim_config_routing": _DIM_ROUTING_SQL,
     "baselog_stream_split": _BASELOG_SPLIT_SQL,
     "keyword_page_view": _KEYWORD_SQL,
-    "keyword_page_view_udf": _KEYWORD_SQL,
     "scalar_function_surface": _SCALAR_SQL,
     "cdc_changelog_snapshot": _CDC_SNAPSHOT_SQL,
     "retraction_rollup": _RETRACT_SQL,

@@ -2,7 +2,7 @@
 runs AFTER the pipelines ship — online-experiment scorecards over the same
 event log the DWS layer aggregates (reference's event-log grain:
 `R/app/dws/Dws02_TrafficPageViewWindow.java:55-96`; the arm-hash idiom is
-a deterministic md5 split).
+the same deterministic md5 split `plans/featurize.py` uses for OOF folds).
 
 - `ab_experiment_lift` — per-metric A/B scorecard. Users are split into
   two arms by a deterministic hash (no RNG — re-runs reproduce the split
@@ -31,7 +31,8 @@ Scale notes:
   arm for the diff terms and (n·Q − S²)·n²·n < 10^38 for the variance
   composition; beyond that a production run shards the readout per
   experiment slice (the normal case — a scorecard is per-experiment, not
-  per-warehouse) or accepts float z².
+  per-warehouse) or accepts float z². Same documented-deviation doctrine
+  as `featurize.py`'s cov² site.
 """
 
 from __future__ import annotations
@@ -51,7 +52,8 @@ def _events(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Deterministic arm assignment: 60-bit md5 of the user id, mod 2.
-# One engine-identical split primitive reused everywhere a row needs a
+# The same hash family as featurize.target_encoding_oof's folds — one
+# engine-identical split primitive reused everywhere a row needs a
 # reproducible pseudo-random bucket.
 # ---------------------------------------------------------------------------
 _ARM_SPARK = (
@@ -1205,6 +1207,106 @@ GROUP BY 1, 4, 5
 
 
 # ---------------------------------------------------------------------------
+# Inter-annotator agreement (Cohen's kappa) — the label-quality gate a
+# training pipeline runs over any machine- or dual-labeled slice before
+# trusting the labels: two deterministic annotators (A: length rule,
+# B: lexical-diversity rule) label every document and kappa corrects the
+# raw agreement for chance, per source. One exact rational:
+#   kappa = (N*(n11+n00) - (a1*b1 + a0*b0)) / (N^2 - (a1*b1 + a0*b0))
+# in micro-units, DECIMAL(38,0)/HUGEINT products (N up to ~1e16 per
+# source before width matters). Degenerate chance-agreement pe=1 (all
+# four marginal products concentrated) yields NULL via nullif — the
+# convention for "kappa undefined", identical on both engines.
+# Scale shape: one scan, per-row labeling in codegen, one per-source
+# combine; output |sources| rows.
+# ---------------------------------------------------------------------------
+KAPPA_LEN_THRESH = 200  # annotator A: long-document rule, n_chars >= 200
+# annotator B: lexical diversity, distinct tokens >= 3/10 of tokens
+KAPPA_DIV_NUM, KAPPA_DIV_DEN = 3, 10
+
+
+def annotator_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    apply_runtime_confs(spark)
+    docs = load_table(spark, sf_dir, "documents", fan_out=True).filter(
+        F.col("text").isNotNull()
+    )
+    labeled = docs.select(
+        "source",
+        F.expr(f"CASE WHEN n_chars >= {KAPPA_LEN_THRESH} THEN 1 ELSE 0 END")
+        .cast("bigint")
+        .alias("a"),
+        F.expr(
+            f"CASE WHEN CAST(size(array_distinct(filter(split(text, ' '),"
+            f" x -> x != ''))) AS BIGINT) * {KAPPA_DIV_DEN} >="
+            f" CAST(size(filter(split(text, ' '), x -> x != '')) AS BIGINT)"
+            f" * {KAPPA_DIV_NUM} THEN 1 ELSE 0 END"
+        )
+        .cast("bigint")
+        .alias("b"),
+    )
+    cells = labeled.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.sum(F.expr("a * b")).cast("bigint").alias("n11"),
+        F.sum(F.expr("(1 - a) * (1 - b)")).cast("bigint").alias("n00"),
+        F.sum(F.expr("a * (1 - b)")).cast("bigint").alias("n10"),
+        F.sum(F.expr("(1 - a) * b")).cast("bigint").alias("n01"),
+    )
+    return cells.select(
+        "source",
+        "n_docs",
+        "n11",
+        "n00",
+        "n10",
+        "n01",
+        F.expr(
+            f"CAST((CAST(n_docs AS DECIMAL(38,0)) * (n11 + n00)"
+            f" - (CAST(n11 + n10 AS DECIMAL(38,0)) * (n11 + n01)"
+            f"    + CAST(n00 + n01 AS DECIMAL(38,0)) * (n00 + n10)))"
+            f" * {MICRO} div nullif("
+            f"CAST(n_docs AS DECIMAL(38,0)) * n_docs"
+            f" - (CAST(n11 + n10 AS DECIMAL(38,0)) * (n11 + n01)"
+            f"    + CAST(n00 + n01 AS DECIMAL(38,0)) * (n00 + n10)), 0)"
+            f" AS BIGINT)"
+        ).alias("kappa_micro"),
+    )
+
+
+_KAPPA_SQL = f"""
+WITH labeled AS (
+    SELECT source,
+           CASE WHEN n_chars >= {KAPPA_LEN_THRESH} THEN 1 ELSE 0 END AS a,
+           CASE WHEN CAST(len(list_distinct(list_filter(
+                         string_split(text, ' '), x -> x <> '')))
+                     AS BIGINT) * {KAPPA_DIV_DEN} >=
+                     CAST(len(list_filter(string_split(text, ' '),
+                         x -> x <> '')) AS BIGINT) * {KAPPA_DIV_NUM}
+                THEN 1 ELSE 0 END AS b
+    FROM documents
+    WHERE text IS NOT NULL
+),
+cells AS (
+    SELECT source,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(a * b) AS BIGINT) AS n11,
+           CAST(sum((1 - a) * (1 - b)) AS BIGINT) AS n00,
+           CAST(sum(a * (1 - b)) AS BIGINT) AS n10,
+           CAST(sum((1 - a) * b) AS BIGINT) AS n01
+    FROM labeled GROUP BY 1
+)
+SELECT source, n_docs, n11, n00, n10, n01,
+       CAST((CAST(n_docs AS HUGEINT) * (n11 + n00)
+             - (CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
+                + CAST(n00 + n01 AS HUGEINT) * (n00 + n10)))
+            * {MICRO} // nullif(
+            CAST(n_docs AS HUGEINT) * n_docs
+            - (CAST(n11 + n10 AS HUGEINT) * (n11 + n01)
+               + CAST(n00 + n01 AS HUGEINT) * (n00 + n10)), 0)
+            AS BIGINT) AS kappa_micro
+FROM cells
+"""
+
+
+# ---------------------------------------------------------------------------
 # Binary-classifier AUC — the ROC area computed EXACTLY from the
 # Mann-Whitney rank-sum identity with tie-averaged ranks (Hanley &
 # McNeil '82), no curve sampling, no floats:
@@ -1303,6 +1405,7 @@ QUERIES = {
     "srm_guardrail_audit": srm_guardrail_audit,
     "pass_at_k_estimator": pass_at_k_estimator,
     "conformal_calibration_audit": conformal_calibration_audit,
+    "annotator_agreement_kappa": annotator_agreement_kappa,
 }
 
 ORACLE = {
@@ -1318,4 +1421,5 @@ ORACLE = {
     "srm_guardrail_audit": _SRM_SQL,
     "pass_at_k_estimator": _PASSK_SQL,
     "conformal_calibration_audit": _CONFORMAL_SQL,
+    "annotator_agreement_kappa": _KAPPA_SQL,
 }

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from realtimedatawarehouse_self_spark.functions.exprs import (
     TS_FMT,
     cents_amount,
+    cosine,
     money_cents,
 )
 from realtimedatawarehouse_self_spark.operators.relational import (
@@ -296,6 +297,61 @@ SELECT user_id, session_idx,
 FROM sessions
 GROUP BY 1, 2
 """
+
+
+# ---------------------------------------------------------------------------
+# Embedding-cosine near-dup: pairs above a cosine threshold, candidates
+# blocked on (label, IVF cell) — the operator's original within-label
+# semantics intersected with the coarse-quantizer cell shared with
+# similarity_topk_ivf. Worst-case pair count is sum over (label, cell)
+# buckets of n^2/2 ≈ N^2/(2·K·L) under balanced buckets, and K
+# (llm_ops._ivf_k: max(8, n // 128)) scales with corpus size, making the
+# bound ~N·128/(2·L) — linear in N — vs. the unbounded
+# all-pairs-within-label bucket this replaces. Recall bound, documented:
+# near-dup pairs split across two cells are not compared (mitigable with
+# multi-probe; the LSH dedup is the recall path).
+# ---------------------------------------------------------------------------
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.plans.llm_ops import _cells
+
+    apply_runtime_confs(spark)
+    emb = load_table(spark, sf_dir, "embeddings", fan_out=True).select(
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    cells = _cells(emb)
+    a = cells.alias("a")
+    b = cells.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.label") == F.col("b.label"))
+        & (F.col("a.cell") == F.col("b.cell"))
+        & (F.col("a.vec_id") < F.col("b.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("vec_a"),
+        F.col("b.vec_id").alias("vec_b"),
+        cosine(F.col("a.vec"), F.col("b.vec")).alias("score"),
+    )
+    return pairs.filter(F.col("score") > 0.4)
+
+
+def _emb_dedup_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.llm_ops import IVF_ASSIGN_CTE
+
+    return f"""
+WITH {IVF_ASSIGN_CTE}
+SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       list_dot_product(a.vec, b.vec)
+         / (sqrt(list_dot_product(a.vec, a.vec))
+            * sqrt(list_dot_product(b.vec, b.vec))) AS score
+FROM assigned a JOIN assigned b
+  ON a.label = b.label AND a.cell = b.cell AND a.vec_id < b.vec_id
+WHERE list_dot_product(a.vec, b.vec)
+        / (sqrt(list_dot_product(a.vec, a.vec))
+           * sqrt(list_dot_product(b.vec, b.vec))) > 0.4
+"""
+
+
+_EMB_DEDUP_SQL = _emb_dedup_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -1349,6 +1405,7 @@ QUERIES = {
     "asof_join_purchase_signup": asof_join_purchase_signup,
     "sessionize_events": sessionize_events,
     "session_window_native": session_window_native,
+    "dedup_embedding_cosine": dedup_embedding_cosine,
     "skewed_salted_revenue": skewed_salted_revenue,
     "zorder_layout_audit": zorder_layout_audit,
     "unpivot_revenue_components": unpivot_revenue_components,
@@ -1372,6 +1429,7 @@ ORACLE = {
     "asof_join_purchase_signup": _ASOF_SQL,
     "sessionize_events": _SESSION_SQL,
     "session_window_native": _SESSION_NATIVE_SQL,
+    "dedup_embedding_cosine": _EMB_DEDUP_SQL,
     "zorder_layout_audit": _zorder_audit_sql(),
     "unpivot_revenue_components": _UNPIVOT_SQL,
     "array_function_surface": _ARRAY_SURFACE_SQL,

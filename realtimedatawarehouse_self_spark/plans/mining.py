@@ -1,5 +1,6 @@
 """Scale-pattern mining operators: bounded-memory heavy hitters, audience
-set-overlap and graph analytics over the user co-engagement graph.
+set-overlap, exact distributed Gram/covariance, and corpus-LM bigram
+coverage scoring.
 
 These extend the beyond-reference analytics surface (closest reference
 analogues: the per-key count reduces in ``Dws02...java:81-203`` — which
@@ -18,9 +19,19 @@ always shuffle the FULL key cardinality — and the keyword frequency window
   per-user activity): one distinct, one collect_set per user (bounded by
   the #event_types domain), then a bounded in-row pair explode — shuffle
   carries at most ``n_users * T(T-1)/2`` tiny rows for T event types.
+- The Gram/covariance matrix is one-pass distributed linear algebra in
+  exact integer arithmetic: per-row outer products (upper triangle) explode
+  to ``d(d+1)/2`` cells inside codegen, and map-side combine collapses each
+  partition to ``d(d+1)/2`` partial sums before the single tiny shuffle.
+  Accumulation is DECIMAL(38,0)/HUGEINT — int64 products of micro-unit
+  embeddings wrap once row counts pass ~1e5 at |x| ~ 10 (1e14 per product).
+- Bigram LM coverage is the log-free corpus-LM quality filter: the corpus'
+  frequent-bigram table (pruned by MIN count, vocab-bounded — far smaller
+  than the corpus) broadcasts to a per-document coverage ratio. Documents
+  whose bigrams the corpus LM has "seen" score high; gibberish scores low.
 
-Float-determinism doctrine: no floating point in these operators — every
-ratio is an integer micro-unit division (``x * 1e6 div y``).
+Float-determinism doctrine: no floating point anywhere in these four —
+every ratio is an integer micro-unit division (``x * 1e6 div y``).
 """
 
 from __future__ import annotations
@@ -31,7 +42,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from realtimedatawarehouse_self_spark.functions.exprs import ordered_pair_structs
+from realtimedatawarehouse_self_spark.functions.exprs import (
+    ordered_pair_structs,
+    tokens,
+)
 from realtimedatawarehouse_self_spark.session import apply_runtime_confs
 from realtimedatawarehouse_self_spark.sources.tables import load_table
 
@@ -39,6 +53,11 @@ from realtimedatawarehouse_self_spark.sources.tables import load_table
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply_runtime_confs(spark)
     return load_table(spark, sf_dir, "events")
+
+
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    apply_runtime_confs(spark)
+    return load_table(spark, sf_dir, "documents", fan_out=True)
 
 
 # ---------------------------------------------------------------------------
@@ -188,19 +207,479 @@ JOIN sizes sb ON i.type_b = sb.event_type
 
 
 # ---------------------------------------------------------------------------
+# Exact distributed Gram + covariance numerators over the embedding table.
+#
+# Embeddings quantize to integer micro-units (floor(x * 1e6) — float->double
+# widening is exact and *1e6 is correctly rounded, so both engines quantize
+# identically), and everything downstream is exact wide-integer math:
+#   dot(i,j)     = sum_r q_r[i] * q_r[j]          (upper triangle i <= j)
+#   cov_num(i,j) = n * dot(i,j) - s_i * s_j        (covariance numerator*n^2
+#                                                   in micro^2 units)
+# ---------------------------------------------------------------------------
+EMB_DIM = 64
+Q_SCALE = 1_000_000
+
+
+def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    apply_runtime_confs(spark)
+    emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    q = emb.select(
+        F.expr(
+            f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
+            f" * {Q_SCALE}.0) AS BIGINT))"
+        ).alias("q")
+    )
+    # ONE explode per row carries all three moment families — upper-triangle
+    # products (i,j), per-index sums tagged (i,0), and the row-count tag
+    # (0,0) — so the embeddings table is scanned ONCE and the groupBy's
+    # map-side combine collapses each partition to d(d+1)/2 + d + 1 rows
+    # before the single tiny shuffle.
+    #
+    # r10 optimization (guide §1.2 "per-task work"): the per-cell value is
+    # a BIGINT product, not DECIMAL(38,0) — q[i]*q[j] is at most ~1e12 in
+    # micro^2 units for unit-scale embeddings (|x| <= ~3e3 keeps it inside
+    # int64), so the 2,145-cells-per-row Generate and the hash aggregate
+    # run as codegen long arithmetic instead of interpreted BigDecimal.
+    # Exactness across rows is preserved by a two-level SPLIT SUM: each
+    # cell is summed as (v div 2^20, v mod 2^20) — both identities hold
+    # exactly for negatives under Spark's truncating div/% — and the two
+    # BIGINT partials recombine into DECIMAL(38,0) only at the 2,145-row
+    # moments level. Overflow bound: |v| <= 1.1e12 gives |hi| <= 1.05e6,
+    # |lo| < 2^20, so both partial sums stay in int64 up to ~8.8e12 rows
+    # (~2.2 PB of raw float32 at d=64) — above the 100 TB target; the
+    # DECIMAL recombination itself is unbounded. Same math, same output
+    # strings; only the per-cell representation changed (12.2 s -> see
+    # OPTIMIZATION_r10.md).
+    _SPLIT = 1 << 20
+    cells = q.select(
+        F.explode(
+            F.expr(
+                f"concat("
+                f"flatten(transform(sequence(1, {EMB_DIM}), "
+                f"i -> transform(sequence(i, {EMB_DIM}), "
+                f"j -> struct(i AS i, j AS j, "
+                f"q[i-1] * q[j-1] AS prod)))), "
+                f"transform(sequence(1, {EMB_DIM}), "
+                f"i -> struct(i AS i, 0 AS j, q[i-1] AS prod)), "
+                f"array(struct(0 AS i, 0 AS j, "
+                f"CAST(1 AS BIGINT) AS prod)))"
+            )
+        ).alias("c")
+    ).select("c.i", "c.j", "c.prod")
+    # Tiny aggregate (2,145 rows at d=64): persist so the three consumers
+    # below reuse it instead of re-running the scan + explode.
+    moments = (
+        cells.groupBy("i", "j")
+        .agg(
+            F.sum(F.expr(f"prod div {_SPLIT}")).alias("hi"),
+            F.sum(F.expr(f"prod % {_SPLIT}")).alias("lo"),
+        )
+        .select(
+            "i",
+            "j",
+            (
+                F.col("hi").cast("decimal(38,0)") * F.lit(_SPLIT)
+                + F.col("lo")
+            )
+            .cast("decimal(38,0)")
+            .alias("m"),
+        )
+        .persist()
+    )
+    dots = moments.filter((F.col("i") > 0) & (F.col("j") > 0)).select(
+        "i", "j", F.col("m").alias("dot")
+    )
+    sums = moments.filter((F.col("i") > 0) & (F.col("j") == 0)).select(
+        "i", F.col("m").alias("s")
+    )
+    n = moments.filter((F.col("i") == 0) & (F.col("j") == 0)).select(
+        F.col("m").alias("n_rows")
+    )
+    return (
+        dots.join(F.broadcast(sums.select(F.col("i"), F.col("s").alias("s_i"))), "i")
+        .join(
+            F.broadcast(
+                sums.select(F.col("i").alias("j"), F.col("s").alias("s_j"))
+            ),
+            "j",
+        )
+        .crossJoin(F.broadcast(n))
+        .select(
+            "i",
+            "j",
+            # Output boundary: STRING-encoded wide integers on BOTH sides.
+            # The driver's value-hash renders DECIMAL/HUGEINT differently
+            # from BIGINT (r5 hash-red class), and clamping to int64 is NOT
+            # scale-safe here: cov_num ~ n^2 * 1e12 micro^2 units overflows
+            # int64 at only ~23k embedding rows (measured 6.8e16 at sf0.1's
+            # 2k rows). decimal(38,0) -> string is plain digits (scale-0
+            # BigDecimal never uses exponent notation), identical to
+            # DuckDB's HUGEINT -> VARCHAR.
+            F.col("dot").cast("string").alias("dot"),
+            (F.col("n_rows") * F.col("dot") - F.col("s_i") * F.col("s_j"))
+            .cast("decimal(38,0)")
+            .cast("string")
+            .alias("cov_num"),
+        )
+    )
+
+
+_GRAM_SQL = f"""
+WITH q AS (
+    SELECT list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE) * {Q_SCALE}.0) AS BIGINT))
+           AS q
+    FROM embeddings
+),
+cells AS (
+    SELECT CAST(a.i AS INTEGER) AS i, CAST(b.j AS INTEGER) AS j,
+           CAST(q.q[a.i] AS HUGEINT) * q.q[b.j] AS prod
+    FROM q,
+         UNNEST(range(1, {EMB_DIM} + 1)) AS a(i),
+         UNNEST(range(1, {EMB_DIM} + 1)) AS b(j)
+    WHERE a.i <= b.j
+),
+dots AS (
+    SELECT i, j, CAST(sum(prod) AS HUGEINT) AS dot
+    FROM cells GROUP BY 1, 2
+),
+sums AS (
+    SELECT CAST(a.i AS INTEGER) AS i,
+           CAST(sum(CAST(q.q[a.i] AS HUGEINT)) AS HUGEINT) AS s
+    FROM q, UNNEST(range(1, {EMB_DIM} + 1)) AS a(i)
+    GROUP BY 1
+),
+n AS (SELECT CAST(count(*) AS HUGEINT) AS n_rows FROM q)
+SELECT d.i, d.j,
+       CAST(d.dot AS VARCHAR) AS dot,
+       CAST(n.n_rows * d.dot - si.s * sj.s AS VARCHAR) AS cov_num
+FROM dots d
+JOIN sums si ON d.i = si.i
+JOIN sums sj ON d.j = sj.i
+CROSS JOIN n
+"""
+
+
+# ---------------------------------------------------------------------------
+# Top principal direction of the embedding Gram matrix by power iteration —
+# the building block behind PCA whitening / spectral outlier scoring of an
+# embedding corpus, in EXACT integer arithmetic so the oracle can gate it.
+#
+# Algorithm: w_0 = 1e6·ones(d); repeat POWER_ROUNDS times
+#     u = G·w ;  w = u·1e6 div max|u|      (max-abs normalization — unlike
+# L2 it needs no sqrt, so every iterate stays an exact integer vector; the
+# fixed point is the same dominant eigenvector, scaled so max|w| = 1e6).
+# Convergence is |λ2/λ1|^t like any power method; 3 rounds from the ones
+# vector is the documented default for a top-1 direction sanity profile
+# (the iterate count is a constant in the SQL mirror, so both engines run
+# the identical unrolled computation).
+#
+# Scale shape: the ONLY data-sized work is the Gram build (one scan + one
+# d(d+1)/2-explode combine — the same shape embedding_gram_matrix pins);
+# every iteration is a join of the 4,096-row G against a d-row vector —
+# broadcast, constant cost, INDEPENDENT of corpus size. At 100 TB the
+# iterations are free; the scan dominates, exactly once.
+#
+# Integer headroom: |G| <= n·(1e6·|x|max)² ≈ n·1e11 (|x| < 0.5). Since
+# the r10 BIGINT split-sum Gram build, the BINDING bound is the BIGINT
+# lo-partial sum of the per-row products: n·2^20 < 2^63, i.e.
+# n ≲ 8.8e12 rows (~2.2 PB of raw float32 at d=64 — comfortably past the
+# 100 TB target; the old DECIMAL(38,0) n < 1e19 bound now applies only to
+# the d²-row recombination and the u accumulator: d·|G|·1e6 ≈ n·6.4e18,
+# inside 38 digits for the same n range). `div` truncates toward zero
+# identically in both engines (timeseries.py:320), so negative components
+# round the same.
+# ---------------------------------------------------------------------------
+POWER_ROUNDS = 3
+W_SCALE = 1_000_000
+
+
+def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed Gram build, then single-row HOF iterations.
+
+    The ONLY data-sized stage is the Gram build (one scan + the triangle
+    explode-combine). The d×d matrix (64 KB at d=64) then collapses to ONE
+    row — ordered rows of ordered cells — and the three iterations run as
+    `zip_with`/`aggregate` matvec EXPRESSIONS over that row: constant
+    work, zero join/shuffle stages per iterate beyond the one-row plan
+    barriers noted below. (The first cut iterated with per-round
+    broadcast joins; the 2^rounds duplicated-subtree plan cost ~4.6 s of
+    pure task-scheduling at sf0.1 — the HOF form runs the identical
+    arithmetic in a handful of one-row projections.)
+    """
+    apply_runtime_confs(spark)
+    emb = load_table(spark, sf_dir, "embeddings", fan_out=True)
+    q = emb.select(
+        F.expr(
+            f"transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
+            f" * {Q_SCALE}.0) AS BIGINT))"
+        ).alias("q")
+    )
+    # r10 optimization (guide §1.2 "per-task work", same change as
+    # embedding_gram_matrix): per-cell products are BIGINT (|q[i]*q[j]| <=
+    # ~1.1e12 in micro^2 units), summed exactly via the two-level split sum
+    # (hi = prod div 2^20, lo = prod % 2^20 — both identities exact for
+    # negatives under truncating div/%) and recombined into DECIMAL(38,0)
+    # only at the d(d+1)/2-row Gram level. The Generate + partial aggregate
+    # run as codegen long arithmetic instead of interpreted BigDecimal;
+    # g's value (and everything downstream) is bit-identical.
+    _SPLIT = 1 << 20
+    cells = q.select(
+        F.explode(
+            F.expr(
+                f"flatten(transform(sequence(1, {EMB_DIM}), "
+                f"i -> transform(sequence(i, {EMB_DIM}), "
+                f"j -> struct(CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, "
+                f"q[i-1] * q[j-1] AS prod))))"
+            )
+        ).alias("c")
+    ).select("c.i", "c.j", "c.prod")
+    tri = (
+        cells.groupBy("i", "j")
+        .agg(
+            F.sum(F.expr(f"prod div {_SPLIT}")).alias("hi"),
+            F.sum(F.expr(f"prod % {_SPLIT}")).alias("lo"),
+        )
+        .select(
+            "i",
+            "j",
+            (
+                F.col("hi").cast("decimal(38,0)") * F.lit(_SPLIT)
+                + F.col("lo")
+            )
+            .cast("decimal(38,0)")
+            .alias("g"),
+        )
+    )
+    full = tri.unionAll(
+        tri.filter(F.col("i") < F.col("j")).select(
+            F.col("j").alias("i"), F.col("i").alias("j"), "g"
+        )
+    )
+    # Row-major pack: per-i sorted cell array, then one sorted row-of-rows.
+    rows = full.groupBy("i").agg(
+        F.expr("transform(array_sort(collect_list(struct(j, g))), c -> c.g)").alias(
+            "grow"
+        )
+    )
+    mat = rows.agg(
+        F.expr("transform(array_sort(collect_list(struct(i, grow))), r -> r.grow)").alias(
+            "m"
+        )
+    )
+    dec0 = "CAST(0 AS DECIMAL(38,0))"
+    matvec = (
+        "transform(m, row -> aggregate(zip_with(row, w, (a, b) -> a * b), "
+        f"{dec0}, (acc, x) -> CAST(acc + x AS DECIMAL(38,0))))"
+    )
+    df = mat.withColumn(
+        "w",
+        F.expr(f"array_repeat(CAST({W_SCALE} AS DECIMAL(38,0)), {EMB_DIM})"),
+    )
+    for _ in range(POWER_ROUNDS):
+        # The trailing select+coalesce(1) is a PLAN BARRIER, not a layout
+        # choice (the frame is already one row): each round's w references
+        # u twice (value + mx), so without a barrier CollapseProject
+        # inlines u per reference and the expression tree grows ~2× per
+        # round — at 3 rounds the interpreted HOF evaluator re-derives the
+        # whole chain exponentially (observed: minutes of BigDecimal eval
+        # for one row). The Repartition node pins each round's result to
+        # an attribute, keeping the tree linear in POWER_ROUNDS.
+        df = (
+            df.withColumn("u", F.expr(matvec))
+            .withColumn("mx", F.expr("array_max(transform(u, x -> abs(x)))"))
+            .withColumn(
+                "w",
+                F.expr(
+                    f"transform(u, x -> CAST(x * {W_SCALE}"
+                    f" div nullif(mx, 0) AS DECIMAL(38,0)))"
+                ),
+            )
+            .select("m", "w")
+            .coalesce(1)
+        )
+    # Rayleigh quotient at the final iterate: λ = wᵀGw / wᵀw.
+    df = (
+        df.withColumn("ufin", F.expr(matvec))
+        .withColumn(
+            "num",
+            F.expr(
+                f"aggregate(zip_with(w, ufin, (a, b) -> a * b), {dec0}, "
+                "(acc, x) -> CAST(acc + x AS DECIMAL(38,0)))"
+            ),
+        )
+        .withColumn(
+            "den",
+            F.expr(
+                f"aggregate(zip_with(w, w, (a, b) -> a * b), {dec0}, "
+                "(acc, x) -> CAST(acc + x AS DECIMAL(38,0)))"
+            ),
+        )
+        .withColumn("lambda_q", F.expr("CAST(num div nullif(den, 0) AS BIGINT)"))
+        .select("w", "lambda_q")
+        .coalesce(1)
+    )
+    # posexplode_OUTER on purpose: plain posexplode makes the optimizer
+    # infer a `size(w) > 0` Filter and push it through every barrier with
+    # the full nested-HOF chain substituted into the predicate — the
+    # exponential tree comes back as one interpreted Filter (found via
+    # jstack: GeneratedClass$SpecificPredicate over the whole iterate
+    # chain). w is never null/empty, so OUTER is semantically identical.
+    return df.select(
+        F.posexplode_outer("w").alias("pos", "wv"), "lambda_q"
+    ).select(
+        F.expr("CAST(pos + 1 AS BIGINT)").alias("dim_id"),
+        F.col("wv").cast("bigint").alias("eigvec_scaled"),
+        "lambda_q",
+    )
+
+
+def _power_iter_sql() -> str:
+    rounds = []
+    prev = "w0"
+    for t in range(1, POWER_ROUNDS + 1):
+        rounds.append(
+            f"u{t} AS (SELECT g.i, CAST(sum(g.g * w.w) AS HUGEINT) AS u"
+            f" FROM g JOIN {prev} w ON w.i = g.j GROUP BY 1),\n"
+            f"m{t} AS (SELECT max(abs(u)) AS m FROM u{t}),\n"
+            f"w{t} AS (SELECT i, CAST(u * {W_SCALE}"
+            f" // nullif((SELECT m FROM m{t}), 0) AS HUGEINT) AS w"
+            f" FROM u{t})"
+        )
+        prev = f"w{t}"
+    return f"""
+WITH q AS (
+    SELECT list_transform(embedding,
+               x -> CAST(floor(CAST(x AS DOUBLE) * {Q_SCALE}.0) AS BIGINT))
+           AS q
+    FROM embeddings
+),
+tri AS (
+    SELECT CAST(a.i AS BIGINT) AS i, CAST(b.j AS BIGINT) AS j,
+           CAST(sum(CAST(q.q[a.i] AS HUGEINT) * q.q[b.j]) AS HUGEINT) AS g
+    FROM q,
+         UNNEST(range(1, {EMB_DIM} + 1)) AS a(i),
+         UNNEST(range(1, {EMB_DIM} + 1)) AS b(j)
+    WHERE a.i <= b.j
+    GROUP BY 1, 2
+),
+g AS (
+    SELECT i, j, g FROM tri
+    UNION ALL
+    SELECT j AS i, i AS j, g FROM tri WHERE i < j
+),
+w0 AS (SELECT DISTINCT i, CAST({W_SCALE} AS HUGEINT) AS w FROM g),
+{','.join(rounds)},
+ufin AS (
+    SELECT g.i, CAST(sum(g.g * w.w) AS HUGEINT) AS u
+    FROM g JOIN {prev} w ON w.i = g.j GROUP BY 1
+),
+ray AS (
+    SELECT CAST(sum(w.w * u.u)
+                // nullif(sum(w.w * w.w), 0) AS BIGINT) AS lambda_q
+    FROM {prev} w JOIN ufin u ON u.i = w.i
+)
+SELECT CAST(w.i AS BIGINT) AS dim_id,
+       CAST(w.w AS BIGINT) AS eigvec_scaled,
+       ray.lambda_q
+FROM {prev} w CROSS JOIN ray
+"""
+
+
+# ---------------------------------------------------------------------------
+# Bigram LM coverage: per-document fraction of adjacent bigrams that the
+# corpus has seen >= LM_MIN_CT times.
+# ---------------------------------------------------------------------------
+LM_MIN_CT = 3
+
+
+def lm_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _docs(spark, sf_dir).withColumn("tok_arr", tokens("text"))
+    pairs = docs.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "CASE WHEN size(tok_arr) < 2 THEN array() "
+                "ELSE transform(sequence(0, size(tok_arr) - 2), "
+                "i -> struct(tok_arr[i] AS lhs, tok_arr[i+1] AS rhs)) END"
+            )
+        ).alias("p"),
+    ).select("doc_id", "p.lhs", "p.rhs")
+    # pairs feeds both the LM table and the per-doc scoring join; persist so
+    # the tokenize+explode subtree runs once (same contract note as BM25's
+    # tf persist — the builder returns an unexecuted frame, LRU-evictable).
+    pairs = pairs.persist()
+    # The corpus LM: bigrams seen >= LM_MIN_CT times. Vocab-bounded and
+    # MIN-pruned — orders of magnitude smaller than the corpus, hence
+    # broadcast. (If a corpus' frequent-bigram table outgrew the broadcast
+    # threshold, drop the hint and let AQE pick a shuffle join — the
+    # per-doc aggregation below is unchanged.)
+    lm = (
+        pairs.groupBy("lhs", "rhs")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("ct"))
+        .filter(F.col("ct") >= LM_MIN_CT)
+        .select("lhs", "rhs", F.lit(1).alias("seen"))
+    )
+    scored = pairs.join(F.broadcast(lm), ["lhs", "rhs"], "left").groupBy(
+        "doc_id"
+    ).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
+        F.sum(F.coalesce(F.col("seen"), F.lit(0)).cast("bigint")).alias(
+            "covered"
+        ),
+    )
+    return scored.select(
+        "doc_id",
+        "n_bigrams",
+        "covered",
+        F.expr("covered * 1000000 div n_bigrams").alias("coverage_micro"),
+    )
+
+
+_LM_SQL = f"""
+WITH tok AS (
+    SELECT doc_id,
+           list_filter(string_split(text, ' '), x -> x <> '') AS t
+    FROM documents
+),
+pairs AS (
+    SELECT doc_id, t[i] AS lhs, t[i+1] AS rhs
+    FROM tok, UNNEST(range(1, greatest(len(t), 1))) AS u(i)
+),
+lm AS (
+    SELECT lhs, rhs FROM pairs GROUP BY 1, 2
+    HAVING count(*) >= {LM_MIN_CT}
+),
+scored AS (
+    SELECT p.doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           CAST(sum(CASE WHEN l.lhs IS NULL THEN 0 ELSE 1 END) AS BIGINT)
+               AS covered
+    FROM pairs p
+    LEFT JOIN lm l ON p.lhs = l.lhs AND p.rhs = l.rhs
+    GROUP BY 1
+)
+SELECT doc_id, n_bigrams, covered,
+       covered * 1000000 // n_bigrams AS coverage_micro
+FROM scored
+"""
+
+
+# ---------------------------------------------------------------------------
 # PageRank over the user co-engagement graph — the numeric-iterative
-# distributed algorithm family (complement to label propagation). Fixed
-# iteration count unrolls into ONE declarative DAG: each iteration is a
-# join + combine-backed aggregation over the persisted edge list, so
-# Catalyst/AQE optimize the whole chain and nothing touches the driver
-# between iterations.
+# distributed algorithm family (complement to `dedup_clusters`' label
+# propagation). Fixed iteration count unrolls into ONE declarative DAG:
+# each iteration is a join + combine-backed aggregation over the persisted
+# edge list, so Catalyst/AQE optimize the whole chain and nothing touches
+# the driver between iterations.
 #
 # Graph: users co-active in the same (event_type, hour) bucket, edge
 # weight = number of shared buckets. Buckets larger than BUCKET_CAP users
-# are dropped BEFORE the pair explode (the hub-bucket guard): per-bucket
-# pairs are then ≤ BUCKET_CAP², so edge count is linear in bucket count at
-# any corpus size, and the documented recall cost is only "everyone was
-# there" buckets that carry no affinity signal anyway.
+# are dropped BEFORE the pair explode (the hub-bucket guard — same design
+# as the shingle df-cap in dedup_ngram_jaccard): per-bucket pairs are then
+# ≤ BUCKET_CAP², so edge count is linear in bucket count at any corpus
+# size, and the documented recall cost is only "everyone was there"
+# buckets that carry no affinity signal anyway.
 #
 # Arithmetic is pure int64 — rank mass starts at 1e6 per node and only
 # shrinks (floor divisions), so r*w < n_nodes·1e6·w_max stays far inside
@@ -319,7 +798,8 @@ SELECT user_id, r AS rank_micro FROM r{PR_ITERS}
 # ---------------------------------------------------------------------------
 # Triangle counting / clustering coefficient over the same co-engagement
 # graph as `pagerank_co_engagement` (shared bucket + BUCKET_CAP hub guard).
-# Completes the graph family: rank (pagerank), local density (this).
+# Completes the graph family: components (dedup_clusters), rank
+# (pagerank), local density (this).
 #
 # Scale design — degree-ordered edge orientation (the published O(m^1.5)
 # algorithm: Chiba & Nishizeki 1985; the MapReduce form is Suri & Vassilvitskii
@@ -717,8 +1197,8 @@ walk(user_id, dist) AS (
 SELECT user_id, CAST(min(dist) AS BIGINT) AS dist
 FROM walk GROUP BY 1
 """
-# — completes the graph family: rank (pagerank), local density
-# (triangles), cohesive subgraphs (this).
+# — completes the graph family: components (dedup_clusters), rank
+# (pagerank), local density (triangles), cohesive subgraphs (this).
 #
 # Semantics, stated exactly: `in_core` = the node survives KCORE_ROUNDS
 # synchronized peeling rounds at threshold KCORE_K (each round
@@ -887,6 +1367,111 @@ FROM deg0 d LEFT JOIN s{KCORE_ROUNDS} s ON s.id = d.id
 
 
 # ---------------------------------------------------------------------------
+# Bigram-LM probability quality score — the probability-weighted upgrade of
+# `lm_bigram_coverage` (the CCNet-style "LM quality filter" shape: score
+# documents by how predictable their text is under a corpus-trained LM,
+# keep/bucket by score). Coverage asks "has the corpus SEEN this bigram";
+# this asks "how LIKELY is this bigram given its prefix":
+#
+#   P(rhs | lhs) ~= count(lhs, rhs) / count(lhs, *)   (MLE, no smoothing)
+#   doc score    = mean over the doc's bigram INSTANCES, micro-units.
+#
+# Integer determinism: prob_micro = big_ct * 1e6 div uni_ct (both exact
+# corpus counts), summed per doc as bigints, floored mean. No logs — the
+# textbook perplexity exp(-mean log P) is monotone-decreasing in mean log P
+# while this is mean P; both order "predictable" above "gibberish", but
+# mean-P weights frequent easy bigrams more. Documented engine semantics,
+# bit-identical in the oracle.
+#
+# The LM table is MIN-pruned (>= LM_MIN_CT) so it stays vocab-bounded and
+# broadcastable at corpus scale — same argument as `lm_bigram_coverage`.
+# Pruned bigrams contribute probability 0 (they're exactly the
+# hapax-legomena tail whose MLE estimate is noise anyway). uni_ct is the
+# UNPRUNED prefix total, so surviving probabilities remain true fractions
+# of a proper distribution. Shuffles: the corpus-sized pair frame is
+# aggregated twice from one persisted explode (lm + the per-doc score);
+# everything else is vocab-sized.
+# ---------------------------------------------------------------------------
+def lm_quality_probability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _docs(spark, sf_dir).withColumn("tok_arr", tokens("text"))
+    pairs = docs.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "CASE WHEN size(tok_arr) < 2 THEN array() "
+                "ELSE transform(sequence(0, size(tok_arr) - 2), "
+                "i -> struct(tok_arr[i] AS lhs, tok_arr[i+1] AS rhs)) END"
+            )
+        ).alias("p"),
+    ).select("doc_id", "p.lhs", "p.rhs")
+    pairs = pairs.persist()
+    uni = pairs.groupBy("lhs").agg(
+        F.count(F.lit(1)).cast("bigint").alias("uni_ct")
+    )
+    lm = (
+        pairs.groupBy("lhs", "rhs")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("big_ct"))
+        .filter(F.col("big_ct") >= LM_MIN_CT)
+        .join(uni, "lhs")
+        .select(
+            "lhs",
+            "rhs",
+            F.expr("big_ct * 1000000 div uni_ct").alias("prob_micro"),
+        )
+    )
+    scored = (
+        pairs.join(F.broadcast(lm), ["lhs", "rhs"], "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
+            F.sum(F.coalesce(F.col("prob_micro"), F.lit(0)).cast("bigint"))
+            .alias("sum_prob_micro"),
+        )
+    )
+    return scored.select(
+        "doc_id",
+        "n_bigrams",
+        "sum_prob_micro",
+        F.expr("sum_prob_micro div n_bigrams").alias("mean_prob_micro"),
+    )
+
+
+_LM_PROB_SQL = f"""
+WITH tok AS (
+    SELECT doc_id,
+           list_filter(string_split(text, ' '), x -> x <> '') AS t
+    FROM documents
+),
+pairs AS (
+    SELECT doc_id, t[i] AS lhs, t[i+1] AS rhs
+    FROM tok, UNNEST(range(1, greatest(len(t), 1))) AS u(i)
+),
+uni AS (
+    SELECT lhs, CAST(count(*) AS BIGINT) AS uni_ct FROM pairs GROUP BY 1
+),
+lm AS (
+    SELECT b.lhs, b.rhs, b.big_ct * 1000000 // u.uni_ct AS prob_micro
+    FROM (
+        SELECT lhs, rhs, CAST(count(*) AS BIGINT) AS big_ct
+        FROM pairs GROUP BY 1, 2
+        HAVING count(*) >= {LM_MIN_CT}
+    ) b JOIN uni u ON b.lhs = u.lhs
+),
+scored AS (
+    SELECT p.doc_id,
+           CAST(count(*) AS BIGINT) AS n_bigrams,
+           CAST(sum(coalesce(l.prob_micro, 0)) AS BIGINT) AS sum_prob_micro
+    FROM pairs p
+    LEFT JOIN lm l ON p.lhs = l.lhs AND p.rhs = l.rhs
+    GROUP BY 1
+)
+SELECT doc_id, n_bigrams, sum_prob_micro,
+       sum_prob_micro // n_bigrams AS mean_prob_micro
+FROM scored
+"""
+
+
+# ---------------------------------------------------------------------------
 # Degree distribution of the co-engagement graph — the first thing to look
 # at before trusting ANY of the graph family above: pagerank/k-core/triangle
 # costs are all driven by the degree tail, and the hub cap's effect is
@@ -944,8 +1529,8 @@ FROM deg GROUP BY 1
 # ---------------------------------------------------------------------------
 # Community detection by synchronous label propagation (Raghavan et al.
 # 2007) over the shared minute-grain co-engagement graph — completes the
-# graph family: rank (pagerank), density (triangle), cores (kcore),
-# COMMUNITIES (this).
+# graph family's fourth pillar: components (dedup_clusters), rank
+# (pagerank), density (triangle), cores (kcore), COMMUNITIES (this).
 # LPA's known nondeterminism (random tie-breaks, async order) is removed
 # the repo's standard way: synchronous rounds (every node updates from the
 # PREVIOUS round's labels) and a total tie order (neighbor-label count
@@ -1154,6 +1739,140 @@ FROM sums
 """
 
 
+# ---------------------------------------------------------------------------
+# Wave 36c: RAKE keyphrase extraction (Rose et al. 2010, "Automatic
+# Keyword Extraction from Individual Documents") — the document-LOCAL
+# keyword extractor complementing the corpus-level `tfidf_doc_keywords`:
+# candidate phrases are maximal stopword-free token runs (the classic
+# gaps-and-islands construction: island id = pos - row_number over
+# non-stop positions), each word scores degree/frequency (degree = sum
+# of the lengths of the islands its occurrences sit in), and a phrase
+# scores the sum of its member-word scores. Integer micro arithmetic
+# throughout (word score = degree * 1e6 // freq); identical duplicate
+# phrases within a doc collapse (same members -> same score) before the
+# top-K rank — (score DESC, phrase ASC) total order, WindowGroupLimit.
+# Scale: everything is per-document — one posexplode, two per-doc
+# combines, one per-doc top-K window. No corpus-level state at all, so
+# the operator is embarrassingly parallel at any corpus size.
+# ---------------------------------------------------------------------------
+RAKE_TOP_K = 3
+
+
+def keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.plans.llm_ops import STOPWORDS
+
+    stop_arr = ", ".join(f"'{w}'" for w in STOPWORDS)
+    docs = (
+        _docs(spark, sf_dir)
+        .filter(F.col("text").isNotNull())
+        .withColumn("tok_arr", tokens("text"))
+    )
+    pos = docs.select(
+        "doc_id", F.posexplode("tok_arr").alias("pos", "token")
+    )
+    nonstop = pos.filter(
+        ~F.expr(f"array_contains(array({stop_arr}), token)")
+    )
+    w_isl = Window.partitionBy("doc_id").orderBy("pos")
+    islands = nonstop.withColumn(
+        "isl", F.col("pos") - F.row_number().over(w_isl)
+    ).persist()
+    phr = islands.groupBy("doc_id", "isl").agg(
+        F.array_join(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("pos", "token"))),
+                lambda t: t["token"],
+            ),
+            " ",
+        ).alias("phrase"),
+        F.count(F.lit(1)).cast("bigint").alias("L"),
+    )
+    wstat = (
+        islands.join(phr.select("doc_id", "isl", "L"), ["doc_id", "isl"])
+        .groupBy("doc_id", "token")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("freq"),
+            F.sum("L").cast("bigint").alias("deg"),
+        )
+        .withColumn("wscore", F.expr("deg * 1000000 div freq"))
+    )
+    pscore = (
+        islands.join(
+            wstat.select("doc_id", "token", "wscore"), ["doc_id", "token"]
+        )
+        .groupBy("doc_id", "isl")
+        .agg(F.sum("wscore").cast("bigint").alias("score_micro"))
+        .join(phr, ["doc_id", "isl"])
+        .select("doc_id", "phrase", "L", "score_micro")
+        .distinct()
+    )
+    w_rank = Window.partitionBy("doc_id").orderBy(
+        F.col("score_micro").desc(), "phrase"
+    )
+    return (
+        pscore.withColumn("rnk", F.row_number().over(w_rank).cast("int"))
+        .filter(F.col("rnk") <= RAKE_TOP_K)
+        .select(
+            "doc_id",
+            "phrase",
+            F.col("L").alias("n_words"),
+            "score_micro",
+            "rnk",
+        )
+    )
+
+
+def _rake_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.llm_ops import STOPWORDS
+
+    stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
+    return f"""
+WITH tok AS (
+    SELECT doc_id,
+           list_filter(string_split(text, ' '), x -> x <> '') AS t
+    FROM documents WHERE text IS NOT NULL
+),
+pos AS (
+    SELECT doc_id, i AS pos, t[i] AS token
+    FROM tok, UNNEST(range(1, len(t) + 1)) AS u(i)
+),
+islands AS (
+    SELECT doc_id, pos, token,
+           pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+               AS isl
+    FROM pos WHERE token NOT IN ({stop_list})
+),
+phr AS (
+    SELECT doc_id, isl,
+           string_agg(token, ' ' ORDER BY pos) AS phrase,
+           CAST(count(*) AS BIGINT) AS L
+    FROM islands GROUP BY 1, 2
+),
+wstat AS (
+    SELECT i.doc_id, i.token,
+           CAST(count(*) AS BIGINT) AS freq,
+           CAST(sum(p.L) AS BIGINT) AS deg
+    FROM islands i JOIN phr p ON i.doc_id = p.doc_id AND i.isl = p.isl
+    GROUP BY 1, 2
+),
+pscore AS (
+    SELECT DISTINCT i.doc_id, p.phrase, p.L,
+           CAST(sum(w.deg * 1000000 // w.freq) AS BIGINT) AS score_micro
+    FROM islands i
+    JOIN wstat w ON i.doc_id = w.doc_id AND i.token = w.token
+    JOIN phr p ON i.doc_id = p.doc_id AND i.isl = p.isl
+    GROUP BY i.doc_id, i.isl, p.phrase, p.L
+)
+SELECT doc_id, phrase, L AS n_words, score_micro,
+       CAST(rnk AS INTEGER) AS rnk
+FROM (
+    SELECT *, row_number() OVER (PARTITION BY doc_id
+                                 ORDER BY score_micro DESC, phrase) AS rnk
+    FROM pscore
+) WHERE rnk <= {RAKE_TOP_K}
+"""
+
+
 QUERIES = {
     "degree_assortativity": degree_assortativity,
     "community_label_propagation": community_label_propagation,
@@ -1165,6 +1884,11 @@ QUERIES = {
     "reachable_users_bfs": reachable_users_bfs,
     "kcore_peeling_rounds": kcore_peeling_rounds,
     "audience_overlap_jaccard": audience_overlap_jaccard,
+    "embedding_gram_matrix": embedding_gram_matrix,
+    "embedding_power_iteration": embedding_power_iteration,
+    "lm_bigram_coverage": lm_bigram_coverage,
+    "lm_quality_probability": lm_quality_probability,
+    "keyphrase_rake": keyphrase_rake,
 }
 
 ORACLE = {
@@ -1178,4 +1902,9 @@ ORACLE = {
     "reachable_users_bfs": _BFS_SQL,
     "kcore_peeling_rounds": _kcore_sql(),
     "audience_overlap_jaccard": _OVERLAP_SQL,
+    "embedding_gram_matrix": _GRAM_SQL,
+    "embedding_power_iteration": _power_iter_sql(),
+    "lm_bigram_coverage": _LM_SQL,
+    "lm_quality_probability": _LM_PROB_SQL,
+    "keyphrase_rake": _rake_sql(),
 }

@@ -1,9 +1,9 @@
-"""Temporal-state operators: snapshot changelog diff and sketch-vs-exact
-quantiles.
+"""Temporal-state and incremental-ingest operators: snapshot changelog
+diff, ingest-time near-dup screening, and sketch-vs-exact quantiles.
 
 Reference lineage: the CDC changelog family (``sources/envelopes.py``,
 reference ``CDC/FlinkCDC_MysqlSource.java:47-60`` + Maxwell envelopes) —
-these give the BATCH counterparts a warehouse needs around that
+these three give the BATCH counterparts a warehouse needs around that
 stream:
 
 - `snapshot_diff_user_state` derives the I/U/D changelog BETWEEN two
@@ -14,6 +14,14 @@ stream:
   (latest event changed). ONE scan — both snapshot states come out of a
   single conditional aggregation keyed by user (no per-snapshot scan, no
   self-join); the window predicate is pushed into the parquet scan.
+- `dedup_incoming_batch` is the INGEST-TIME variant of the LSH near-dup
+  pipeline (`llm_ops.dedup_lsh_verified`): an incoming batch is screened
+  against the existing corpus, never against itself — the band join is
+  incoming×corpus, so candidate count is linear in the BATCH size however
+  large the corpus grows (the corpus side still prunes to matching band
+  signatures). Verification (exact Jaccard via array_intersect) runs only
+  on candidates; REJECTED candidates stay in the output with
+  ``is_dup=false`` so the screening decision itself is oracle-checked.
 - `value_quantile_sketch` computes per-type p50/p90/p99 twice — a
   fixed-width histogram sketch (ONE combine-backed aggregation to ~1000
   bins per type, the 100 TB path) and the exact order statistic (global
@@ -27,8 +35,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from realtimedatawarehouse_self_spark.functions.exprs import money_cents
+from realtimedatawarehouse_self_spark.plans.llm_ops import (
+    _SHINGLE_CTE,
+    _doc_shingles,
+    _minhash_aggs,
+    _minhash_tail_cte,
+    _shingle_hash,
+)
 from realtimedatawarehouse_self_spark.session import apply_runtime_confs
 from realtimedatawarehouse_self_spark.sources.tables import load_table
 
@@ -127,6 +143,118 @@ SELECT coalesce(a.user_id, b.user_id) AS user_id,
        b.cents AS new_cents
 FROM a FULL OUTER JOIN b ON a.user_id = b.user_id
 WHERE a.user_id IS NULL OR b.user_id IS NULL OR a.event_id <> b.event_id
+"""
+
+
+# ---------------------------------------------------------------------------
+# Ingest-time near-dup screening: incoming batch vs existing corpus.
+# ---------------------------------------------------------------------------
+# Deterministic stand-in for "the newly arrived batch": every 5th doc_id.
+INCOMING_MOD = 5
+
+
+def dedup_incoming_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    sh = _doc_shingles(spark, sf_dir)
+    per_doc = (
+        sh.select("doc_id", "lang", "sh", _shingle_hash())
+        .groupBy("doc_id")
+        .agg(
+            F.first("lang").alias("lang"),
+            F.count(F.lit(1)).alias("n_sh"),
+            F.collect_list("sh").alias("sh_arr"),
+            *_minhash_aggs(),
+        )
+        .withColumn("is_new", F.col("doc_id") % INCOMING_MOD == 0)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    from realtimedatawarehouse_self_spark.plans.llm_ops import (
+        signature_bands,
+    )
+
+    bands = signature_bands(per_doc, extra_cols=("is_new",))
+    # Incoming x corpus only — the batch never self-joins, so candidates
+    # are linear in batch size regardless of corpus growth.
+    cand = (
+        bands.filter("is_new")
+        .alias("a")
+        .join(
+            bands.filter("NOT is_new").alias("b"),
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.sig") == F.col("b.sig")),
+        )
+        .select(
+            F.col("a.doc_id").alias("new_doc"),
+            F.col("b.doc_id").alias("corpus_doc"),
+        )
+        .distinct()
+    )
+    a = per_doc.select(
+        F.col("doc_id").alias("new_doc"),
+        F.col("lang").alias("lang_a"),
+        F.col("n_sh").alias("n_a"),
+        F.col("sh_arr").alias("arr_a"),
+    )
+    b = per_doc.select(
+        F.col("doc_id").alias("corpus_doc"),
+        F.col("lang").alias("lang_b"),
+        F.col("n_sh").alias("n_b"),
+        F.col("sh_arr").alias("arr_b"),
+    )
+    return (
+        cand.join(a, "new_doc")
+        .join(b, "corpus_doc")
+        .filter(F.col("lang_a") == F.col("lang_b"))
+        .withColumn(
+            "inter_ct",
+            F.size(F.array_intersect("arr_a", "arr_b")).cast("bigint"),
+        )
+        .withColumn(
+            "union_ct", F.col("n_a") + F.col("n_b") - F.col("inter_ct")
+        )
+        .select(
+            "new_doc",
+            "corpus_doc",
+            "inter_ct",
+            "union_ct",
+            (2 * F.col("inter_ct") >= F.col("union_ct")).alias("is_dup"),
+        )
+    )
+
+
+def _incoming_sql() -> str:
+    return f"""
+WITH {_SHINGLE_CTE},
+{_minhash_tail_cte()},
+inc_cand AS (
+    SELECT DISTINCT a.doc_id AS new_doc, b.doc_id AS corpus_doc
+    FROM bands a JOIN bands b
+      ON a.band_id = b.band_id AND a.sig = b.sig
+    WHERE a.doc_id % {INCOMING_MOD} = 0
+      AND b.doc_id % {INCOMING_MOD} <> 0
+),
+doc_stats AS (
+    SELECT doc_id, any_value(lang) AS lang,
+           CAST(count(*) AS BIGINT) AS n_sh
+    FROM sh GROUP BY 1
+),
+inter AS (
+    SELECT c.new_doc, c.corpus_doc, CAST(count(*) AS BIGINT) AS inter_ct
+    FROM inc_cand c
+    JOIN sh a ON a.doc_id = c.new_doc
+    JOIN sh b ON b.doc_id = c.corpus_doc AND b.sh = a.sh
+    GROUP BY 1, 2
+)
+SELECT c.new_doc, c.corpus_doc,
+       coalesce(i.inter_ct, 0) AS inter_ct,
+       sa.n_sh + sb.n_sh - coalesce(i.inter_ct, 0) AS union_ct,
+       2 * coalesce(i.inter_ct, 0)
+           >= sa.n_sh + sb.n_sh - coalesce(i.inter_ct, 0) AS is_dup
+FROM inc_cand c
+JOIN doc_stats sa ON sa.doc_id = c.new_doc
+JOIN doc_stats sb ON sb.doc_id = c.corpus_doc
+LEFT JOIN inter i
+  ON i.new_doc = c.new_doc AND i.corpus_doc = c.corpus_doc
+WHERE sa.lang = sb.lang
 """
 
 
@@ -799,6 +927,7 @@ QUERIES = {
     "running_balance_floor": running_balance_floor,
     "attribution_last_touch": attribution_last_touch,
     "attribution_linear_apportion": attribution_linear_apportion,
+    "dedup_incoming_batch": dedup_incoming_batch,
     "value_quantile_sketch": value_quantile_sketch,
     "quantile_rolling_merge": quantile_rolling_merge,
 }
@@ -809,6 +938,7 @@ ORACLE = {
     "running_balance_floor": _BALANCE_SQL,
     "attribution_last_touch": _ATTR_SQL,
     "attribution_linear_apportion": _APPORTION_SQL,
+    "dedup_incoming_batch": _incoming_sql(),
     "value_quantile_sketch": _QUANTILE_SQL,
     "quantile_rolling_merge": _QRM_SQL,
 }

@@ -964,6 +964,178 @@ WHERE c.event_ct * {HH_TYPE_DEN} >= t.n_type
 
 
 # ---------------------------------------------------------------------------
+# Ingest-time near-dup screening as a REAL stream — the streaming twin of
+# `state_ops.dedup_incoming_batch` (same oracle SQL): raw incoming
+# documents arrive in micro-batches; each foreachBatch shingles + minhashes
+# ONLY its batch, probes the pre-built static corpus band index
+# (stream-static join — the production pattern for screening an ingest
+# stream against a large indexed corpus), exact-verifies candidates via
+# shingle intersection, and appends the screening decisions to the sink.
+#
+# Scale notes: per-batch work is linear in BATCH size (the batch bands
+# probe the corpus index; the corpus never self-joins), and corpus-side
+# state is the band index — exactly what a 100 TB ingest pipeline keeps
+# hot. Each incoming doc arrives in exactly one micro-batch, so the
+# union of per-batch outputs is the batch answer with no cross-batch
+# reconciliation needed.
+# ---------------------------------------------------------------------------
+DEDUP_STREAM_GROUPS = 3
+
+
+def streaming_dedup_incoming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.functions.exprs import (
+        tokens,
+        word_shingles,
+    )
+    from realtimedatawarehouse_self_spark.plans.llm_ops import (
+        _minhash_aggs,
+        _shingle_hash,
+        signature_bands,
+    )
+    from realtimedatawarehouse_self_spark.plans.state_ops import INCOMING_MOD
+
+    corpus = None
+    corpus_bands = None
+    with _twin_confs(spark):
+        try:
+            stage = _MicroBatchStage("rtdw-sdedup-")
+            docs = load_table(spark, sf_dir, "documents").select(
+                "doc_id", "text", "lang"
+            )
+
+            def per_doc_stats(d: DataFrame) -> DataFrame:
+                sh = (
+                    d.withColumn("tok_arr", tokens("text"))
+                    .select(
+                        "doc_id",
+                        "lang",
+                        F.explode(word_shingles(F.col("tok_arr"))).alias("sh"),
+                    )
+                    .distinct()
+                )
+                return (
+                    sh.select("doc_id", "lang", "sh", _shingle_hash())
+                    .groupBy("doc_id")
+                    .agg(
+                        F.first("lang").alias("lang"),
+                        F.count(F.lit(1)).alias("n_sh"),
+                        F.collect_list("sh").alias("sh_arr"),
+                        *_minhash_aggs(),
+                    )
+                )
+
+            # The static side, built once and kept hot across micro-batches:
+            # the band index (probe target) and the shingle arrays (verify).
+            corpus = per_doc_stats(
+                docs.filter(F.col("doc_id") % INCOMING_MOD != 0)
+            ).persist()
+            corpus_bands = signature_bands(corpus).persist()
+            corpus_bands.count()  # materialize before the stream starts
+            corpus_side = corpus.select(
+                F.col("doc_id").alias("corpus_doc"),
+                F.col("lang").alias("lang_b"),
+                F.col("n_sh").alias("n_b"),
+                F.col("sh_arr").alias("arr_b"),
+            )
+
+            # Incoming raw docs land as one file per micro-batch, mtime-ordered
+            # (maxFilesPerTrigger=1 under availableNow — the day-file feeder
+            # idiom shared by the rollup/ewma twins).
+            inc = docs.filter(F.col("doc_id") % INCOMING_MOD == 0)
+            for i in range(DEDUP_STREAM_GROUPS):
+                stage.stage_slice(
+                    inc.filter(
+                        (F.col("doc_id") / INCOMING_MOD) % DEDUP_STREAM_GROUPS
+                        == i
+                    )
+                )
+
+            def process(batch_df: DataFrame, batch_id: int) -> None:
+                b = per_doc_stats(batch_df)
+                bb = signature_bands(b)
+                cand = (
+                    bb.alias("a")
+                    .join(
+                        corpus_bands.alias("b"),
+                        (F.col("a.band_id") == F.col("b.band_id"))
+                        & (F.col("a.sig") == F.col("b.sig")),
+                    )
+                    .select(
+                        F.col("a.doc_id").alias("new_doc"),
+                        F.col("b.doc_id").alias("corpus_doc"),
+                    )
+                    .distinct()
+                )
+                res = (
+                    cand.join(
+                        b.select(
+                            F.col("doc_id").alias("new_doc"),
+                            F.col("lang").alias("lang_a"),
+                            F.col("n_sh").alias("n_a"),
+                            F.col("sh_arr").alias("arr_a"),
+                        ),
+                        "new_doc",
+                    )
+                    .join(corpus_side, "corpus_doc")
+                    .filter(F.col("lang_a") == F.col("lang_b"))
+                    .withColumn(
+                        "inter_ct",
+                        F.size(F.array_intersect("arr_a", "arr_b")).cast("bigint"),
+                    )
+                    .withColumn(
+                        "union_ct", F.col("n_a") + F.col("n_b") - F.col("inter_ct")
+                    )
+                    .select(
+                        "new_doc",
+                        "corpus_doc",
+                        "inter_ct",
+                        F.col("union_ct").cast("bigint").alias("union_ct"),
+                        (2 * F.col("inter_ct") >= F.col("union_ct")).alias(
+                            "is_dup"
+                        ),
+                    )
+                )
+                res.write.mode("append").parquet(stage.out)
+
+            q = (
+                stage.read_stream(
+                    spark, "doc_id bigint, text string, lang string"
+                )
+                .writeStream.foreachBatch(process)
+                .option("checkpointLocation", stage.cp)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_or_raise(q)
+            if not os.path.isdir(stage.out) or not any(
+                f.endswith(".parquet") for f in os.listdir(stage.out)
+            ):
+                return spark.createDataFrame(
+                    [],
+                    "new_doc bigint, corpus_doc bigint, inter_ct bigint, "
+                    "union_ct bigint, is_dup boolean",
+                )
+            return spark.read.parquet(stage.out).select(
+                "new_doc", "corpus_doc", "inter_ct", "union_ct", "is_dup"
+            )
+        finally:
+            if corpus_bands is not None:
+                corpus_bands.unpersist()
+            if corpus is not None:
+                corpus.unpersist()
+
+
+def _incoming_stream_sql() -> str:
+    """Same truth as the batch screen: the stream partitions the incoming
+    set across micro-batches without changing any pair decision."""
+    from realtimedatawarehouse_self_spark.plans.state_ops import (
+        _incoming_sql,
+    )
+
+    return _incoming_sql()
+
+
+# ---------------------------------------------------------------------------
 # Streaming 3-way CHAINED stream-stream join — the funnel executed as one
 # streaming topology: signup -> view (within the horizon) -> purchase
 # (within the horizon of the view), all three legs watermarked, each join
@@ -2170,7 +2342,761 @@ WHERE cum_events > 0
 """
 
 
+# ---------------------------------------------------------------------------
+# Streaming per-domain admission cap — the ingest-time twin of
+# plans/corpus_ops.py::domain_frequency_cap (wave 28): documents arrive
+# host-keyed in ascending doc_id micro-batches (a real ingest stream keys
+# arrival by log offset); keyed state carries ONE bigint per host (the
+# admitted count) and each batch admits only up to the remaining room, so
+# the cap is exact across batches. The oracle is the batch statement
+# "first DOMAIN_CAP docs per host by doc_id" — the twin must reproduce it
+# through real multi-micro-batch execution with carried state.
+# ---------------------------------------------------------------------------
+DOMCAP_BATCHES = 3
+
+
+def streaming_domain_cap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        DOMAIN_CAP,
+        _HOST_EXPR,
+    )
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        admit_first_k,
+    )
+
+    with _twin_confs(spark):
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("text").isNotNull())
+            .withColumn("host", F.expr(_HOST_EXPR))
+            .select("host", F.col("doc_id").cast("long").alias("doc_id"))
+        )
+        lo_hi = docs.agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).collect()[0]
+        if lo_hi["lo"] is None:
+            return spark.createDataFrame(
+                [], "host string, doc_id long, admit_seq long"
+            )
+        stage = _MicroBatchStage("rtdw-domcap-")
+        lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+        # ascending doc_id ranges → batch i holds strictly smaller ids
+        # than batch i+1 (the feeder's half of the arrival contract)
+        step = (hi - lo) // DOMCAP_BATCHES + 1
+        for b in range(DOMCAP_BATCHES):
+            part = docs.filter(
+                (F.col("doc_id") >= lo + b * step)
+                & (F.col("doc_id") < lo + (b + 1) * step)
+            )
+            stage.stage_slice(part)
+        schema = "host string, doc_id long"
+        return stage.run_to_parquet(
+            spark,
+            admit_first_k(
+                stage.read_stream(spark, schema), cap=DOMAIN_CAP
+            ),
+        )
+
+
+def _domcap_stream_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        DOMAIN_CAP,
+        _HOST_EXPR,
+    )
+
+    return f"""
+WITH d AS (
+  SELECT doc_id, {_HOST_EXPR} AS host
+  FROM documents WHERE text IS NOT NULL
+),
+r AS (
+  SELECT host, doc_id,
+         CAST(row_number() OVER (PARTITION BY host ORDER BY doc_id)
+              AS BIGINT) AS admit_seq
+  FROM d
+)
+SELECT host, doc_id, admit_seq FROM r WHERE admit_seq <= {DOMAIN_CAP}
+"""
+
+
+# ---------------------------------------------------------------------------
+# Streaming discounted episode returns — the RL-log fold as a real keyed-
+# custom-state job: the gamma=1/2 per-term shift decay of
+# `curation.episode_discounted_returns` executed across hour-banded
+# micro-batches, with (step index, running total, running return)
+# carrying in the state store. Episodes deliberately SPAN batches (three
+# 8-hour bands per day), so the driver row proves the fold's state carry
+# and the within/across-batch ordering contract — not just the
+# arithmetic. Emission is cumulative per batch; the final row per
+# episode (max n_steps, strictly increasing) must equal the batch
+# operator bit-for-bit, so the oracle is _EPISODE_SQL verbatim.
+# ---------------------------------------------------------------------------
+EPISODE_HOUR_BAND = 8
+
+
+def streaming_episode_return_twin(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        episode_returns,
+    )
+
+    events = None
+    with _twin_confs(spark):
+        try:
+            stage = _MicroBatchStage("rtdw-episode-")
+            events = (
+                load_table(spark, sf_dir, "events")
+                .filter(
+                    F.col("user_id").isNotNull() & F.col("ts").isNotNull()
+                )
+                .select(
+                    "user_id",
+                    F.date_format("ts", "yyyy-MM-dd").alias("day"),
+                    F.expr(
+                        "CAST(unix_micros(ts) AS BIGINT)"
+                    ).alias("ts_micro"),
+                    F.coalesce("event_id", F.lit(-1))
+                    .cast("bigint")
+                    .alias("ord_eid"),
+                    F.expr(
+                        "CAST(floor(coalesce(value, 0.0) * 100 + 0.5)"
+                        " AS BIGINT)"
+                    ).alias("r"),
+                    F.hour("ts").alias("hr"),
+                )
+                .persist()
+            )
+            if events.limit(1).count() == 0:
+                return spark.createDataFrame(
+                    [],
+                    "user_id bigint, day string, n_steps bigint, "
+                    "total_reward_cents bigint, "
+                    "discounted_return_cents bigint",
+                )
+            # three hour bands, staged in order: every key's later-hour
+            # rows land in strictly later micro-batches
+            for lo in range(0, 24, EPISODE_HOUR_BAND):
+                stage.stage_slice(
+                    events.filter(
+                        (F.col("hr") >= lo)
+                        & (F.col("hr") < lo + EPISODE_HOUR_BAND)
+                    ).drop("hr")
+                )
+            sunk = stage.run_to_parquet(
+                spark,
+                episode_returns(
+                    stage.read_stream(
+                        spark, events.drop("hr").schema
+                    )
+                ),
+            )
+            return (
+                sunk.groupBy("user_id", "day")
+                .agg(
+                    F.max_by(
+                        F.struct(
+                            "n_steps",
+                            "total_reward_cents",
+                            "discounted_return_cents",
+                        ),
+                        "n_steps",
+                    ).alias("fin")
+                )
+                .select(
+                    "user_id",
+                    "day",
+                    F.col("fin.n_steps").alias("n_steps"),
+                    F.col("fin.total_reward_cents").alias(
+                        "total_reward_cents"
+                    ),
+                    F.col("fin.discounted_return_cents").alias(
+                        "discounted_return_cents"
+                    ),
+                )
+            )
+        finally:
+            if events is not None:
+                events.unpersist()
+
+
+def _episode_stream_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.curation import _EPISODE_SQL
+
+    return _EPISODE_SQL
+
+
+# ---------------------------------------------------------------------------
+# Streaming CDC-chunk owner election — the 24th twin (r10): the
+# ingest-time half of `retrieval.cdc_chunk_dedup`. Documents arrive in
+# ascending-doc_id micro-batches (the domain-cap feeder contract, keyed
+# by log offset in production); each document's content-defined chunks
+# fan out batch-side (the shared `_cdc_chunk_frame` arithmetic), and the
+# keyed state elects each chunk hash's owner (first doc seen == batch
+# min under the arrival contract) while counting distinct docs and
+# occurrences in O(1) state per hash — run-length on the nondecreasing
+# doc stream, never a doc set. The oracle recomputes owners/counts from
+# the batch chunk CTEs, so the driver row proves state carry ACROSS
+# batches (hashes recur in later batches by construction: duplicated
+# content spans the doc_id range).
+# ---------------------------------------------------------------------------
+CHUNK_OWNER_BATCHES = 4
+
+
+def streaming_chunk_owner_twin(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from realtimedatawarehouse_self_spark.plans.retrieval import (
+        _cdc_chunk_frame,
+    )
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        chunk_owner_election,
+    )
+
+    chunks = None
+    with _twin_confs(spark):
+        try:
+            chunks = (
+                _cdc_chunk_frame(spark, sf_dir)
+                .select("chunk_md5", F.col("doc_id").cast("long"))
+                .persist()
+            )
+            lo_hi = chunks.agg(
+                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+            ).collect()[0]
+            if lo_hi["lo"] is None:
+                return spark.createDataFrame(
+                    [],
+                    "chunk_md5 string, owner_doc long, n_docs long, "
+                    "n_occurrences long",
+                )
+            stage = _MicroBatchStage("rtdw-chunkown-")
+            lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+            step = (hi - lo) // CHUNK_OWNER_BATCHES + 1
+            for b in range(CHUNK_OWNER_BATCHES):
+                stage.stage_slice(
+                    chunks.filter(
+                        (F.col("doc_id") >= lo + b * step)
+                        & (F.col("doc_id") < lo + (b + 1) * step)
+                    )
+                )
+            sunk = stage.run_to_parquet(
+                spark,
+                chunk_owner_election(
+                    stage.read_stream(
+                        spark, "chunk_md5 string, doc_id long"
+                    )
+                ),
+            )
+            # cumulative emissions: final row per hash = max occurrences;
+            # report duplicated chunks only (n_docs >= 2), matching the
+            # batch op's dup semantics
+            fin = (
+                sunk.groupBy("chunk_md5")
+                .agg(
+                    F.max_by(
+                        F.struct("owner_doc", "n_docs", "n_occurrences"),
+                        "n_occurrences",
+                    ).alias("fin")
+                )
+                .select(
+                    "chunk_md5",
+                    F.col("fin.owner_doc").alias("owner_doc"),
+                    F.col("fin.n_docs").alias("n_docs"),
+                    F.col("fin.n_occurrences").alias("n_occurrences"),
+                )
+            )
+            return fin.filter(F.col("n_docs") >= 2)
+        finally:
+            if chunks is not None:
+                chunks.unpersist()
+
+
+def _chunk_owner_stream_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.retrieval import (
+        _CDC_CHUNK_CTES,
+    )
+
+    return f"""
+WITH {_CDC_CHUNK_CTES}
+SELECT chunk_md5,
+       CAST(min(doc_id) AS BIGINT) AS owner_doc,
+       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       CAST(count(*) AS BIGINT) AS n_occurrences
+FROM chunks
+GROUP BY 1
+HAVING count(DISTINCT doc_id) >= 2
+"""
+
+
+# ---------------------------------------------------------------------------
+# Streaming vocabulary-growth twin — the 25th twin (r10): the Heaps-law
+# curve of `corpus_ops.vocab_growth_curve` computed as a real keyed-
+# custom-state job. Documents arrive in ascending doc_id-band
+# micro-batches (one batch per curve checkpoint — TEN batches, the
+# longest state carry in the twin suite); each token's state is ONE int
+# (the band it was first seen in, set once, never updated), so the
+# state store holds |vocab| ints at any corpus size. The per-band doc
+# and token masses are batch-side arithmetic over the same banded frame
+# (harness staging, the twins' standard split); the streamed half is
+# exactly the part that NEEDS cross-batch memory — type novelty. The
+# oracle is _VOCAB_GROWTH_SQL verbatim, so the driver row proves the
+# multi-batch election equals the batch curve bit-for-bit.
+# ---------------------------------------------------------------------------
+def streaming_vocab_growth_twin(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from realtimedatawarehouse_self_spark.functions.exprs import tokens
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        VOCAB_BANDS,
+    )
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        vocab_first_seen,
+    )
+
+    banded = None
+    with _twin_confs(spark):
+        try:
+            docs = (
+                load_table(spark, sf_dir, "documents")
+                .where(
+                    F.col("text").isNotNull() & F.col("doc_id").isNotNull()
+                )
+                .withColumn("tok_arr", tokens("text"))
+                .filter(F.size("tok_arr") >= 1)
+                .select("doc_id", "tok_arr")
+            )
+            lo_hi = docs.agg(
+                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+            ).collect()[0]
+            if lo_hi["lo"] is None:
+                return spark.createDataFrame(
+                    [],
+                    "band int, n_docs bigint, band_tokens bigint, "
+                    "cum_tokens bigint, new_types bigint, cum_vocab bigint, "
+                    "type_token_micro bigint",
+                )
+            lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+            banded = docs.withColumn(
+                "band",
+                F.expr(
+                    f"CAST((doc_id - {lo}) * {VOCAB_BANDS}"
+                    f" div ({hi} - {lo} + 1) AS INT)"
+                ),
+            ).persist()
+            stage = _MicroBatchStage("rtdw-vocabgr-")
+            stream_rows = banded.select(
+                "band", F.explode("tok_arr").alias("tok")
+            ).distinct()
+            for b in range(VOCAB_BANDS):
+                stage.stage_slice(
+                    stream_rows.filter(F.col("band") == b).select(
+                        "tok", "band"
+                    )
+                )
+            sunk = stage.run_to_parquet(
+                spark,
+                vocab_first_seen(
+                    stage.read_stream(spark, "tok string, band int")
+                ),
+            )
+            # cumulative emissions re-state a constant row once set
+            new_types = (
+                sunk.select("tok", "first_band")
+                .distinct()
+                .groupBy(F.col("first_band").alias("band"))
+                .agg(F.count(F.lit(1)).cast("bigint").alias("new_types"))
+            )
+            band_docs = banded.groupBy("band").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+                F.sum(F.size("tok_arr")).cast("bigint").alias("band_tokens"),
+            )
+            curve = band_docs.join(new_types, "band", "left").withColumn(
+                "new_types", F.coalesce("new_types", F.lit(0)).cast("bigint")
+            )
+            from pyspark.sql import Window as _W
+
+            wcum = (
+                _W.partitionBy()
+                .orderBy("band")
+                .rowsBetween(_W.unboundedPreceding, _W.currentRow)
+            )
+            return (
+                curve.withColumn(
+                    "cum_tokens",
+                    F.sum("band_tokens").over(wcum).cast("bigint"),
+                )
+                .withColumn(
+                    "cum_vocab", F.sum("new_types").over(wcum).cast("bigint")
+                )
+                .select(
+                    "band",
+                    "n_docs",
+                    "band_tokens",
+                    "cum_tokens",
+                    "new_types",
+                    "cum_vocab",
+                    F.expr("cum_vocab * 1000000 div cum_tokens").alias(
+                        "type_token_micro"
+                    ),
+                )
+            )
+        finally:
+            if banded is not None:
+                banded.unpersist()
+
+
+def _vocab_growth_stream_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        _VOCAB_GROWTH_SQL,
+    )
+
+    return _VOCAB_GROWTH_SQL
+
+
+# ---------------------------------------------------------------------------
+# Streaming crawl-frontier twin — the 26th twin (r10): the politeness
+# scheduler of `corpus_ops.crawl_frontier_plan` as a real keyed-custom-
+# state job. URLs arrive priority-first (batches hold ascending per-host
+# rank slices — the production frontier drains its priority queue in
+# this order); each host's state carries ONE long (URLs already
+# scheduled) and every arrival takes epoch = count div HOST_FETCH_RATE —
+# so the assignment must equal the batch rank formula EXACTLY, proving
+# the counter's carry across batches. The oracle is _FRONTIER_SQL
+# verbatim.
+# ---------------------------------------------------------------------------
+FRONTIER_TWIN_BATCHES = 4
+
+
+def streaming_frontier_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        HOST_FETCH_RATE,
+        _HOST_EXPR,
+    )
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        frontier_epoch_assign,
+    )
+    from pyspark.sql import Window as _W
+
+    ranked = None
+    with _twin_confs(spark):
+        try:
+            docs = (
+                load_table(spark, sf_dir, "documents")
+                .where(F.col("text").isNotNull())
+                .withColumn("host", F.expr(_HOST_EXPR))
+                .select("doc_id", "host", "n_chars")
+            )
+            wr = _W.partitionBy("host").orderBy(
+                F.col("n_chars").desc(), "doc_id"
+            )
+            ranked = docs.withColumn(
+                "rank", F.row_number().over(wr).cast("int")
+            ).persist()
+            mx = ranked.agg(F.max("rank").alias("m")).collect()[0]["m"]
+            if mx is None:
+                return spark.createDataFrame(
+                    [],
+                    "host string, fetch_epoch int, n_urls bigint, "
+                    "epoch_chars bigint, first_doc_id bigint, "
+                    "host_epochs bigint",
+                )
+            stage = _MicroBatchStage("rtdw-frontier-")
+            step = (int(mx) - 1) // FRONTIER_TWIN_BATCHES + 1
+            for b in range(FRONTIER_TWIN_BATCHES):
+                stage.stage_slice(
+                    ranked.filter(
+                        (F.col("rank") > b * step)
+                        & (F.col("rank") <= (b + 1) * step)
+                    ).select("host", "doc_id", "n_chars", "rank")
+                )
+            sunk = stage.run_to_parquet(
+                spark,
+                frontier_epoch_assign(
+                    stage.read_stream(
+                        spark,
+                        "host string, doc_id long, n_chars long, rank int",
+                    ),
+                    HOST_FETCH_RATE,
+                ),
+            )
+            per_cell = sunk.groupBy("host", "fetch_epoch").agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_urls"),
+                F.sum("n_chars").cast("bigint").alias("epoch_chars"),
+                F.min("doc_id").cast("bigint").alias("first_doc_id"),
+            )
+            wh = _W.partitionBy("host")
+            return per_cell.withColumn(
+                "host_epochs",
+                F.expr(
+                    f"CAST((sum(n_urls) OVER (PARTITION BY host) - 1)"
+                    f" div {HOST_FETCH_RATE} + 1 AS BIGINT)"
+                ),
+            ).select(
+                "host",
+                "fetch_epoch",
+                "n_urls",
+                "epoch_chars",
+                "first_doc_id",
+                "host_epochs",
+            )
+        finally:
+            if ranked is not None:
+                ranked.unpersist()
+
+
+def _frontier_stream_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        _FRONTIER_SQL,
+    )
+
+    return _FRONTIER_SQL
+
+
+# ---------------------------------------------------------------------------
+# Streaming SFT-gate twin — the 27th twin (r10 wave 48): the conversation
+# structure gate of `sft_ops.sft_turn_structure_audit` as a real keyed-
+# custom-state job. Turns arrive in hour-banded micro-batches (three
+# 8-hour bands, so conversations deliberately SPAN batches); each
+# conversation's state carries six small ints (counters + first/last
+# role codes), and cross-batch alternation violations are exact because
+# the state keeps the previous batch's last role. Emission is cumulative
+# per batch; the final row per key (max n_turns, strictly increasing)
+# must equal the batch operator bit-for-bit, so the oracle is
+# _TURN_STRUCTURE_SQL verbatim.
+# ---------------------------------------------------------------------------
+SFT_HOUR_BAND = 8
+
+
+def streaming_sft_gate_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.plans.sft_ops import (
+        _USER_TYPES,
+        MIN_TURNS,
+    )
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        sft_gate_fold,
+    )
+
+    turns = None
+    with _twin_confs(spark):
+        try:
+            stage = _MicroBatchStage("rtdw-sftgate-")
+            turns = (
+                load_table(spark, sf_dir, "events")
+                .filter(
+                    F.col("ts").isNotNull()
+                    & F.col("user_id").isNotNull()
+                    & F.col("event_type").isNotNull()
+                )
+                .select(
+                    "user_id",
+                    F.date_format("ts", "yyyy-MM-dd").alias("day"),
+                    F.expr("CAST(unix_micros(ts) AS BIGINT)").alias(
+                        "ts_micro"
+                    ),
+                    F.coalesce("event_id", F.lit(-1))
+                    .cast("bigint")
+                    .alias("ord_eid"),
+                    F.when(
+                        F.col("event_type").isin(*_USER_TYPES), "user"
+                    )
+                    .otherwise("assistant")
+                    .alias("role"),
+                    F.hour("ts").alias("hr"),
+                )
+                .persist()
+            )
+            if turns.limit(1).count() == 0:
+                return spark.createDataFrame(
+                    [],
+                    "user_id bigint, day string, n_turns bigint, "
+                    "n_user_turns bigint, n_assistant_turns bigint, "
+                    "alternation_violations bigint, starts_user bigint, "
+                    "ends_assistant bigint, decision string",
+                )
+            for lo in range(0, 24, SFT_HOUR_BAND):
+                stage.stage_slice(
+                    turns.filter(
+                        (F.col("hr") >= lo)
+                        & (F.col("hr") < lo + SFT_HOUR_BAND)
+                    ).drop("hr")
+                )
+            sunk = stage.run_to_parquet(
+                spark,
+                sft_gate_fold(
+                    stage.read_stream(spark, turns.drop("hr").schema),
+                    MIN_TURNS,
+                ),
+            )
+            fin_cols = [
+                "n_turns",
+                "n_user_turns",
+                "n_assistant_turns",
+                "alternation_violations",
+                "starts_user",
+                "ends_assistant",
+                "decision",
+            ]
+            return (
+                sunk.groupBy("user_id", "day")
+                .agg(
+                    F.max_by(F.struct(*fin_cols), "n_turns").alias("fin")
+                )
+                .select(
+                    "user_id",
+                    "day",
+                    *[F.col(f"fin.{c}").alias(c) for c in fin_cols],
+                )
+            )
+        finally:
+            if turns is not None:
+                turns.unpersist()
+
+
+def _sft_gate_stream_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.sft_ops import (
+        _TURN_STRUCTURE_SQL,
+    )
+
+    return _TURN_STRUCTURE_SQL
+
+
+# ---------------------------------------------------------------------------
+# Streaming watermark-detection twin — the 28th twin (r10, wave 52): the
+# per-source POOLED Kirchenbauer greenlist statistic as a real keyed-
+# custom-state job. Documents arrive in ascending doc_id-band
+# micro-batches; each source's state carries THREE longs (docs, scored
+# transitions, green transitions), every batch emits the cumulative row,
+# and the final emission's z = (4g - T)/sqrt(3T) must equal the one-shot
+# batch GROUP BY bit-for-bit — the detection statistic is mergeable, so
+# a stream of arriving model output can be screened incrementally. The
+# per-doc counters are the SHARED WM_GREEN_EXPR / _wm_doc_stats pieces
+# of `corpus_ops.synthetic_watermark_detect` (harness staging computes
+# them batch-side; the streamed half is exactly the part that needs
+# cross-batch memory — the pooled counters). NULL-source docs are out of
+# scope on both engines (a keyed counter needs a key).
+# ---------------------------------------------------------------------------
+WM_TWIN_BATCHES = 4
+
+
+def streaming_watermark_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from realtimedatawarehouse_self_spark.functions.exprs import tokens
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        WM_Z_EXPR,
+        WM_Z_KEEP_MICRO,
+        _wm_doc_stats,
+    )
+    from realtimedatawarehouse_self_spark.streaming.stateful import (
+        watermark_pooled_counters,
+    )
+
+    stats = None
+    with _twin_confs(spark):
+        try:
+            docs = (
+                load_table(spark, sf_dir, "documents")
+                .filter(
+                    F.col("text").isNotNull()
+                    & F.col("source").isNotNull()
+                    & F.col("doc_id").isNotNull()
+                )
+                .withColumn("tok_arr", tokens("text"))
+            )
+            stats = _wm_doc_stats(docs, "source", "doc_id").persist()
+            lo_hi = stats.agg(
+                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+            ).collect()[0]
+            if lo_hi["lo"] is None:
+                return spark.createDataFrame(
+                    [],
+                    "source string, n_docs bigint, scored bigint, "
+                    "green bigint, z_micro bigint, verdict string",
+                )
+            lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+            stage = _MicroBatchStage("rtdw-wmtwin-")
+            banded = stats.withColumn(
+                "band",
+                F.expr(
+                    f"CAST((doc_id - {lo}) * {WM_TWIN_BATCHES}"
+                    f" div ({hi} - {lo} + 1) AS INT)"
+                ),
+            )
+            for b in range(WM_TWIN_BATCHES):
+                stage.stage_slice(
+                    banded.filter(F.col("band") == b).select(
+                        "source", "scored", "green"
+                    )
+                )
+            sunk = stage.run_to_parquet(
+                spark,
+                watermark_pooled_counters(
+                    stage.read_stream(
+                        spark,
+                        "source string, scored bigint, green bigint",
+                    )
+                ),
+            )
+            fin = (
+                sunk.groupBy("source")
+                .agg(
+                    F.max_by(
+                        F.struct("n_docs", "scored", "green"), "n_docs"
+                    ).alias("fin")
+                )
+                .select(
+                    "source",
+                    F.col("fin.n_docs").alias("n_docs"),
+                    F.col("fin.scored").alias("scored"),
+                    F.col("fin.green").alias("green"),
+                )
+            )
+            return fin.withColumn(
+                "z_micro", F.expr(WM_Z_EXPR)
+            ).withColumn(
+                "verdict",
+                F.when(
+                    F.col("z_micro") >= WM_Z_KEEP_MICRO, "watermarked"
+                ).otherwise("clean"),
+            )
+        finally:
+            if stats is not None:
+                stats.unpersist()
+
+
+def _watermark_twin_sql() -> str:
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        WM_Z_KEEP_MICRO,
+        _WM_DOC_CTES,
+        _WM_Z_SQL,
+    )
+
+    return f"""
+WITH {_WM_DOC_CTES},
+p AS (
+  SELECT source,
+         CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(sum(scored) AS BIGINT) AS scored,
+         CAST(sum(green) AS BIGINT) AS green
+  FROM g WHERE source IS NOT NULL GROUP BY 1
+),
+z AS (
+  SELECT source, n_docs, scored, green, {_WM_Z_SQL} AS z_micro FROM p
+)
+SELECT source, n_docs, scored, green, z_micro,
+       CASE WHEN z_micro >= {WM_Z_KEEP_MICRO} THEN 'watermarked'
+            ELSE 'clean' END AS verdict
+FROM z
+"""
+
+
 QUERIES = {
+    "streaming_watermark_twin": streaming_watermark_twin,
+    "streaming_sft_gate_twin": streaming_sft_gate_twin,
+    "streaming_episode_return_twin": streaming_episode_return_twin,
+    "streaming_chunk_owner_twin": streaming_chunk_owner_twin,
+    "streaming_vocab_growth_twin": streaming_vocab_growth_twin,
+    "streaming_frontier_twin": streaming_frontier_twin,
+    "streaming_domain_cap_twin": streaming_domain_cap_twin,
     "streaming_cdc_apply_twin": streaming_cdc_apply_twin,
     "streaming_hll_merge_twin": streaming_hll_merge_twin,
     "streaming_ivm_join_twin": streaming_ivm_join_twin,
@@ -2186,6 +3112,7 @@ QUERIES = {
     "streaming_ewma_daily": streaming_ewma_daily,
     "streaming_cusum_daily": streaming_cusum_daily,
     "streaming_reconcile_full_outer": streaming_reconcile_full_outer,
+    "streaming_dedup_incoming": streaming_dedup_incoming,
     "streaming_kmv_daily": streaming_kmv_daily,
     "streaming_funnel_3way": streaming_funnel_3way,
     "streaming_late_drop_twin": streaming_late_drop_twin,
@@ -2194,6 +3121,13 @@ QUERIES = {
 }
 
 ORACLE = {
+    "streaming_watermark_twin": _watermark_twin_sql(),
+    "streaming_sft_gate_twin": _sft_gate_stream_sql(),
+    "streaming_episode_return_twin": _episode_stream_sql(),
+    "streaming_chunk_owner_twin": _chunk_owner_stream_sql(),
+    "streaming_vocab_growth_twin": _vocab_growth_stream_sql(),
+    "streaming_frontier_twin": _frontier_stream_sql(),
+    "streaming_domain_cap_twin": _domcap_stream_sql(),
     "streaming_cdc_apply_twin": _CDC_APPLY_SQL,
     "streaming_hll_merge_twin": _hll_stream_sql(),
     "streaming_ivm_join_twin": _IVM_STREAM_SQL,
@@ -2209,6 +3143,7 @@ ORACLE = {
     "streaming_ewma_daily": _ewma_stream_sql(),
     "streaming_cusum_daily": _cusum_stream_sql(),
     "streaming_reconcile_full_outer": _FULL_OUTER_STREAM_SQL,
+    "streaming_dedup_incoming": _incoming_stream_sql(),
     "streaming_kmv_daily": _kmv_stream_sql(),
     "streaming_funnel_3way": _FUNNEL_3WAY_SQL,
     "streaming_late_drop_twin": _LATE_TWIN_SQL,

@@ -588,3 +588,430 @@ def hll_register_merge(
     )
 
 
+# ---------------------------------------------------------------------------
+# Per-key streaming admission cap — the ingest-time half of the C4/
+# RefinedWeb per-domain frequency cap (plans/corpus_ops.py::
+# domain_frequency_cap is the batch side): as documents arrive, each host
+# may admit at most `cap` of them; everything after is dropped AT INGEST,
+# before any downstream (dedup/quality) work is spent on it. State per
+# host is ONE bigint (the admitted count) — fixed-width, mergeable-free
+# keyed state, the cheapest state class Structured Streaming has; at
+# 100 TB the state size is the number of distinct hosts, not documents.
+# ---------------------------------------------------------------------------
+def admit_first_k(
+    docs: DataFrame,
+    key: str = "host",
+    order_col: str = "doc_id",
+    cap: int = 20,
+) -> DataFrame:
+    """Admit the first `cap` rows per key, in `order_col` order within
+    each micro-batch; the carried count makes admission exact across
+    batches. Emits admitted rows stamped with their 1-based `admit_seq`.
+    The arrival-order contract (batch i holds smaller `order_col` values
+    than batch i+1) is the feeder's job — a real ingest stream keys this
+    by log offset.
+    """
+    from pyspark.sql.types import LongType
+
+    schema = StructType(
+        [
+            StructField(key, StringType()),
+            StructField(order_col, LongType()),
+            StructField("admit_seq", LongType()),
+        ]
+    )
+    state_schema = StructType([StructField("admitted", LongType())])
+
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        n = state.get[0] if state.exists else 0
+        pdf = _sorted_concat(pdfs, [order_col])
+        room = max(0, cap - n)
+        take = pdf.iloc[:room]
+        take = take.assign(
+            admit_seq=pd.RangeIndex(n + 1, n + 1 + len(take)).astype("int64")
+        )
+        state.update((n + len(take),))
+        yield take[[key, order_col, "admit_seq"]]
+
+    return docs.groupBy(key).applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def episode_returns(events: DataFrame) -> DataFrame:
+    """Per-(user, day) discounted-return fold — the keyed-state streaming
+    twin of ``plans/curation.episode_discounted_returns`` (gamma = 1/2,
+    per-term arithmetic right shift; identical integer arithmetic, so the
+    final per-episode rows are bit-equal to the batch operator).
+
+    Input rows carry (user_id, day, ts_micro, ord_eid, r) — one row per
+    event, reward already in cents, ord_eid = coalesce(event_id, -1).
+    Each micro-batch's rows are sorted by the batch operator's total
+    order (ts, ord_eid, r); the fold state (next step index t, running
+    total, running discounted return) carries across micro-batches as
+    three bigints. Every emission is the key's cumulative row; n_steps
+    strictly increases per emission, so the final row per key is the one
+    with max n_steps.
+
+    Contract: slices must arrive in non-decreasing (per-key) ts order
+    across micro-batches — the twin harness stages hour-banded slices
+    with increasing mtimes, so every key's later-hour rows land in later
+    batches. State is O(1) per open episode at any scale; a production
+    job would add an event-time timeout to retire closed days.
+    """
+    from pyspark.sql.types import LongType
+
+    schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("day", StringType()),
+            StructField("n_steps", LongType()),
+            StructField("total_reward_cents", LongType()),
+            StructField("discounted_return_cents", LongType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("t", LongType()),
+            StructField("total", LongType()),
+            StructField("g", LongType()),
+        ]
+    )
+
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        t, total, g = state.get if state.exists else (0, 0, 0)
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        pdf = pdf.sort_values(["ts_micro", "ord_eid", "r"])
+        for r in pdf["r"]:
+            r = int(r)
+            total += r
+            if t < 40:
+                g += r >> t
+            t += 1
+        state.update((t, total, g))
+        yield pd.DataFrame(
+            [(key_tuple[0], key_tuple[1], t, total, g)],
+            columns=[
+                "user_id",
+                "day",
+                "n_steps",
+                "total_reward_cents",
+                "discounted_return_cents",
+            ],
+        )
+
+    return events.groupBy("user_id", "day").applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def chunk_owner_election(chunks: DataFrame) -> DataFrame:
+    """Per-chunk-hash owner election — the ingest-time half of
+    ``plans/retrieval.cdc_chunk_dedup``: as CDC chunk occurrences stream
+    in, each hash's state carries (owner = first doc seen, last doc,
+    distinct-doc count, occurrence count). Under the twins' arrival
+    contract (batches hold ascending doc_id ranges; rows sorted by doc_id
+    within each batch), first-seen == min(doc_id), and the distinct-doc
+    count is exact via run-length on the nondecreasing doc stream — so
+    state stays FOUR bigint-ish fields per hash at any corpus size, never
+    a doc set. Emission is cumulative: each batch a hash appears in emits
+    its current row; n_occurrences strictly increases, so the final row
+    per hash is the max-n_occurrences one (the twin filters post-sink).
+
+    Input rows: (chunk_md5 string, doc_id long), one per occurrence.
+    """
+    from pyspark.sql.types import LongType
+
+    schema = StructType(
+        [
+            StructField("chunk_md5", StringType()),
+            StructField("owner_doc", LongType()),
+            StructField("n_docs", LongType()),
+            StructField("n_occurrences", LongType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("owner", LongType()),
+            StructField("last_doc", LongType()),
+            StructField("n_docs", LongType()),
+            StructField("n_occ", LongType()),
+        ]
+    )
+
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        owner, last_doc, n_docs, n_occ = (
+            state.get if state.exists else (None, None, 0, 0)
+        )
+        pdf = _sorted_concat(pdfs, ["doc_id"])
+        for d in pdf["doc_id"]:
+            d = int(d)
+            if owner is None:
+                owner = d
+            if last_doc is None or d != last_doc:
+                n_docs += 1
+                last_doc = d
+            n_occ += 1
+        state.update((owner, last_doc, n_docs, n_occ))
+        yield pd.DataFrame(
+            {
+                "chunk_md5": [key_tuple[0]],
+                "owner_doc": pd.array([owner], dtype="int64"),
+                "n_docs": pd.array([n_docs], dtype="int64"),
+                "n_occurrences": pd.array([n_occ], dtype="int64"),
+            }
+        )
+
+    return chunks.groupBy("chunk_md5").applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def vocab_first_seen(toks: DataFrame) -> DataFrame:
+    """Per-token first-appearance election — the ingest-time half of
+    ``plans/corpus_ops.vocab_growth_curve``: as (token, band) rows stream
+    in band order, each token's state carries only the band it was first
+    seen in (ONE long per type at any corpus size — the canonical
+    incremental corpus statistic). Under the twins' arrival contract
+    (batches hold ascending band slices), first-seen == min(band), so the
+    state never updates after it is set. Emission is cumulative: each
+    batch a token appears in re-emits its (token, first_band) row; the
+    twin de-duplicates post-sink (the row is constant once set).
+
+    Input rows: (tok string, band int), distinct per batch.
+    """
+    from pyspark.sql.types import IntegerType
+
+    schema = StructType(
+        [
+            StructField("tok", StringType()),
+            StructField("first_band", IntegerType()),
+        ]
+    )
+    state_schema = StructType([StructField("first_band", IntegerType())])
+
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            (first_band,) = state.get
+        else:
+            first_band = None
+        pdf = _sorted_concat(pdfs, ["band"])
+        if len(pdf) and first_band is None:
+            first_band = int(pdf["band"].iloc[0])
+            state.update((first_band,))
+        yield pd.DataFrame(
+            {
+                "tok": [key_tuple[0]],
+                "first_band": pd.array([first_band], dtype="int32"),
+            }
+        )
+
+    return toks.groupBy("tok").applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def frontier_epoch_assign(urls: DataFrame, rate: int) -> DataFrame:
+    """Per-host politeness-epoch assignment — the ingest-time half of
+    ``plans/corpus_ops.crawl_frontier_plan``: as a host's URLs stream in
+    priority order, the keyed state carries only how many the host has
+    already scheduled (ONE long per host at any frontier size); each
+    arrival takes epoch = count div rate. Under the twins' arrival
+    contract (batches hold ascending per-host rank slices; rows sorted
+    by rank within each batch), the assignment equals the batch rank
+    formula exactly. Emission is append-per-row: every URL emits once,
+    in its arrival batch, with its assigned epoch.
+
+    Input rows: (host string, doc_id long, n_chars long, rank int).
+    """
+    from pyspark.sql.types import IntegerType, LongType
+
+    schema = StructType(
+        [
+            StructField("host", StringType()),
+            StructField("doc_id", LongType()),
+            StructField("n_chars", LongType()),
+            StructField("fetch_epoch", IntegerType()),
+        ]
+    )
+    state_schema = StructType([StructField("n_seen", LongType())])
+
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        (n_seen,) = state.get if state.exists else (0,)
+        pdf = _sorted_concat(pdfs, ["rank"])
+        epochs = []
+        for _ in range(len(pdf)):
+            epochs.append(int(n_seen) // rate)
+            n_seen += 1
+        state.update((n_seen,))
+        yield pd.DataFrame(
+            {
+                "host": [key_tuple[0]] * len(pdf),
+                # nullable Int64: the NULL fixture carries NULL doc_id /
+                # n_chars rows, which schedule like any URL (the batch
+                # rank does not skip them) but must stay NULL in output
+                "doc_id": pd.array(pdf["doc_id"], dtype="Int64"),
+                "n_chars": pd.array(pdf["n_chars"], dtype="Int64"),
+                "fetch_epoch": pd.array(epochs, dtype="int32"),
+            }
+        )
+
+    return urls.groupBy("host").applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def sft_gate_fold(turns: DataFrame, min_turns: int) -> DataFrame:
+    """Per-(user, day) conversation-structure fold — the keyed-state
+    streaming twin of ``plans/sft_ops.sft_turn_structure_audit``: as
+    turns stream in, each conversation's state carries SIX small ints
+    (n_turns, n_user, n_assistant, violations, first-role code,
+    last-role code; role codes 1=user 2=assistant, 0=unset) and every
+    batch emits the key's cumulative structure row with the gate
+    decision recomputed from the cumulative counters.
+
+    Input rows carry (user_id, day, ts_micro, ord_eid, role) with
+    ord_eid = coalesce(event_id, -1) — the batch operator's
+    (ts, event_id) total order (Spark windows sort NULL event_id first;
+    -1 sorts below every real id). Cross-batch alternation is exact
+    because the state keeps the previous batch's LAST role: a violation
+    spanning a batch boundary counts exactly once.
+
+    Contract: slices arrive in non-decreasing per-key ts order across
+    micro-batches (the hour-banded feeder). n_turns strictly increases
+    per emission, so the final row per key is the one with max n_turns.
+    State is O(1) per open conversation; production adds an event-time
+    timeout to retire closed days. ``min_turns`` is the batch operator's
+    gate constant, passed in by the caller.
+    """
+    from pyspark.sql.types import LongType
+
+    schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("day", StringType()),
+            StructField("n_turns", LongType()),
+            StructField("n_user_turns", LongType()),
+            StructField("n_assistant_turns", LongType()),
+            StructField("alternation_violations", LongType()),
+            StructField("starts_user", LongType()),
+            StructField("ends_assistant", LongType()),
+            StructField("decision", StringType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("n", LongType()),
+            StructField("nu", LongType()),
+            StructField("na", LongType()),
+            StructField("viol", LongType()),
+            StructField("first_r", LongType()),
+            StructField("last_r", LongType()),
+        ]
+    )
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        n, nu, na, viol, first_r, last_r = (
+            state.get if state.exists else (0, 0, 0, 0, 0, 0)
+        )
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        pdf = pdf.sort_values(["ts_micro", "ord_eid"])
+        for role in pdf["role"]:
+            code = 1 if role == "user" else 2
+            if last_r != 0 and code == last_r:
+                viol += 1
+            if n == 0:
+                first_r = code
+            n += 1
+            nu += code == 1
+            na += code == 2
+            last_r = code
+        state.update((n, nu, na, viol, first_r, last_r))
+        keep = (
+            first_r == 1
+            and last_r == 2
+            and viol == 0
+            and n >= min_turns
+        )
+        yield pd.DataFrame(
+            [
+                (
+                    key_tuple[0],
+                    key_tuple[1],
+                    n,
+                    nu,
+                    na,
+                    viol,
+                    1 if first_r == 1 else 0,
+                    1 if last_r == 2 else 0,
+                    "keep" if keep else "drop",
+                )
+            ],
+            columns=[
+                "user_id",
+                "day",
+                "n_turns",
+                "n_user_turns",
+                "n_assistant_turns",
+                "alternation_violations",
+                "starts_user",
+                "ends_assistant",
+                "decision",
+            ],
+        )
+
+    return turns.groupBy("user_id", "day").applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def watermark_pooled_counters(docs: DataFrame) -> DataFrame:
+    """Per-source pooled greenlist counters — the keyed-state streaming
+    twin of ``plans/corpus_ops.synthetic_watermark_detect``'s rollup: as
+    each source's documents stream in, the state carries THREE longs
+    (docs, scored transitions, green transitions — O(1) per source at
+    any corpus size) and every batch emits the source's cumulative row.
+    The final emission must equal the one-shot batch GROUP BY exactly —
+    the mergeability of the pooled z statistic is the point (Kirchenbauer
+    detection over a stream of arriving model output).
+
+    Input rows: (source string, scored long, green long) — one per doc.
+    """
+    from pyspark.sql.types import LongType
+
+    schema = StructType(
+        [
+            StructField("source", StringType()),
+            StructField("n_docs", LongType()),
+            StructField("scored", LongType()),
+            StructField("green", LongType()),
+        ]
+    )
+    state_schema = StructType(
+        [
+            StructField("n_docs", LongType()),
+            StructField("scored", LongType()),
+            StructField("green", LongType()),
+        ]
+    )
+
+    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
+        n_docs, scored, green = (
+            state.get if state.exists else (0, 0, 0)
+        )
+        for pdf in pdfs:
+            n_docs += len(pdf)
+            scored += int(pdf["scored"].sum())
+            green += int(pdf["green"].sum())
+        state.update((n_docs, scored, green))
+        yield pd.DataFrame(
+            {
+                "source": [key_tuple[0]],
+                "n_docs": [n_docs],
+                "scored": [scored],
+                "green": [green],
+            }
+        )
+
+    return docs.groupBy("source").applyInPandasWithState(
+        fn, schema, state_schema, "append", "NoTimeout"
+    )

@@ -46,7 +46,8 @@ def test_registry_rotation_list_is_valid():
     oracles = plans.all_oracles()
     missing = [k for k in plans._VERIFY_FIRST if k not in qs]
     assert missing == [], f"rotation names not in registry: {missing}"
-    # every registered query is oracle-gated
+    # every registered query is oracle-gated (r4: approx_daily_users got a
+    # deterministic oracle via its exact-companion columns)
     rows_only = set(qs) - set(oracles)
     assert rows_only == set(), rows_only
     # every query callable and oracle is non-trivially defined
@@ -177,11 +178,13 @@ def test_documented_registry_count():
 
 
 def test_python_path_ascii_corpus_contract(duck):
-    """keyword_page_view_udf's Arrow tokenizer (functions/text.py) splits
-    CJK runs into character bigrams, while its oracle splits on single
-    spaces only. The two agree when the documents corpus is pure ASCII,
-    so that contract is asserted here rather than assumed. Checked at
-    both parity SFs."""
+    """Every python_path oracle (byte profile, frame sample, audio
+    windows, resize) samples CHARACTERS via substr(text, ...) at offsets
+    computed from octet_length (a BYTE count), while the Spark side
+    samples raw UTF-8 payload bytes. The two agree iff the documents
+    corpus is pure ASCII (byte index == char index and ascii(ch) == byte
+    value) — ADVICE r7 asked for this shared contract to be asserted,
+    not just claimed in comments. Checked at both parity SFs."""
     import os
 
     from tests.conftest import TESTDATA
@@ -193,9 +196,10 @@ def test_python_path_ascii_corpus_contract(duck):
             "WHERE octet_length(encode(text)) != length(text)"
         ).fetchone()[0]
         assert non_ascii == 0, (
-            f"{sf}: {non_ascii} non-ASCII documents — the whitespace "
-            "oracle of keyword_page_view_udf no longer mirrors its "
-            "tokenizer"
+            f"{sf}: {non_ascii} non-ASCII documents — the python_path "
+            "char-indexed oracles no longer match the byte-indexed Spark "
+            "side; re-derive those oracles over encode(text) or drop "
+            "them to rows-only checks"
         )
 
 
@@ -203,8 +207,8 @@ def test_no_duplicate_query_names_across_modules():
     """Two plan modules registering the same query name silently shadow
     each other in all_queries()/all_oracles() (dict update order), which
     can pair one module's Spark query with the OTHER module's oracle —
-    caught live in r10 when a second k_anonymity_audit landed in another
-    plan module while experiment.py already owned the name."""
+    caught live in r10 when a second k_anonymity_audit landed in
+    corpus_ops while experiment.py already owned the name."""
     from collections import Counter
 
     from realtimedatawarehouse_self_spark import plans
@@ -217,3 +221,31 @@ def test_no_duplicate_query_names_across_modules():
         assert dups == [], f"{attr} names registered by >1 module: {dups}"
 
 
+def test_doc_id_unique_contract_for_in_row_dedup(duck):
+    """The r10 dedup-family optimization replaced the corpus-wide
+    `.distinct()` on (doc_id, lang, sh) with an IN-ROW
+    `explode(array_distinct(...))` (llm_ops._doc_shingles + the two
+    inline copies in corpus_clean_pipeline / crawl_to_train_funnel).
+    That rewrite is equivalent iff doc_id is the row identity of the
+    documents table: duplicates of (doc_id, lang, sh) can then only
+    arise WITHIN one row's shingle array. ADVICE r10 #3 asked for the
+    contract to be asserted, not just claimed in comments: duplicate or
+    repeated-NULL doc_id input is OUT OF CONTRACT for the dedup family
+    (such data would silently diverge from the oracle's cross-row
+    SELECT DISTINCT). Checked at both parity SFs."""
+    import os
+
+    from tests.conftest import TESTDATA
+
+    for sf in ["sf0.001", "sf0.01"]:
+        path = os.path.join(TESTDATA, sf, "documents.parquet")
+        dup_or_null = duck.execute(
+            f"SELECT (SELECT count(*) FROM '{path}' WHERE doc_id IS NULL),"
+            f" (SELECT count(*) - count(DISTINCT doc_id) FROM '{path}')"
+        ).fetchone()
+        assert dup_or_null == (0, 0), (
+            f"{sf}: doc_id nulls/dups {dup_or_null} — the dedup family's "
+            "in-row array_distinct no longer matches the oracle's "
+            "SELECT DISTINCT; restore the cross-row distinct for this "
+            "corpus or re-key it"
+        )

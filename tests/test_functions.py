@@ -1,6 +1,55 @@
-"""Unit tests for the pandas-UDF tokenizer and expression helpers."""
+"""Unit tests for the pandas-UDF / mapInPandas function surface
+(multimodal plumbing, tokenizer) and expression helpers."""
 
 from __future__ import annotations
+
+import hashlib
+
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_SMOKE
+
+
+def test_decode_media_metadata_plumbing(spark):
+    from realtimedatawarehouse_self_spark.functions.multimodal import (
+        attach_payload,
+        decode_media_metadata,
+    )
+    from realtimedatawarehouse_self_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_SMOKE, "documents").limit(20)
+    meta = decode_media_metadata(attach_payload(docs))
+    rows = meta.collect()
+    assert len(rows) == 20
+    for r in rows:
+        assert r.n_bytes > 0
+        assert r.mime_type in ("image/png", "audio/wav", "video/mp4")
+        assert 160 <= r.width <= 720 and 90 <= r.height <= 405
+        assert len(r.sha256) == 64
+    # deterministic: same content -> same fake dims + hash
+    again = {r.doc_id: r for r in decode_media_metadata(attach_payload(docs)).collect()}
+    for r in rows:
+        assert (again[r.doc_id].width, again[r.doc_id].sha256) == (r.width, r.sha256)
+
+
+def test_sample_frames_explodes_rows(spark):
+    from realtimedatawarehouse_self_spark.functions.multimodal import (
+        attach_payload,
+        sample_frames,
+    )
+
+    df = attach_payload(
+        spark.createDataFrame([(1, "x" * 130), (2, "y" * 10)], "doc_id long, text string")
+    )
+    frames = sample_frames(df, every_n_bytes=64).collect()
+    by_doc = {}
+    for r in frames:
+        by_doc.setdefault(r.doc_id, []).append(r)
+    assert len(by_doc[1]) == 3  # 130 bytes -> 64+64+2
+    assert len(by_doc[2]) == 1
+    f0 = sorted(by_doc[1], key=lambda r: r.frame_idx)[0]
+    assert bytes(f0.frame_bytes) == b"x" * 64
+    assert f0.frame_sha256 == hashlib.sha256(b"x" * 64).hexdigest()
 
 
 def test_tokenizer_udf_and_explode(spark):
@@ -31,16 +80,16 @@ def test_tokenizer_udf_and_explode(spark):
     assert c == 4  # abc / 123 / !? / x
 
 
-def test_tokens_edge_cases(spark):
-    from realtimedatawarehouse_self_spark.functions.exprs import tokens
+def test_word_shingles_edge_cases(spark):
+    from realtimedatawarehouse_self_spark.functions.exprs import tokens, word_shingles
 
     df = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a  b"), (3, "")], "id long, text string"
-    )
-    toks = {r.id: r.t for r in df.select("id", tokens("text").alias("t")).collect()}
-    assert toks[1] == ["a", "b", "c", "d"]
-    assert toks[2] == ["a", "b"]  # repeated separators leave no empty token
-    assert toks[3] == []
+        [(1, "a b c d"), (2, "a b"), (3, "")], "id long, text string"
+    ).withColumn("tok_arr", tokens("text"))
+    sh = {r.id: r.s for r in df.select("id", word_shingles(F.col("tok_arr")).alias("s")).collect()}
+    assert sh[1] == ["a b c", "b c d"]
+    assert sh[2] == []  # fewer tokens than n -> empty, not negative sequence
+    assert sh[3] == []
 
 
 def test_tokenize_udf_cjk_fallback(spark):
@@ -79,3 +128,31 @@ def test_tokenize_udf_cjk_fallback(spark):
     assert _cjk_fallback("abc中文def") == ["abc", "中文", "def"]
 
 
+def test_checked_bigint_passes_in_range_and_raises_on_overflow(spark):
+    """The int64 output-boundary guard (VERDICT r5 #5): wide-decimal values
+    inside int64 cast through unchanged; an out-of-range value RAISES loudly
+    instead of Spark's non-ANSI silent NULL (which would ship a wrapped /
+    nulled metric at extreme scale). Mirrors DuckDB, where HUGEINT->BIGINT
+    casts error on overflow."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.utils import PythonException  # noqa: F401  (doc only)
+
+    from realtimedatawarehouse_self_spark.functions.exprs import (
+        INT64_MAX,
+        checked_bigint,
+    )
+
+    ok = spark.createDataFrame(
+        [(str(INT64_MAX),), (str(-(1 << 63)),), ("0",)], "v string"
+    ).select(checked_bigint(F.col("v").cast("decimal(38,0)"), "out"))
+    vals = sorted(r.out for r in ok.collect())
+    assert vals == [-(1 << 63), 0, INT64_MAX]
+    assert dict(ok.dtypes)["out"] == "bigint"
+
+    bad = spark.createDataFrame(
+        [(str(INT64_MAX + 1),)], "v string"
+    ).select(checked_bigint(F.col("v").cast("decimal(38,0)"), "out"))
+    import pytest as _pytest
+
+    with _pytest.raises(Exception, match="int64 overflow.*'out'"):
+        bad.collect()

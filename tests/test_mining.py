@@ -83,3 +83,19 @@ def test_mg_exact_when_under_capacity():
     assert _run_mg(rows) == {5, 6, 9}
 
 
+def test_star_components_chain_and_forest(spark):
+    """Star contraction must label a 60-node CHAIN (the worst diameter
+    case min-label propagation pays O(diameter) rounds for) and a forest
+    of separate components with each node's component minimum."""
+    from realtimedatawarehouse_self_spark.plans.llm_ops import star_components
+
+    chain = [(i, i + 1) for i in range(60)]          # component min = 0
+    tri = [(100, 101), (101, 102), (100, 102)]        # min = 100
+    pair = [(200, 201)]                               # min = 200
+    df = spark.createDataFrame(chain + tri + pair, "u long, v long")
+    got = {r.node: r.label for r in star_components(df).collect()}
+    assert got == (
+        {i: 0 for i in range(61)}
+        | {100: 100, 101: 100, 102: 100}
+        | {200: 200, 201: 200}
+    )

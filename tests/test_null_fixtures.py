@@ -69,8 +69,8 @@ def null_sf_dir(tmp_path_factory):
         }
     )
     pq.write_table(table, os.path.join(str(d), "events.parquet"))
-    # a tiny orders table for the IVM delta-join: NULL custkey and NULL
-    # orderdate rows must drop out on both engines
+    # a tiny orders table for the PIT assembly: NULL custkey and NULL
+    # orderdate rows must drop out of the feature stream on both engines
     orders = pa.table(
         {
             "o_orderkey": pa.array([1, 2, 3, 4], pa.int64()),
@@ -98,6 +98,45 @@ def null_sf_dir(tmp_path_factory):
         }
     )
     pq.write_table(customer, os.path.join(str(d), "customer.parquet"))
+    # a tiny documents table for the web-corpus front door (r9): NULL
+    # text must vanish from both engines, NULL source/lang must not
+    # swallow the synthesized page/URL through concat, a NULL n_chars row
+    # exercises DESC null ordering (Spark desc = NULLS LAST, DuckDB
+    # default NULLS LAST — must agree), and double spaces probe the
+    # word-count split on both sides
+    # rows 6-7 (r9 hardening): a whitespace-only text (tokenizes to [])
+    # and a stopword-only text (tokens but zero RAKE islands / zero
+    # non-stop content) — the degenerate shapes every text operator must
+    # fold identically on both engines
+    documents = pa.table(
+        {
+            "doc_id": pa.array([0, 1, 2, 3, 4, 5, 6, 7], pa.int64()),
+            "text": pa.array(
+                [
+                    "one two three four five six seven eight nine ten "
+                    "eleven twelve thirteen",
+                    None,
+                    "short tail only",
+                    "a  b padded words here make five or so total count",
+                    "",
+                    "exactly five words here now",
+                    "   ",
+                    "the a the a",
+                ]
+            ),
+            "lang": pa.array(
+                ["en", "en", None, "de", "es", "en", "en", "de"]
+            ),
+            "source": pa.array(
+                ["srcA", "srcA", "srcB", None, "srcA", "srcB", "srcB",
+                 "srcA"]
+            ),
+            "n_chars": pa.array(
+                [64, 0, 15, None, 0, 28, 3, 11], pa.int64()
+            ),
+        }
+    )
+    pq.write_table(documents, os.path.join(str(d), "documents.parquet"))
     return str(d)
 
 
@@ -117,6 +156,10 @@ def null_duck(null_sf_dir):
     con.execute(
         "CREATE VIEW customer AS SELECT * FROM "
         f"'{os.path.join(null_sf_dir, 'customer.parquet')}'"
+    )
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{os.path.join(null_sf_dir, 'documents.parquet')}'"
     )
     yield con
     con.close()
@@ -139,9 +182,10 @@ def null_duck(null_sf_dir):
         "user_event_diversity",
         "user_churn_labels",
         "plan_range_partitions",
-        # r5: NULL value rows through the decay shift, the
-        # rank-percentile transform, and the RFM cents sum (a purchase
-        # group whose values are partly NULL)
+        # r5: NULL value rows through the hash-gated subsample means, the
+        # decay shift, the rank-percentile transform, and the RFM cents
+        # sum (a purchase group whose values are partly NULL)
+        "subsample_mean_variance",
         "decayed_user_score",
         "quantile_normalize_values",
         "rfm_user_features",
@@ -165,9 +209,11 @@ def null_duck(null_sf_dir):
         # key self-joins must skip NULL-day groups identically
         "conversion_lag_profile",
         "seasonal_naive_backtest",
-        # r6 wave 2: the co-engagement bucket size under NULL user_id
+        # r6 wave 2: the MAD median-rank pick over groups with NULL-user
+        # rows, and the co-engagement bucket size under NULL user_id
         # (Spark's collect_set drops NULLs; the oracle must not count
         # them toward the hub cap either)
+        "mad_anomaly_daily",
         "link_prediction_common_neighbors",
         # r6 wave 3: OLS sums over groups whose cents are partly or fully
         # NULL (sum-of-NULL and x*NULL must collapse identically)
@@ -180,10 +226,21 @@ def null_duck(null_sf_dir):
         # NULL-user / NULL-value purchase exclusions
         "holt_linear_forecast",
         "revenue_concentration_hhi",
+        # r6 wave 7: target encoding's NULL-user exclusion and NULL-cents
+        # sums (a fold whose target values are partly NULL must shrink
+        # toward the same prior on both engines), and the ACF daily counts
+        # over a fixture where NULL-user rows still count toward the
+        # series (count(*), not count(user))
+        "target_encoding_oof",
+        "autocorrelation_daily_lags",
         # sweep: NULL user/value rows still open intervals (only ts drives
         # the sweep), and the all-NULL-value 'error' group must sweep
         # identically on both engines
         "interval_coverage_sweep",
+        # grouped-agg UDAF: the all-NULL 'error' group must surface as
+        # (n=0, NULL) through the Arrow aggregate AND the oracle's
+        # NOT EXISTS branch; mostly-NULL groups trim on non-NULLs only
+        "trimmed_mean_value_udaf",
         # apportionment: NULL-value purchases drop out entirely, NULL-user
         # rows join to nothing, and remainder cents split identically
         "attribution_linear_apportion",
@@ -203,10 +260,14 @@ def null_duck(null_sf_dir):
         # k-anonymity: NULL value rows form their own vb=NULL classes and
         # NULL users must not count toward users_in_class on either side
         "k_anonymity_audit",
-        # r7 wave 21: NULL users must never become LPA graph nodes on
+        # r7 wave 21/22: NULL users must never become LPA graph nodes on
         # either engine (Spark's groupBy keeps a NULL group, the oracle's
-        # self-join never matches it — both filter explicitly)
+        # self-join never matches it — both filter explicitly); the PIT
+        # matrix's NULL-value label day must coalesce to 0 cents, NULL
+        # custkey/orderdate order rows must drop from the feature stream,
+        # and the NULL-user purchase must produce no label row
         "community_label_propagation",
+        "pit_training_matrix",
         # r8 wave 24: pass@k's sufficient stats over groups whose values
         # are partly/entirely NULL (the all-NULL 'error' type must vanish
         # identically), the conformal split where md5(NULL user) makes
@@ -232,6 +293,178 @@ def null_duck(null_sf_dir):
         # all-NULL 'error' day leg), NULL users never become graph nodes
         "binary_classifier_auc",
         "degree_assortativity",
+        # r9 web-corpus front door: NULL text drops from both engines,
+        # NULL source/lang coalesce (concat would otherwise NULL the
+        # whole page/URL), NULL n_chars rides DESC null ordering, and
+        # empty/double-space texts probe the block word count
+        "html_text_extraction",
+        "domain_frequency_cap",
+        # r9 wave 28: NULL text drops identically pre-blocklist/shard,
+        # NULL lang drops from the coverage audit on both engines, and
+        # the streaming cap twin must admit the same first-K per host
+        # with NULL-text rows never staged
+        "robots_blocklist_filter",
+        "tokenizer_vocab_coverage",
+        "epoch_shard_plan",
+        "streaming_domain_cap_twin",
+        # r9 wave 29: NULL text must vanish from the WARC envelope build,
+        # and the recipe's raw stage must count NULL-text/tok_ct hazards
+        # (Spark size()=-1 vs DuckDB NULL both fold to 0 tokens)
+        "warc_record_parse",
+        "web_front_door_recipe",
+        # r9 wave 30: the NULL-source group must carry its own sqrt
+        # weight identically, NULL text drops pre-count
+        "token_budget_mixture",
+        # r9 waves 31-33: NULL text drops pre-scoring on both engines
+        # (fasttext/DS/perplexity/rouge); NULL (source, lang) groups are
+        # equality-joined away in rouge but kept as window partitions in
+        # the perplexity bucketing — both engines must agree on both
+        # treatments; NULL users/ts never become preference votes or
+        # episode steps; the all-NULL 'error' value group rides
+        # coalesce-to-0 rewards through the shift decay
+        "fasttext_hash_quality",
+        "dawid_skene_vote",
+        "perplexity_bucket_assign",
+        "rouge_bigram_eval",
+        "pairwise_preference_matrix",
+        "bradley_terry_strength",
+        "episode_discounted_returns",
+        # r10 wave 46: same episode order contract; NULL ts/user drop,
+        # NULL event_id/value coalesce inside the step ordering
+        "episode_return_to_go",
+        # r9 wave 34: NULL text drops pre-scoring (confident learning /
+        # DSIR weights); the NULL source and NULL lang groups must carry
+        # their own ESS / pack-audit rows identically on both engines
+        # (group-by keeps NULL keys; the pack oracle's max-pack join
+        # needs the explicit IS NULL arm); NULL users/ts never become
+        # episodes so the day baseline is unaffected
+        "confident_learning_audit",
+        "importance_weight_ess",
+        "episode_advantage_baseline",
+        "pack_attention_waste",
+        # r9 wave 35: the day-rank split and both predictors must drop
+        # NULL users/types identically; the streaming fold must stage
+        # exactly the batch operator's NULL-filtered step set (NULL
+        # event_ids ride ord_eid = -1 through the state fold)
+        "preference_holdout_accuracy",
+        "streaming_episode_return_twin",
+        # r9 wave 36: NULL text drops pre-count on both engines; the
+        # NULL-source group carries its own swept weights; RAKE's
+        # islands construction must skip NULL-text docs identically
+        "mixture_temperature_sweep",
+        "negative_sampling_table",
+        "keyphrase_rake",
+        # r10 wave 37: NULL / whitespace-only text must yield zero
+        # anchors on both engines (Spark: size(NULL) = -1 < K filter;
+        # DuckDB: len(NULL) >= K is NULL -> dropped), never a NULL-keyed
+        # anchor group
+        "dedup_duplicated_spans",
+        # r10 wave 38: NULL text drops at the WARC door on both engines;
+        # NULL source must become the ''-titled page AND the
+        # '.example.com' host (coalesce on both), and the NULL-source
+        # group must ride the mixture hash gate identically
+        "crawl_to_train_funnel",
+        # r10 wave 39: NULL text drops at the tok CTE on both engines;
+        # the NULL source group carries its own BLEU reference and its
+        # own CDC chunk population
+        "bleu_ngram_eval",
+        "cdc_chunk_dedup",
+        # r10 wave 40: NULL text is excluded from the removal base on
+        # both engines (size(NULL)=-1 vs t IS NOT NULL); the NULL lang
+        # group gets its own curriculum ranking
+        "duplicated_span_removal",
+        "curriculum_order_plan",
+        # the 24th twin: NULL text yields no chunks on either engine;
+        # dup-chunk election must agree on the remaining rows
+        "streaming_chunk_owner_twin",
+        # r10 wave 41: NULL source coalesces to the '.example.com' host
+        # on both engines; NULL text drops before the rules join / rank
+        # window / quality scan; NULL doc_id paths match no rule and
+        # must fall through to the RFC default-allow identically
+        "robots_rule_eval",
+        "crawl_frontier_plan",
+        "host_quality_shrinkage",
+        # r10 wave 42: NULL text drops at the tok CTE on both engines;
+        # the NULL source/lang groups carry their own chrF reference,
+        # threshold rows, and distinct-n ratios
+        "chrf_char_eval",
+        "quality_threshold_sweep",
+        "distinct_ngram_diversity",
+        # r10 wave 43: NULL text and NULL doc_id are excluded from the
+        # banded corpus on both engines; the curve and its streaming
+        # twin must agree on the remaining band arithmetic
+        "vocab_growth_curve",
+        "streaming_vocab_growth_twin",
+        # the 26th twin: per-host politeness counter across batches on
+        # the NULL-host/NULL-text fixture
+        "streaming_frontier_twin",
+        # r10 wave 44: NULL text drops before windowing/scoring on both
+        # engines; NULL lang/source ride as their own groups through the
+        # code-switch profile, the shard cells, and the lexicon gate
+        "code_switch_profile",
+        "mixture_shard_conformance",
+        "badword_ratio_filter",
+        # (bitext_margin_mining is embeddings-only — the NULL fixture is
+        # a documents/events fixture, so like the rest of the embedding
+        # family it is covered by the empty-input + hypothesis suites)
+        # r10 wave 47: NULL ts/user_id/event_type rows have no sequence
+        # position / conversation / role and must drop identically
+        # (Spark NULLS FIRST vs DuckDB NULLS LAST window hazard); NULL
+        # props coalesces to the '_' content / 0-token payload on both
+        # engines
+        "sft_turn_structure_audit",
+        "sft_template_render_overhead",
+        "sft_loss_masking_plan",
+        # r10 wave 48: the 27th twin must drop the same NULL-key rows as
+        # its batch half; the NFC audit must treat NULL text (dropped)
+        # and whitespace-only docs (pure-ASCII, unchanged) identically
+        "streaming_sft_gate_twin",
+        "unicode_normalization_audit",
+        # r10 wave 49: NULL user_id/ts/event_type rows drop from the
+        # comparison frame identically (the counts combine vs the SQL
+        # self-join NULL-key hazard); NULL props coalesces to the
+        # 0-token payload on both engines
+        # (caption_image_alignment needs the embeddings table, absent
+        # from this fixture — covered by empty-input + hypothesis
+        # suites, like the rest of the embedding family)
+        "preference_length_bias_probe",
+        # r10 wave 50: NULL-text docs drop identically; whitespace-only
+        # and single-token docs hit the scored=0 guard on both engines;
+        # NULL user_id/ts/event_type rows leave the DPO comparison frame
+        # identically, NULL props -> the 0-token payload
+        "synthetic_watermark_detect",
+        "dpo_pair_extraction",
+        # r10 wave 51: NULL text drops identically from the judged pool
+        # (NDCG) and the FIM staging; NULL lang additionally leaves the
+        # FIM plan's combine; sub-4-token and empty docs land in 'skip'
+        "retrieval_ndcg_eval",
+        "fim_transform_plan",
+        # r10 wave 52: NULL-source docs are out of scope on both engines
+        # (a keyed counter needs a key); NULL text drops identically;
+        # whitespace-only / single-token docs contribute scored=0 rows
+        # to their source's pooled counters
+        "streaming_watermark_twin",
+        # r10 wave 53: NULL-text docs leave both the span evidence and
+        # the exact-dup hash groups identically; NULL lang leaves the
+        # parity combine; zero-token docs guard the micro divisions
+        "memorization_risk_audit",
+        "tokenizer_parity_audit",
+        # r10 wave 54: NULL text/source leave the batch assignment and
+        # the gate flags identically; zero-token docs fail the n_tok>0
+        # conjuncts (not divide) on both engines
+        "inbatch_negative_collision_audit",
+        "filter_cascade_order_plan",
+        # r10 wave 55: NULL text/lang leave the token-supply combine;
+        # NULL user_id/ts/event_type rows are not conversation turns;
+        # NULL props coalesces to the '_' content payload identically
+        "repeated_epoch_value_plan",
+        "sft_complexity_score",
+        # r10 wave 56: NULL-text docs leave the prefix sweep identically;
+        # short docs drop out of longer-K rows on both engines
+        # (quantization_outlier_audit is embeddings-only — absent from
+        # this fixture, covered by empty-input + hypothesis like the
+        # rest of the embedding family)
+        "prompt_prefix_cache_plan",
     ],
 )
 def test_null_fixture_oracle_parity(spark, null_duck, null_sf_dir, name):

@@ -259,6 +259,43 @@ def test_quantile_normalize_matches_python(spark, cents):
 
 @settings(**_SETTINGS)
 @given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 25), st.integers(0, 25)),
+        min_size=1,
+        max_size=40,
+    ),
+)
+def test_star_components_matches_union_find(spark, edges):
+    """Star contraction must agree with a literal union-find on random
+    graphs (self-loops dropped, parallel edges collapsed — exactly the
+    operator's own normalization)."""
+    from realtimedatawarehouse_self_spark.plans.llm_ops import star_components
+
+    clean = sorted({(u, v) for u, v in edges if u != v})
+    if not clean:
+        return
+    df = spark.createDataFrame(clean, "u long, v long")
+    got = {r.node: r.label for r in star_components(df).collect()}
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in clean:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    ref = {n: find(n) for n in parent}
+    assert got == ref
+
+
+@settings(**_SETTINGS)
+@given(
     rows=st.lists(
         st.tuples(
             st.integers(1, 4),                      # user

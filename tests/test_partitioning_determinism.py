@@ -21,32 +21,55 @@ from tests.oracle_harness import _normalize
 
 SF = os.path.join(TESTDATA, "sf0.001")
 
-# Representative set: every float-emitting family, the Python-path
-# sketch, the iterative op, and a decimal/window/join sample.
+# Representative set: every float-emitting family, both Python-path
+# sketches, the iterative op, and a decimal/window/join sample.
 QUERIES = [
     "heavy_hitter_users",          # partition-dependent MG candidate set
     "pagerank_co_engagement",      # iterative integer arithmetic
+    "embedding_gram_matrix",       # decimal accumulation
+    "span_dedup_stats",            # double division output
+    "bm25_doc_search",             # micro-unit floored contributions
     "anomaly_zscore_daily",        # fixed-order double chain
+    "domain_mixture_temperature",  # IEEE sqrt weights
     "event_value_percentiles",
     "window_frames_running_spend",
     "dws09_trade_sku_order_window",
     "value_quantile_sketch",
+    "dedup_lsh_verified",
     "audience_overlap_jaccard",
     "tpch_q1_pricing_summary",
+    "similarity_topk_pq_adc",       # float-cosine rerank over exact shortlist
     "fifo_credit_matching",         # banded interval join
     "winsorized_value_stats",       # exact-percentile clamp
     "event_type_markov_transitions",
     "triangle_count_co_engagement",  # degree-orientation must not leak into answer
+    "dedup_jaccard_prefix_filter",   # prefix selection must stay lossless
+    "tfidf_doc_keywords",            # top-K tie-break must be total-order
+    "lm_quality_probability",        # broadcast-LM join + floored mean
     "ewma_anomaly_daily",            # array_sort fold: day key must be total
+    "subsample_mean_variance",       # hash-gated membership, never RNG
+    "dedup_survivorship",            # label propagation + survivor election
     "quantile_normalize_values",     # ANSI rank: ties must share position
+    "dedup_clusters_star",           # contraction order must not leak
     "market_basket_lift",            # decimal lift arithmetic
+    "dedup_token_yield",             # election + aggregation composition
+    "multimodal_audio_windows",      # Arrow batch boundaries must not leak
     "decayed_user_score",            # shift-decay arithmetic
     # round-6 additions
     "window_funnel_depth",           # chained running-max anchors: per-user
     #                                  sort order must be total (ts, event_id)
     "user_day_bitmap_retention",     # bit_or over partitioned combine
     "change_point_cusum",            # stacked Lindley windows per type
+    "minhash_band_tuning",           # candidate SETS may vary per partition
+    #                                  boundary; counts must not
+    "ngram_novelty_rate",            # min(doc_id) combine over shingles
+    "eval_slice_sample_exact",       # WindowGroupLimit top-K: hash-rank
+    #                                  tie-break must be total-order
+    "cross_source_dup_matrix",       # pair set + provenance joins
+    "embedding_norm_profile",        # in-row fold + permille division
     # round-6 wave-2 additions
+    "mad_anomaly_daily",             # lower-median rank pick: (ct, d)
+    #                                  tiebreak must be total-order
     "link_prediction_common_neighbors",  # wedge aggregation + anti-join
     "zorder_layout_audit",           # broadcast min/max must be exact,
     #                                  shift/mask map a pure function
@@ -66,6 +89,12 @@ QUERIES = [
     "revenue_concentration_hhi",     # floored shares under partial-agg
     #                                  reordering
     # round-6 wave-7 additions
+    "feature_hashing_counts",        # md5 bucket/sign a pure row map;
+    #                                  combine reordering must not drift
+    "target_encoding_oof",           # fold-excluded rationals under
+    #                                  partial-agg reordering
+    "autocorrelation_daily_lags",    # DECIMAL(38,0) product sums must be
+    #                                  associative under any partitioning
     "bucketed_join_colocation",      # bucketed write + co-located join
     #                                  must not leak bucket boundaries
     "degree_distribution_histogram", # capped-bucket edge set identical
@@ -73,6 +102,9 @@ QUERIES = [
     "interval_coverage_sweep",       # tied-marker sweep: partial sums over
     #                                  identical deltas must be a stable
     #                                  multiset under any row order
+    "trimmed_mean_value_udaf",       # holistic Arrow aggregate: trim-kept
+    #                                  multiset invariant under tie order
+    #                                  and Arrow batch boundaries
     "attribution_linear_apportion",  # remainder assignment needs the
     #                                  (t_ts, t_id) total order; day-level
     #                                  sums must survive repartitioning
@@ -84,6 +116,8 @@ QUERIES = [
     #                                  reordering
     "cuped_variance_reduction",      # signed theta/adjusted-diff division
     #                                  truncation exact under any plan
+    "embedding_power_iteration",     # unrolled iterate: DECIMAL G·w sums
+    #                                  associative under any partitioning
     "diff_in_diff",                  # floored cell means composed after
     #                                  the combine, never inside it
     "survival_hazard_daily",         # risk-set window over the lifetime
@@ -94,13 +128,23 @@ QUERIES = [
     #                                  independent (the sketch's own merge
     #                                  theorem under perturbed plans)
     "kmv_rolling_distinct",          # union-then-retruncate across days
+    "bloom_prefilter_audit",         # bit positions a pure row map; FPR
+    #                                  counts under combine reordering
     "shuffle_skew_audit",            # per-key combine + twice-reduced
     #                                  persisted frame
+    "phrase_search_positional",      # anchor votes under perturbed
+    #                                  posting partitioning
     "join_cardinality_estimate",     # DECIMAL count-products associative;
     #                                  TakeOrdered top-H tie-break total
+    "mmr_diversified_topk",          # greedy argmax chain: one changed
+    #                                  candidate would cascade — exact
+    #                                  integer scores make it impossible
+    "weighted_sample_priority",      # hash-priority bottom-K tie-break
     "kmv_audience_intersection",     # theta + retained-set intersection
     "file_skipping_audit",           # cell-grain min/max re-aggregation
     "deletion_impact_audit",         # semi-join cascade counts
+    "entity_match_parts",            # multi-pass union dedupe + verify
+    "entity_golden_record",          # survivor election + brand mode
     "late_dim_reattribution",        # as-of last(IGNORE NULLS) needs the
     #                                  (ts, kind) total order per user
     "cms_frequency_audit",           # cell sums + min-over-depths under
@@ -111,6 +155,8 @@ QUERIES = [
     #                                  + tiny cumulative must not leak
     "l_diversity_audit",             # bounded-domain countDistinct combine
     "join_order_recommendation",     # stats + decision under any plan
+    "multimodal_byte_profile",       # Arrow batch boundaries must not
+    #                                  leak into per-payload profiles
     # round-7 wave-18 additions
     "hll_union_rolling",             # register max-merge commutative /
     #                                  idempotent; shifted harmonic sums
@@ -119,24 +165,49 @@ QUERIES = [
     #                                  partial-agg reordering
     "srm_guardrail_audit",           # md5 arm split pure row map; chi²
     #                                  rational exact under any plan
+    # round-7 wave-19 additions
+    "bpe_merge_rounds",              # per-round argmax: (ct, lhs, rhs)
+    #                                  total order makes the 3-round merge
+    #                                  chain partition-independent
+    "kneser_ney_counts",             # continuation counts under combine
+    #                                  reordering; top-K tie-break total
+    "sequence_length_bucketing",     # pow2 ceiling a pure row map; per-
+    #                                  bucket combine + broadcast max
+    "multimodal_resize",             # Arrow batch boundaries must not
+    #                                  leak into sampled-pixel hashes
     # round-7 wave-21 additions
     "community_label_propagation",   # synchronous rounds + (ct, lbl)
     #                                  total tie order: label chain must
     #                                  be a pure function of the edge set
+    "cooccurrence_window_pmi",       # in-row pair generation + combine;
+    #                                  top-K tie-break total-order
     # round-7 wave-22 additions
     "item_cf_recommend",             # neighborhood cut + served top-K:
     #                                  both windows totally tie-ordered
-    # round-7 expansion: the remaining high-risk families — greedy folds,
-    # interval chains, pivot column ordering, top-K tie cuts
+    "pit_training_matrix",           # union-stream as-of: carry must be
+    #                                  a pure function of (user, day) order
+    # round-7 expansion: the remaining high-risk families — iterative
+    # training, float-cosine ties, hash-gated sampling/splits, greedy
+    # folds, interval chains, pivot column ordering, top-K tie cuts
+    "kmeans_ivf_train",              # iterative centroid updates
+    "similarity_topk_bruteforce",    # cosine top-K tie order
+    "similarity_topk_ivf",           # centroid assignment + probe cut
     "user_journey_paths",            # per-user path assembly order
     "user_value_trend_theilsen",     # median-of-slopes rank pick
+    "doc_pack_greedy",               # greedy cumsum packing fold
+    "stratified_sample_corpus",      # hash-gated membership, never RNG
+    "corpus_split_assign",           # hash split assignment
     "sessionize_events",             # gap sessionization chain
     "session_window_native",         # native session windows
     "scd2_user_value",               # validity-interval chain
     "gap_fill_interpolate",          # integer interpolation arithmetic
     "running_balance_floor",         # sequential clamp fold
     "pareto_frontier_parts",         # frontier dominance ties
+    "contamination_longest_match",   # islands-trick run assembly
+    "dedup_minhash_lsh",             # band bucketing candidate set
+    "dedup_simhash",                 # hamming-band candidates
     "kcore_peeling_rounds",          # iterative peel + survivor persist
+    "vocab_topk",                    # corpus top-K tie cut
     "attribution_last_touch",        # as-of last-touch tie order
     "snapshot_diff_user_state",      # keyed snapshot diff
     "range_join_campaigns",          # banded interval join
@@ -144,9 +215,11 @@ QUERIES = [
     "tpch_q18_large_orders",         # top-K over join
     "user_retention_cohorts",        # cohort window matrix
     "pivot_daily_event_matrix",      # pivot column ordering
-    # round-7 expansion 2: complete TPC-H (all 22 forms now covered) —
-    # decimal aggregates, correlated exists/anti forms and min-cost argmin
-    # ties must all be pure functions of the tables
+    "hard_negative_mining",          # banded-cosine cut + tie order
+    # round-7 expansion 2: complete TPC-H (all 22 forms now covered) and
+    # the remaining text-pipeline maps — decimal aggregates, correlated
+    # exists/anti forms, min-cost argmin ties, and hash fingerprints must
+    # all be pure functions of the tables
     "tpch_q2_min_cost_supplier",
     "tpch_q3_shipping_priority",
     "tpch_q4_late_orders",
@@ -166,16 +239,35 @@ QUERIES = [
     "tpch_q20_dominant_supplier",
     "tpch_q21_waiting_supplier",
     "tpch_q22_idle_balances",
+    "doc_fingerprint",               # rolling-hash fingerprint
+    "text_quality_score",            # ratio micro-units
+    "token_count_stats",             # regex token maps
+    "lang_id_ngram",                 # n-gram vote argmax ties
+    "pii_scrub_stats",               # regex hit maps
+    "repetition_filter",             # windowed n-gram repeat ratio
     # round-8 wave-24 additions
     "pass_at_k_estimator",           # binomial-ratio rationals under
     #                                  partial-agg reordering
     "conformal_calibration_audit",   # order-statistic threshold pick:
     #                                  (score, event_id) total order
+    "annotator_agreement_kappa",     # chance-corrected agreement cells
+    #                                  under combine reordering
+    "bpe_apply_fertility",           # trained merge chain + per-lang
+    #                                  fertility sums must be a pure
+    #                                  function of the corpus
+    "importance_weight_selection",   # global lower-median threshold:
+    #                                  (score, doc_id) total order
     "incremental_join_maintenance",  # four-term delta merge must equal
     #                                  the direct join under any plan
+    "multimodal_phash_dedup",        # Arrow batch boundaries must not
+    #                                  leak into dHash bands or pair sets
     # round-8 wave-25 additions
+    "classifier_calibration_ece",    # per-row marker counting + 10-key
+    #                                  combine; ECE weighting exact
     "kmv_audience_difference",       # k-min retention + anti-membership
     #                                  under perturbed plans
+    "vocab_concentration_simpson",   # f(f-1) products associative under
+    #                                  combine reordering
     "recsys_holdout_eval",           # time split a pure row map; top-K
     #                                  and first-hit ranks tie-ordered
     "markov_removal_effect",         # path windows + pivoted matrix +
@@ -183,6 +275,7 @@ QUERIES = [
     # round-8 wave-26 additions
     "encoding_choice_audit",         # per-day run windows + distinct-
     #                                  value byte sums under any plan
+    "filter_ablation_matrix",        # in-row mask explode + 8-key combine
     "next_event_prediction_accuracy",  # argmax model tie order + hash
     #                                    split purity
     # round-8 wave-27 additions
@@ -190,6 +283,140 @@ QUERIES = [
     #                                  rank-sum rationals exact
     "degree_assortativity",          # DECIMAL edge sums associative
     #                                  under combine reordering
+    "dataset_card_rollup",           # three combines + argmax tie order
+    # round-9 web-corpus front door
+    "html_text_extraction",          # Arrow batch boundaries must not
+    #                                  leak into extraction output
+    "domain_frequency_cap",          # row_number()<=K keep-set must be
+    #                                  the same under any partitioning
+    # round-9 wave 28
+    "robots_blocklist_filter",       # broadcast anti-join keep-set
+    "tokenizer_vocab_coverage",      # top-V tie-break must be total-order
+    "epoch_shard_plan",              # md5 sharding, never hash()/RNG
+    # round-9 wave 29
+    "warc_record_parse",             # scan-bound parse, no shuffle at all
+    "web_front_door_recipe",         # five chained keep-sets must agree
+    # round-9 wave 30
+    "token_budget_mixture",          # floored IEEE sqrt weights + integer
+    #                                  quotas under combine reordering
+    # round-9 waves 31-33
+    "semdedup_eps_sweep",            # cell-blocked float-cosine compares:
+    #                                  threshold counts must not see batching
+    "perplexity_bucket_assign",      # per-lang rank cut: tie-break must be
+    #                                  total (score DESC, doc_id)
+    "bradley_terry_strength",        # unrolled MM integer divisions over a
+    #                                  shuffled win matrix
+    "episode_discounted_returns",    # per-episode window sort + shift decay
+    "episode_return_to_go",          # r10 wave 46: suffix-sum rtg over the
+    #                                  same episode order under shuffles
+    "rouge_bigram_eval",             # clipped-count join + floored micros
+    # round-9 wave 34
+    "confident_learning_audit",      # threshold means + argmax tie-break
+    "importance_weight_ess",         # DECIMAL(38,0) weight sums under
+    #                                  combine reordering
+    "episode_advantage_baseline",    # floored day-mean baseline
+    "pack_attention_waste",          # per-lang prefix window re-derivation
+    # round-9 wave 35
+    "preference_holdout_accuracy",   # day-rank split + tie-broken argmax
+    #                                  predictions under shuffled pairs
+    # round-9 wave 36
+    "mixture_temperature_sweep",     # sqrt-composition weights + windowed
+    #                                  normalizer under combine reordering
+    "negative_sampling_table",       # top-V total order + DECIMAL normalize
+    "keyphrase_rake",                # islands + per-doc top-K tie-break
+    # round-10 wave 37
+    "dedup_duplicated_spans",        # anchor collect_list order + diagonal
+    #                                  islands must not leak partitioning
+    # round-10 wave 38
+    "crawl_to_train_funnel",         # ten stage seams (Arrow extraction,
+    #                                  cap/pack windows, LSH candidates,
+    #                                  hash-gated mixture) under perturbed
+    #                                  scans must give identical counts
+    # round-10 wave 39
+    "bleu_ngram_eval",               # fixed-order double GM (sqrt∘sqrt)
+    #                                  must not see combine reordering
+    "cdc_chunk_dedup",               # content-defined cut set is per-doc
+    #                                  codegen — partitioning must not
+    #                                  move any boundary
+    # round-10 wave 40
+    "duplicated_span_removal",       # interval-union sweep: the running
+    #                                  max end needs the (s, e) total order
+    "curriculum_order_plan",         # per-lang rank cut: (difficulty,
+    #                                  doc_id) total order under shuffles
+    # round-10 wave 41
+    "robots_rule_eval",              # longest-match arg-max must pick the
+    #                                  same rule per URL under reordering
+    "crawl_frontier_plan",           # per-host (n_chars DESC, doc_id)
+    #                                  rank -> epoch cut under shuffles
+    "host_quality_shrinkage",        # integer div shrinkage: combine
+    #                                  order must not move any host sum
+    # round-10 wave 42
+    "chrf_char_eval",                # fixed-order F mean over exact
+    #                                  clip/tot bigints under reshuffles
+    "quality_threshold_sweep",       # conditional-agg grid must not see
+    #                                  combine reordering
+    "distinct_ngram_diversity",      # two-level distinct count under
+    #                                  perturbed scans
+    # round-10 wave 43
+    "vocab_growth_curve",            # band arithmetic + min(band) first-
+    #                                  seen must survive scan perturbation
+    # round-10 wave 44
+    "code_switch_profile",           # window lag + single-BIGINT argmax
+    #                                  must not see combine reordering
+    "mixture_shard_conformance",     # three stacked share windows over
+    #                                  the cell frame under perturbation
+    "badword_ratio_filter",          # per-token membership sum is pure
+    #                                  codegen — must be partition-blind
+    # round-10 wave 45
+    "bitext_margin_mining",          # micro-floored pair scores + integer
+    #                                  margin under perturbed scans
+    # round-10 wave 47
+    "sft_turn_structure_audit",      # lag/first/last depend on the
+    #                                  (ts, event_id) total order under
+    #                                  reshuffled scans
+    "sft_template_render_overhead",  # sort_array-ordered render must be
+    #                                  identical whatever order collect_
+    #                                  list saw the turns in
+    "sft_loss_masking_plan",         # day combine is order-free BIGINT
+    #                                  sums — must be partition-blind
+    # round-10 wave 48
+    "unicode_normalization_audit",   # per-row Arrow transform is pure —
+    #                                  must be partition- and batch-blind
+    # round-10 wave 49
+    "caption_image_alignment",       # in-row hashed projection + single
+    #                                  double division floored to micro
+    #                                  must be partition-blind
+    "preference_length_bias_probe",  # in-row pair explode + BIGINT sums
+    #                                  under combine reordering
+    # round-10 wave 50
+    "synthetic_watermark_detect",    # per-row greenlist recount + one
+    #                                  double division — partition-blind
+    "dpo_pair_extraction",           # window top-1 per prompt must pick
+    #                                  the same pair under perturbed plans
+    # round-10 wave 51
+    "retrieval_ndcg_eval",           # partial top-K + broadcast ideal
+    #                                  join under perturbed plans
+    "fim_transform_plan",            # per-row hash cuts + tiny combine
+    # round-10 wave 53
+    "memorization_risk_audit",       # span sweep + exact-dup combine
+    #                                  must score identically under
+    #                                  perturbed physical plans
+    "tokenizer_parity_audit",        # pivot pick + integer ratios
+    # round-10 wave 54
+    "inbatch_negative_collision_audit",  # C(n_s,2) sums from group
+    #                                      sizes under combine reorder
+    "filter_cascade_order_plan",     # joint pattern counts + 24-way
+    #                                  scoring must rank identically
+    # round-10 wave 55
+    "repeated_epoch_value_plan",     # md5-group supply + literal decay
+    #                                  chain under combine reordering
+    "sft_complexity_score",          # one conversation combine;
+    #                                  count-distinct must be stable
+    # round-10 wave 56
+    "quantization_outlier_audit",    # per-dim magnitude combine under
+    #                                  partition reordering
+    "prompt_prefix_cache_plan",      # (K, prefix) group sizes under
+    #                                  combine reordering
 ]
 
 PERTURBED = {

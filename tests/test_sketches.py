@@ -2,9 +2,13 @@
 
 - KMV's rank<=K must compile to WindowGroupLimit (the partial top-K that
   makes the sketch's shuffle K rows per partition, not the full hash set).
+- The Bloom screen must never produce a false negative (the property the
+  exact-join excusal depends on) and must probe through broadcast joins
+  (the bit table is the small side by construction).
 - The KMV rolling merge must equal the direct sketch of the full window —
   the merge-validity theorem (K smallest of a union are contained in the
   union of per-set K smallest) checked numerically, not just argued.
+- Positional phrase counts must equal a per-doc Python recount.
 """
 
 from __future__ import annotations
@@ -37,6 +41,17 @@ def test_kmv_daily_uses_window_group_limit(spark, sf):
 
     plan = _plan(e.queries()["kmv_distinct_daily"](spark, sf))
     assert "WindowGroupLimit" in plan
+
+
+def test_bloom_no_false_negatives_and_broadcast_probe(spark, sf):
+    import __spark_entry__ as e
+
+    df = e.queries()["bloom_prefilter_audit"](spark, sf)
+    plan = _plan(df)
+    assert "SortMergeJoin" not in plan, "bit/eval tables must broadcast"
+    row = df.collect()[0]
+    assert row["false_neg"] == 0
+    assert row["candidates"] == row["true_pos"] + row["false_pos"]
 
 
 def test_kmv_rolling_merge_equals_direct_window_sketch(spark, sf):
@@ -73,6 +88,29 @@ def test_kmv_rolling_merge_equals_direct_window_sketch(spark, sf):
     assert merged, "no rolling windows emitted"
     for w_end, est in merged.items():
         assert direct_map[w_end] == est, (w_end, direct_map[w_end], est)
+
+
+def test_phrase_occurrences_match_python_recount(spark, sf):
+    import __spark_entry__ as e
+
+    rows = e.queries()["phrase_search_positional"](spark, sf).collect()
+    assert rows
+    doc_ids = sorted({r["doc_id"] for r in rows})
+    docs = {
+        r["doc_id"]: r["text"]
+        for r in spark.read.parquet(os.path.join(sf, "documents.parquet"))
+        .filter(F.col("doc_id").isin(doc_ids))
+        .collect()
+    }
+    for r in rows:
+        toks = [t for t in docs[r["doc_id"]].split(" ") if t]
+        ph = r["phrase"].split(" ")
+        n = sum(
+            1
+            for i in range(len(toks) - len(ph) + 1)
+            if toks[i : i + len(ph)] == ph
+        )
+        assert n == r["occurrences"], (r, n)
 
 
 def test_skew_audit_strategies_cover_thresholds(spark, sf):

@@ -36,6 +36,14 @@ def test_snapshot_diff_op_shape(spark):
     assert ops == {"I", "U", "D"}
 
 
+def test_incoming_dedup_sides_disjoint(spark):
+    rows = S.dedup_incoming_batch(spark, SF).collect()
+    for r in rows:
+        assert r.new_doc % S.INCOMING_MOD == 0
+        assert r.corpus_doc % S.INCOMING_MOD != 0
+        assert r.union_ct >= r.inter_ct >= 0
+
+
 def test_fifo_matching_conserves_mass(spark):
     """Conservation law of FIFO allocation: per user, total matched cents
     equals min(total credits, total debits) — nothing double-allocated,

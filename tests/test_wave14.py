@@ -144,6 +144,28 @@ def test_join_order_recommendation_decision_and_exactness(spark, sf):
         assert r["chosen_by_estimate"] == r["actually_cheaper"]
 
 
+def test_byte_profile_matches_python_recount(spark, sf):
+    import __spark_entry__ as e
+
+    rows = {
+        r["doc_id"]: r
+        for r in e.queries()["multimodal_byte_profile"](spark, sf).collect()
+    }
+    docs = spark.read.parquet(os.path.join(sf, "documents.parquet")).collect()
+    assert len(rows) == len(docs)
+    for d in docs[:50]:
+        b = d["text"].encode("utf-8")
+        r = rows[d["doc_id"]]
+        assert r["n_bytes"] == len(b)
+        assert r["distinct_bytes"] == len(set(b))
+        cnt = Counter(b)
+        top = min(cnt, key=lambda x: (-cnt[x], x))
+        assert (r["top_byte"], r["top_byte_ct"]) == (top, cnt[top])
+        assert r["repeat_pairs"] == sum(
+            1 for i in range(len(b) - 1) if b[i] == b[i + 1]
+        )
+
+
 def test_t_closeness_matches_python_recount(spark, sf):
     from fractions import Fraction
 

@@ -6,6 +6,9 @@ Python recounts — a reference independent of both Spark and the SQL
 oracle (which could share an author's blind spot). Focus is on the
 semantics that are easy to get subtly wrong:
 
+- `pit_training_matrix`: the embargo boundary (a feature dated
+  label_day - EMBARGO must be admissible, label_day itself must not),
+  first-label rows with no history, and multi-label users;
 - `item_cf_recommend`: cap/min-cooc cuts, owned-item exclusion, and the
   two tie-ordered top-K cuts (constants monkeypatched small so tiny
   fixtures actually exercise every cut);
@@ -20,6 +23,7 @@ jobs); hypothesis still finds the edge geometry fixed cases miss.
 from __future__ import annotations
 
 import datetime as dt
+import math
 import os
 import shutil
 import tempfile
@@ -40,6 +44,136 @@ _SETTINGS = dict(
 )
 
 _BASE = dt.datetime(2024, 1, 1)
+
+
+def _cents(v: float) -> int:
+    return int(math.floor(v * 100 + 0.5))
+
+
+def _write_events(d: str, rows) -> None:
+    # rows: (event_id, day_off, user, etype, value)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array(
+                    [_BASE + dt.timedelta(days=r[1], minutes=r[0] % 7) for r in rows],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([r[2] for r in rows], pa.int64()),
+                "event_type": pa.array([r[3] for r in rows]),
+                "value": pa.array([r[4] for r in rows], pa.float64()),
+                "props": pa.array([None] * len(rows), pa.string()),
+            }
+        ),
+        os.path.join(d, "events.parquet"),
+    )
+
+
+@settings(**_SETTINGS)
+@given(
+    ev=st.lists(
+        st.tuples(
+            st.integers(0, 6),  # day offset
+            st.integers(1, 3),  # user
+            st.sampled_from(["view", "purchase"]),
+            st.floats(0.25, 99.0, allow_nan=False, width=32),
+        ),
+        min_size=1,
+        max_size=25,
+    ),
+    orders=st.lists(
+        st.tuples(
+            st.integers(0, 6),  # day offset
+            st.integers(1, 3),  # custkey
+            st.floats(1.0, 500.0, allow_nan=False, width=32),
+        ),
+        max_size=10,
+    ),
+)
+def test_pit_training_matrix_matches_python(spark, ev, orders):
+    from realtimedatawarehouse_self_spark.plans.featurize import (
+        EMBARGO_DAYS,
+        pit_training_matrix,
+    )
+
+    d = tempfile.mkdtemp(prefix="pitprop")
+    try:
+        ev_rows = [
+            (i, day, user, etype, float(v))
+            for i, (day, user, etype, v) in enumerate(ev)
+        ]
+        _write_events(d, ev_rows)
+        pq.write_table(
+            pa.table(
+                {
+                    "o_orderkey": pa.array(range(len(orders)), pa.int64()),
+                    "o_custkey": pa.array([o[1] for o in orders], pa.int64()),
+                    "o_orderstatus": pa.array(["F"] * len(orders)),
+                    "o_totalprice": pa.array(
+                        [float(o[2]) for o in orders], pa.float64()
+                    ),
+                    "o_orderdate": pa.array(
+                        [_BASE + dt.timedelta(days=o[0]) for o in orders],
+                        pa.timestamp("us"),
+                    ),
+                    "o_orderpriority": pa.array(["1-URGENT"] * len(orders)),
+                }
+            ),
+            os.path.join(d, "orders.parquet"),
+        )
+
+        got = sorted(
+            map(tuple, pit_training_matrix(spark, d).collect())
+        )
+
+        # pure-Python recount
+        ev_daily = defaultdict(lambda: [0, 0])  # (user, day) -> [n, cents]
+        labels = defaultdict(lambda: [0, 0])  # (user, day) -> [cents, n]
+        for _i, day, user, etype, v in ev_rows:
+            ev_daily[(user, day)][0] += 1
+            ev_daily[(user, day)][1] += _cents(v)
+            if etype == "purchase":
+                labels[(user, day)][0] += _cents(v)
+                labels[(user, day)][1] += 1
+        ord_daily = defaultdict(lambda: [0, 0])
+        for day, cust, price in orders:
+            ord_daily[(cust, day)][0] += 1
+            ord_daily[(cust, day)][1] += _cents(float(price))
+
+        want = []
+        for (user, lday), (lc, np_) in labels.items():
+            fe_days = [
+                day
+                for (u, day) in ev_daily
+                if u == user and day + EMBARGO_DAYS <= lday
+            ]
+            f_cnt = sum(ev_daily[(user, day)][0] for day in fe_days)
+            f_cents = sum(ev_daily[(user, day)][1] for day in fe_days)
+            age = lday - max(fe_days) if fe_days else -1
+            fo_days = [
+                day
+                for (u, day) in ord_daily
+                if u == user and day + EMBARGO_DAYS <= lday
+            ]
+            o_cnt = sum(ord_daily[(user, day)][0] for day in fo_days)
+            o_cents = sum(ord_daily[(user, day)][1] for day in fo_days)
+            want.append(
+                (
+                    user,
+                    (_BASE + dt.timedelta(days=lday)).strftime("%Y-%m-%d"),
+                    lc,
+                    np_,
+                    f_cnt,
+                    f_cents,
+                    age,
+                    o_cnt,
+                    o_cents,
+                )
+            )
+        assert got == sorted(want)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @settings(**_SETTINGS)
@@ -223,3 +357,148 @@ def test_lpa_matches_python_synchronous_rounds(spark, ev):
         shutil.rmtree(d, ignore_errors=True)
 
 
+@settings(**_SETTINGS)
+@given(
+    docs=st.lists(
+        st.lists(
+            st.sampled_from(["aa", "bb", "cc", "dd", "ee"]),
+            min_size=0,
+            max_size=12,
+        ),
+        min_size=1,
+        max_size=8,
+    )
+)
+def test_cooccurrence_window_pmi_matches_python(spark, docs, monkeypatch):
+    """Window-pair index arithmetic and the exact-rational PMI odds,
+    recounted in pure Python (min-count shrunk so tiny corpora emit)."""
+    from realtimedatawarehouse_self_spark.plans import retrieval
+
+    monkeypatch.setattr(retrieval, "COOC_MIN_CT", 1)
+
+    d = tempfile.mkdtemp(prefix="coocprop")
+    try:
+        texts = [" ".join(toks) for toks in docs]
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(range(len(texts)), pa.int64()),
+                    "text": pa.array(texts),
+                    "lang": pa.array(["en"] * len(texts)),
+                    "source": pa.array(["s"] * len(texts)),
+                    "n_chars": pa.array(
+                        [len(t) for t in texts], pa.int64()
+                    ),
+                }
+            ),
+            os.path.join(d, "documents.parquet"),
+        )
+
+        got = sorted(
+            map(tuple, retrieval.cooccurrence_window_pmi(spark, d).collect())
+        )
+
+        # recount: pairs within window COOC_WINDOW, canonical (min,max),
+        # self-pairs dropped; PMI odds floored exact rational
+        W = retrieval.COOC_WINDOW
+        pairs = []
+        uni = Counter()
+        for toks in docs:
+            uni.update(toks)
+            for i in range(len(toks) - 1):
+                for dd in range(1, min(W, len(toks) - 1 - i) + 1):
+                    a, b = toks[i], toks[i + dd]
+                    if a != b:
+                        pairs.append((min(a, b), max(a, b)))
+        n_pairs = len(pairs)
+        pc = Counter(pairs)
+        scored = [
+            (a, b, c, (retrieval.PMI_SCALE * n_pairs * c) // (uni[a] * uni[b]))
+            for (a, b), c in pc.items()
+            if c >= 1
+        ]
+        scored.sort(key=lambda t: (-t[3], t[0], t[1]))
+        want = sorted(
+            (rank, a, b, c, odds)
+            for rank, (a, b, c, odds) in enumerate(
+                scored[: retrieval.PMI_TOPK], 1
+            )
+        )
+        assert got == sorted(want)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+@settings(**_SETTINGS)
+@given(
+    vecs=st.lists(
+        st.lists(
+            st.floats(-2.0, 2.0, allow_nan=False, width=32),
+            min_size=4,
+            max_size=4,
+        ).filter(lambda v: any(x != 0 for x in v)),
+        min_size=3,
+        max_size=12,
+    )
+)
+def test_hard_negative_mining_matches_python(spark, vecs):
+    """The banded cut and per-anchor top-K, recounted with the same
+    sequential-fold cosine (bit-identical doubles: Spark's aggregate and
+    Python's loop both fold left-to-right)."""
+    from realtimedatawarehouse_self_spark.plans.llm_ops import (
+        HN_HI,
+        HN_K,
+        HN_LO,
+        NUM_QUERY_VECS,
+        hard_negative_mining,
+    )
+
+    d = tempfile.mkdtemp(prefix="hnprop")
+    try:
+        f32 = [[float(pa.scalar(x, pa.float32()).as_py()) for x in v] for v in vecs]
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                    "embedding": pa.array(
+                        vecs, pa.list_(pa.float32())
+                    ),
+                    "label": pa.array([0] * len(vecs), pa.int32()),
+                }
+            ),
+            os.path.join(d, "embeddings.parquet"),
+        )
+
+        got = sorted(
+            map(tuple, hard_negative_mining(spark, d).collect())
+        )
+
+        def dot(a, b):
+            s = 0.0
+            for x, y in zip(a, b):
+                s += x * y
+            return s
+
+        def nsq(a):
+            s = 0.0
+            for x in a:
+                s += x * x
+            return s
+
+        want = []
+        for qid in range(min(NUM_QUERY_VECS, len(f32))):
+            band = []
+            for cid, v in enumerate(f32):
+                if cid == qid:
+                    continue
+                score = dot(f32[qid], v) / (
+                    math.sqrt(nsq(f32[qid])) * math.sqrt(nsq(v))
+                )
+                if HN_LO < score < HN_HI:
+                    band.append((cid, score))
+            band.sort(key=lambda t: (-t[1], t[0]))
+            for rank, (cid, score) in enumerate(band[:HN_K], 1):
+                want.append((qid, rank, cid, score, len(band)))
+        assert got == sorted(want)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)

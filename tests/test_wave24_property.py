@@ -7,10 +7,16 @@ independent of both Spark and the DuckDB oracle. Focus:
 - `pass_at_k_estimator`: the binomial identity itself — the engine
   evaluates falling-factorial products, the recount uses math.comb, so
   an algebra slip in either derivation diverges;
+- `annotator_agreement_kappa`: the chance-correction rational including
+  NEGATIVE kappas (truncation toward zero, not floor) and the pe=1
+  degenerate NULL;
 - `conformal_calibration_audit`: the order-statistic threshold under the
   (score, event_id) total order and the md5 user split;
 - `incremental_join_maintenance`: the four-term delta decomposition must
-  equal a direct Python join for ANY table contents.
+  equal a direct Python join for ANY table contents;
+- `multimodal_phash_dedup`: the banding pigeonhole (Hamming <= 3 pairs
+  MUST share a band) plus exact-duplicate payloads surfacing as
+  hamming-0 dup pairs through the real Arrow path.
 """
 
 from __future__ import annotations
@@ -38,6 +44,12 @@ _SETTINGS = dict(
 MICRO = 1_000_000
 
 
+def _trunc_div(a: int, b: int) -> int:
+    """Integer division truncating toward zero — Spark `div` / DuckDB `//`."""
+    q = abs(a) // abs(b)
+    return -q if (a < 0) != (b < 0) else q
+
+
 def _write_events(d: str, rows) -> None:
     # rows: (event_id, user, etype, value)
     import datetime as dt
@@ -58,6 +70,24 @@ def _write_events(d: str, rows) -> None:
             }
         ),
         os.path.join(d, "events.parquet"),
+    )
+
+
+def _write_documents(d: str, rows) -> None:
+    # rows: (doc_id, text, lang, source)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "text": pa.array([r[1] for r in rows]),
+                "lang": pa.array([r[2] for r in rows]),
+                "source": pa.array([r[3] for r in rows]),
+                "n_chars": pa.array(
+                    [len(r[1]) for r in rows], pa.int64()
+                ),
+            }
+        ),
+        os.path.join(d, "documents.parquet"),
     )
 
 
@@ -122,6 +152,60 @@ def test_pass_at_k_matches_math_comb(spark, ev):
             sum(p1s) // len(p1s),
             (sum(pks) // len(pks)) if pks else None,
         )
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(
+    docs=st.lists(
+        st.tuples(
+            st.integers(1, 12),  # word count -> length label
+            st.integers(1, 3),  # distinct word pool size
+            st.sampled_from(["s0", "s1"]),
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_kappa_matches_exact_rational(spark, docs, monkeypatch):
+    from realtimedatawarehouse_self_spark.plans import experiment as X
+
+    # tiny texts: lower the length rule so label A actually varies
+    monkeypatch.setattr(X, "KAPPA_LEN_THRESH", 12)
+
+    d = tempfile.mkdtemp(prefix="kappaprop")
+    rows = []
+    for i, (n_words, pool, src) in enumerate(docs):
+        words = [f"w{j % pool}" for j in range(n_words)]
+        rows.append((i, " ".join(words), "en", src))
+    _write_documents(d, rows)
+
+    got = {
+        r["source"]: (r["n_docs"], r["n11"], r["n00"], r["kappa_micro"])
+        for r in X.annotator_agreement_kappa(spark, d).collect()
+    }
+
+    cells = defaultdict(lambda: [0, 0, 0, 0, 0])  # src -> N,n11,n00,n10,n01
+    for _i, text, _lang, src in rows:
+        toks = [t for t in text.split(" ") if t]
+        a = int(len(text) >= 12)
+        b = int(len(set(toks)) * X.KAPPA_DIV_DEN >= len(toks) * X.KAPPA_DIV_NUM)
+        c = cells[src]
+        c[0] += 1
+        c[1] += a and b
+        c[2] += (not a) and (not b)
+        c[3] += a and (not b)
+        c[4] += (not a) and b
+    want = {}
+    for src, (n, n11, n00, n10, n01) in cells.items():
+        pe_num = (n11 + n10) * (n11 + n01) + (n00 + n01) * (n00 + n10)
+        den = n * n - pe_num
+        kappa = (
+            _trunc_div((n * (n11 + n00) - pe_num) * MICRO, den)
+            if den != 0
+            else None
+        )
+        want[src] = (n, n11, n00, kappa)
     assert got == want
 
 
@@ -264,6 +348,64 @@ def test_ivm_delta_merge_equals_direct_join(spark, orders, custs):
     assert got == want
 
 
+def test_phash_band_pigeonhole_and_exact_dups(spark):
+    """Two guarantees of the dHash design: (a) pure-math pigeonhole — any
+    pair within Hamming distance PHASH_BANDS - 1 shares at least one of
+    the PHASH_BANDS bands, so the candidate join cannot miss them; (b)
+    end-to-end — exact duplicate payloads produce hamming-0 dup pairs
+    through the real Arrow hash path."""
+    import itertools
+    import random
+
+    from realtimedatawarehouse_self_spark.plans.python_path import (
+        PHASH_BAND_BITS,
+        PHASH_BANDS,
+        multimodal_phash_dedup,
+    )
+
+    # (a) randomized pigeonhole check over the actual band arithmetic
+    rng = random.Random(24)
+    mask = (1 << PHASH_BAND_BITS) - 1
+    nbits = PHASH_BANDS * PHASH_BAND_BITS
+    for _ in range(200):
+        h1 = rng.getrandbits(nbits)
+        flips = rng.sample(range(nbits), rng.randint(0, PHASH_BANDS - 1))
+        h2 = h1
+        for b in flips:
+            h2 ^= 1 << b
+        shared = any(
+            (h1 >> (b * PHASH_BAND_BITS)) & mask
+            == (h2 >> (b * PHASH_BAND_BITS)) & mask
+            for b in range(PHASH_BANDS)
+        )
+        assert shared, (h1, h2, flips)
+
+    # (b) duplicates through the real pipeline
+    d = tempfile.mkdtemp(prefix="phashprop")
+    texts = [
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        "one two three four five six seven eight nine ten eleven",
+        "lorem ipsum dolor sit amet consectetur adipiscing elit sed",
+    ]
+    rows = []
+    i = 0
+    for t in texts:
+        for _copy in range(2):  # two exact copies of each payload
+            rows.append((i, t, "en", "s0"))
+            i += 1
+    _write_documents(d, rows)
+    out = {
+        r["band_idx"]: r for r in multimodal_phash_dedup(spark, d).collect()
+    }
+    total_dups = sum(r["n_dup_pairs"] for r in out.values())
+    # each duplicated text contributes exactly one hamming-0 pair unless
+    # two different texts also collide; at minimum the 3 exact pairs land
+    assert total_dups >= len(texts)
+    assert any(
+        r["min_hamming"] == 0 for r in out.values()
+    ), "exact duplicates must surface as hamming-0 somewhere"
+
+
 def test_passk_numerator_guard_full_success_and_failure(spark):
     """Degenerate endpoints: all attempts succeed (pass@k = 1.0) and all
     fail (pass@k = 0) — the CASE guard for n-c < k must fire exactly."""
@@ -287,3 +429,170 @@ def test_passk_numerator_guard_full_success_and_failure(spark):
     assert r[f"pass_at_{PASS_K}_micro"] == MICRO // 2
 
 
+@settings(**_SETTINGS)
+@given(
+    docs=st.lists(
+        st.tuples(
+            st.integers(1, 6),  # words per doc
+            st.integers(1, 4),  # word pool size
+            st.sampled_from(["en", "de"]),
+            st.sampled_from(["s0", "s1"]),
+        ),
+        min_size=1,
+        max_size=15,
+    )
+)
+def test_dsir_selection_matches_python_replay(spark, docs):
+    """Recount the smoothed-odds scoring, the lower-median threshold
+    under the (score, doc_id) total order, and the per-source yield."""
+    from realtimedatawarehouse_self_spark.plans.corpus_ops import (
+        DSIR_TARGET_LANG,
+        importance_weight_selection,
+    )
+
+    d = tempfile.mkdtemp(prefix="dsirprop")
+    rows = []
+    for i, (n_words, pool, lang, src) in enumerate(docs):
+        words = [f"w{(i + j) % pool}" for j in range(n_words)]
+        rows.append((i, " ".join(words), lang, src))
+    _write_documents(d, rows)
+
+    got = {
+        r["source"]: (
+            r["n_docs"],
+            r["n_selected"],
+            r["avg_score_micro"],
+            r["sel_ppm"],
+        )
+        for r in importance_weight_selection(spark, d).collect()
+    }
+
+    occ = []  # (doc_id, source, word, is_target)
+    for i, text, lang, src in rows:
+        for w in text.split(" "):
+            if w:
+                occ.append((i, src, w, lang == DSIR_TARGET_LANG))
+    raw_ct, tgt_ct = defaultdict(int), defaultdict(int)
+    for _i, _s, w, t in occ:
+        raw_ct[w] += 1
+        tgt_ct[w] += int(t)
+    r_tot, t_tot, v = sum(raw_ct.values()), sum(tgt_ct.values()), len(raw_ct)
+    odds = {
+        w: (tgt_ct[w] + 1) * (r_tot + v) * MICRO
+        // ((raw_ct[w] + 1) * (t_tot + v))
+        for w in raw_ct
+    }
+    per_doc = defaultdict(lambda: [0, 0, None])  # doc -> [sum, n, src]
+    for i, s, w, _t in occ:
+        per_doc[i][0] += odds[w]
+        per_doc[i][1] += 1
+        per_doc[i][2] = s
+    scores = {i: (a // n, s) for i, (a, n, s) in per_doc.items()}
+    ordered = sorted((sc, i) for i, (sc, _s) in scores.items())
+    thr = ordered[(len(ordered) + 1) // 2 - 1][0]
+    want = {}
+    by_src = defaultdict(list)
+    for i, (sc, s) in scores.items():
+        by_src[s].append(sc)
+    for s, scs in by_src.items():
+        n = len(scs)
+        nsel = sum(1 for x in scs if x >= thr)
+        want[s] = (n, nsel, sum(scs) // n, nsel * MICRO // n)
+    assert got == want
+
+
+@settings(**_SETTINGS)
+@given(
+    docs=st.lists(
+        st.tuples(
+            st.lists(
+                st.sampled_from(["ab", "abc", "aab", "bba", "cab"]),
+                min_size=1,
+                max_size=5,
+            ),
+            st.sampled_from(["en", "de"]),
+        ),
+        min_size=1,
+        max_size=10,
+    )
+)
+def test_bpe_apply_fertility_matches_python_replay(spark, docs):
+    """Recount the merge-table training (argmax under (ct DESC, lhs,
+    rhs)) and its application to the distinct-word frame, including the
+    leftmost non-overlapping replace's even-run under-merge."""
+    from realtimedatawarehouse_self_spark.plans.retrieval import (
+        BPE_MERGE_ROUNDS,
+        bpe_apply_fertility,
+    )
+
+    d = tempfile.mkdtemp(prefix="bpeprop")
+    rows = [
+        (i, " ".join(words), lang, "s0")
+        for i, (words, lang) in enumerate(docs)
+    ]
+    _write_documents(d, rows)
+
+    got = {
+        r["lang"]: (
+            r["n_vocab"],
+            r["n_tokens"],
+            r["sum_symbols"],
+            r["fertility_micro"],
+            r["compression_micro"],
+        )
+        for r in bpe_apply_fertility(spark, d).collect()
+    }
+
+    wl = defaultdict(int)  # (lang, word) -> freq
+    for _i, text, lang, _s in rows:
+        for w in text.split(" "):
+            if w:
+                wl[(lang, w)] += 1
+    wf = defaultdict(int)
+    for (_l, w), f in wl.items():
+        wf[w] += f
+
+    def sym0(w):
+        return " " + " ".join(w) + " "
+
+    vocab = {sym0(w): f for w, f in wf.items()}
+
+    def top_pair(vb):
+        cts = defaultdict(int)
+        for sym, f in vb.items():
+            parts = sym.split()
+            for a, b in zip(parts, parts[1:]):
+                cts[(a, b)] += f
+        if not cts:
+            return None
+        return min((-n, a, b) for (a, b), n in cts.items())[1:]
+
+    merges = []
+    cur = dict(vocab)
+    for _ in range(BPE_MERGE_ROUNDS):
+        tp = top_pair(cur)
+        if tp is None:
+            break
+        merges.append(tp)
+        a, b = tp
+        cur = {
+            s.replace(f" {a} {b} ", f" {a}{b} "): f for s, f in cur.items()
+        }
+
+    def n_sym(w):
+        s = sym0(w)
+        for a, b in merges:
+            s = s.replace(f" {a} {b} ", f" {a}{b} ")
+        return len(s.split())
+
+    want = {}
+    per_lang = defaultdict(lambda: [0, 0, 0, 0])  # vocab,tok,sym,chars
+    for (lang, w), f in wl.items():
+        a = per_lang[lang]
+        a[0] += 1
+        a[1] += f
+        a[2] += f * n_sym(w)
+        a[3] += f * len(w)
+    for lang, (nv, nt, ns, nc) in per_lang.items():
+        want[lang] = (nv, nt, ns, ns * MICRO // nt, ns * MICRO // nc)
+    assert got == want
