@@ -43,15 +43,6 @@ def cents_amount(col) -> Column:
     return c.cast("double") / F.lit(100.0)
 
 
-# SQL (DuckDB) twins of money_cents / cents_amount — keep in lockstep.
-def sql_money_cents(expr: str) -> str:
-    return f"CAST(floor(({expr}) * 100 + 0.5) AS BIGINT)"
-
-
-def sql_cents_amount(expr: str) -> str:
-    return f"CAST({expr} AS DOUBLE) / 100.0"
-
-
 INT64_MAX = (1 << 63) - 1
 INT64_MIN = -(1 << 63)
 

@@ -1,17 +1,23 @@
 """Oracle-gated queries that execute REAL Structured Streaming jobs.
 
-Each callable materializes the events table as a file-stream source, runs a
-streaming pipeline with ``availableNow`` triggers (data batch, then a
-far-future flush row so every event-time window closes under the append-mode
-watermark contract — see tests/test_streaming.py), and returns the sink's
-contents. The driver's DuckDB comparison therefore validates an actual
-streaming execution — watermark, window state, and (for the UV query) a
-chained dedup -> windowed-agg stateful pipeline — not just a batch twin.
+Every twin runs through ``_MicroBatchStage``: it stages its input as
+parquet slices with strictly increasing mtimes, runs ONE ``availableNow``
+query over them with ``maxFilesPerTrigger=1`` (slice ``i`` is micro-batch
+``i``; only the config-swap twin resumes its query once, on purpose), and
+returns the sink's contents. The driver's DuckDB comparison
+therefore validates an actual streaming execution — watermark, window and
+join state, keyed custom state — not just a batch twin.
+
+Event-time twins (windows, sessions, stream-stream joins) stage all events
+as ONE data slice followed by a far-future flush slice: the flush row
+advances the watermark past every real window / join horizon, so append
+mode emits every result (see tests/test_streaming.py), and it is filtered
+from the result.
 
 Determinism notes:
-- all real data arrives in trigger 1, when the watermark is still unset, so
-  nothing is late-dropped; the flush row (trigger 2) advances the watermark
-  past every real window and is filtered from the result;
+- all real data arrives in micro-batch 0, when the watermark is still
+  unset, so nothing is late-dropped; the flush batch that follows moves
+  the watermark past every real window;
 - the UV dedup keys include the day-truncated event time and the downstream
   aggregation groups by that same column, so *which* row of a dedup group
   survives cannot affect the result (arbitrary-survivor dedup made
@@ -41,6 +47,9 @@ from realtimedatawarehouse_self_spark.functions.exprs import (
 )
 from realtimedatawarehouse_self_spark.session import apply_runtime_confs
 from realtimedatawarehouse_self_spark.sources.tables import load_table
+from realtimedatawarehouse_self_spark.streaming.pipelines import (
+    dws_pv_window_stream,
+)
 
 FLUSH_TYPE = "__flush__"
 STREAM_TIMEOUT_S = 300
@@ -60,29 +69,38 @@ def _await_or_raise(q, timeout_s: int = STREAM_TIMEOUT_S) -> None:
 
 
 @contextlib.contextmanager
-def _twin_confs(spark: SparkSession, shuffle: str = "8"):
+def _twin_confs(spark: SparkSession):
     """Per-twin session confs: apply the engine's runtime confs, then pin
-    shuffle partitions low for the tiny per-micro-batch frames (state-store
-    instances scale with shuffle partitions; 32 would be pure overhead
-    here), restoring the caller's setting afterwards."""
+    ONE shuffle partition for the tiny per-micro-batch frames, restoring
+    the caller's setting afterwards. Every stateful operator keeps one
+    state store per shuffle partition and writes a delta file for each on
+    every batch; one partition instead of 8 cut a 6-batch twin from 10.9 s
+    to 6.6 s and a 31-batch twin from 24.0 s to 18.3 s (4-vCPU host,
+    sf0.001), with identical rows."""
     apply_runtime_confs(spark)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _has_parquet(path: str) -> bool:
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") for f in os.listdir(path)
+    )
+
+
 class _MicroBatchStage:
-    """Shared micro-batch feeder for the streaming twins (VERDICT r6 #7 —
-    this staging/stamping logic used to be repeated in seven twins).
+    """The one micro-batch harness of the streaming twins: stage input
+    slices, run ONE availableNow query over them, read the result.
 
     FileStreamSource orders files by MODIFICATION TIME; every staged slice
     is utime-stamped strictly later than the previous one, so with
     ``maxFilesPerTrigger=1`` slice ``i`` IS micro-batch ``i`` — the
     property every twin's oracle derives its batch-sequence arithmetic
-    from. A sentinel slice (``stage_sentinel``) is stamped strictly after
+    from. Sentinel slices (``stage_sentinel``) are stamped strictly after
     ALL staged slices, including ones staged at explicit out-of-order
     ``seq`` slots (the late-drop twin). The sentinel-TYPING contract
     (real event types, sentinel keys — Catalyst pushes type predicates
@@ -106,22 +124,20 @@ class _MicroBatchStage:
         ``seq`` (default: next unused slot)."""
         if seq is None:
             seq = self._next_seq
-        part = os.path.join(self.src, f"g{seq:05d}")
-        df.coalesce(1).write.parquet(part)
-        self._stamp(part, seq)
-        self._next_seq = max(self._next_seq, seq + 1)
+        self._write(df, f"g{seq:05d}", seq)
 
     def stage_sentinel(self, df: DataFrame) -> None:
-        """Write the flush slice, mtime-stamped strictly last."""
-        part = os.path.join(self.src, "zz_flush")
-        df.coalesce(1).write.parquet(part)
-        self._stamp(part, self._next_seq)
-        self._next_seq += 1
+        """Write a flush slice, mtime-stamped strictly after every slice
+        staged so far (call again for a second flush batch)."""
+        self._write(df, f"zz_flush{self._next_seq:05d}", self._next_seq)
 
-    def _stamp(self, part: str, seq: int) -> None:
+    def _write(self, df: DataFrame, name: str, seq: int) -> None:
+        part = os.path.join(self.src, name)
+        df.coalesce(1).write.parquet(part)
         ts = self._t0 + seq * 10
         for fname in os.listdir(part):
             os.utime(os.path.join(part, fname), (ts, ts))
+        self._next_seq = max(self._next_seq, seq + 1)
 
     def read_stream(self, spark: SparkSession, schema) -> DataFrame:
         return (
@@ -130,41 +146,77 @@ class _MicroBatchStage:
             .parquet(os.path.join(self.src, "*"))
         )
 
-    def run_to_parquet(self, spark: SparkSession, stream_df: DataFrame) -> DataFrame:
-        """Run the transformed stream to the parquet sink (availableNow,
-        append mode) and return the sink's contents."""
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", self.out)
+    def _run(self, stream_df: DataFrame, output_mode: str, sink) -> bool:
+        """Run ``stream_df`` to ``sink`` (a DataStreamWriter -> writer
+        function) under ONE availableNow query; False (and no query) when
+        nothing was staged."""
+        if not self._next_seq:
+            return False
+        writer = (
+            stream_df.writeStream.outputMode(output_mode)
             .option("checkpointLocation", self.cp)
             .trigger(availableNow=True)
-            .start()
         )
-        _await_or_raise(q)
-        return spark.read.parquet(self.out)
+        _await_or_raise(sink(writer).start())
+        return True
+
+    def run_to_parquet(self, spark: SparkSession, stream_df: DataFrame) -> DataFrame:
+        """Run the transformed stream to the parquet sink (append mode)
+        and return the sink's contents — an empty frame of the stream's
+        schema when nothing was staged or nothing was written."""
+        ran = self._run(
+            stream_df,
+            "append",
+            lambda w: w.format("parquet").option("path", self.out),
+        )
+        if ran and _has_parquet(self.out):
+            return spark.read.parquet(self.out)
+        return spark.createDataFrame([], stream_df.schema)
+
+    def run_foreach_batch(
+        self, stream_df: DataFrame, fn, output_mode: str = "append"
+    ) -> None:
+        """Run the stream with ``fn(batch_df, batch_id)`` as the sink; a
+        no-op when nothing was staged."""
+        self._run(stream_df, output_mode, lambda w: w.foreachBatch(fn))
 
 
 def _day_groups(days: list, per_batch: int) -> list[list]:
     return [days[i : i + per_batch] for i in range(0, len(days), per_batch)]
 
 
-def _run_stream(
-    spark: SparkSession, sf_dir: str, build, flush_filter=None,
-    double_flush: bool = False, flush_types=(FLUSH_TYPE,),
-) -> DataFrame:
-    """events -> file stream -> `build(stream)` -> parquet sink -> DataFrame.
+def _stage_ranges(stage: _MicroBatchStage, df: DataFrame, col: str, n: int) -> None:
+    """Stage ``df`` as ``n`` equal-width ascending ranges of ``col``: slice
+    ``i`` holds strictly smaller values than slice ``i + 1`` (the arrival
+    order the keyed-state twins rely on). An empty ``df`` stages nothing."""
+    lo, hi = df.agg(F.min(col), F.max(col)).first()
+    if lo is None:
+        return
+    step = (hi - lo) // n + 1
+    for b in range(n):
+        stage.stage_slice(
+            df.filter(
+                (F.col(col) >= lo + b * step) & (F.col(col) < lo + (b + 1) * step)
+            )
+        )
 
-    ``flush_filter``: predicate removing the flush row from the sink output
+
+def _events_stream(
+    spark: SparkSession, sf_dir: str, build, flush_filter=None,
+    flush_types=(FLUSH_TYPE,),
+) -> DataFrame:
+    """events -> ONE data slice + one flush slice -> one availableNow query
+    over `build(stream)` -> parquet sink -> DataFrame.
+
+    Window emission and join-state eviction (which is what emits outer
+    joins' null-extended rows) both use the watermark as of batch START, so
+    the flush batch itself only moves the watermark; the no-data batch the
+    same query runs right after it emits every remaining window and
+    null-extended row.
+
+    ``flush_filter``: predicate removing the flush rows from the sink output
     (default: ``event_type != FLUSH_TYPE``; pipelines that drop the
     event_type column filter on the sentinel user_id instead).
-
-    ``double_flush``: append a SECOND flush row and run a third trigger.
-    Needed by stream-stream OUTER joins: join-state eviction (which is
-    what emits null-extended rows) uses the watermark as of batch START,
-    whereas windowed aggregations emit with the end-of-batch watermark —
-    so a join twin's final-horizon rows only surface in the batch AFTER
-    the one that read the first flush row.
 
     ``flush_types``: event_type value(s) stamped on each flush row.
     Pipelines that filter the stream by event_type BEFORE joining need
@@ -173,65 +225,36 @@ def _run_stream(
     below the EventTimeWatermark operator, so a sentinel with a synthetic
     type is filtered out before the watermark node ever sees it and the
     watermark silently never advances (measured: stuck at
-    last-real-row - delay; found by this twin's missing final-horizon
-    rows)."""
+    last-real-row - delay; found by streaming_abandoned_views' missing
+    final-horizon rows)."""
     with _twin_confs(spark):
-        base = tempfile.mkdtemp(prefix="rtdw-stream-")
-        src, out, cp = (os.path.join(base, d) for d in ("src", "out", "cp"))
-
+        stage = _MicroBatchStage("rtdw-stream-")
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
-        events.coalesce(1).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        max_ts = events.agg(F.max("ts")).collect()[0][0]
-        if max_ts is None:
-            # empty source (a day with no events): any sentinel timestamp
-            # works — there are no real windows for the flush to close
-            max_ts = dt.datetime(1970, 1, 1)
-
-        def trigger():
-            stream = spark.readStream.schema(schema).parquet(src)
-            q = (
-                build(stream)
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", cp)
-                .trigger(availableNow=True)
-                .start()
+        n, max_ts = events.agg(F.count(F.lit(1)), F.max("ts")).first()
+        # no events: nothing is staged, so run_to_parquet returns the typed
+        # empty frame without starting a query
+        if n:
+            # only NULL timestamps: any sentinel time works — there are no
+            # real windows for the flush to close
+            max_ts = max_ts or dt.datetime(1970, 1, 1)
+            stage.stage_slice(events)  # watermark unset: nothing late-dropped
+            stage.stage_sentinel(
+                spark.createDataFrame(
+                    [
+                        (-1 - i, max_ts + dt.timedelta(days=3), -1, ft, 0.0)
+                        for i, ft in enumerate(flush_types)
+                    ],
+                    events.schema,
+                )
             )
-            _await_or_raise(q)
-
-        trigger()  # data batch (watermark unset: nothing late-dropped)
-        flush = spark.createDataFrame(
-            [
-                (int(-1 - i), max_ts + dt.timedelta(days=3), int(-1), ft, 0.0)
-                for i, ft in enumerate(flush_types)
-            ],
-            schema,
+        sunk = stage.run_to_parquet(
+            spark, build(stage.read_stream(spark, events.schema))
         )
-        flush.coalesce(1).write.mode("append").parquet(src)
-        trigger()  # flush batch: watermark passes every real window
-        if double_flush:
-            flush2 = spark.createDataFrame(
-                [
-                    (
-                        int(-100 - i),
-                        max_ts + dt.timedelta(days=6),
-                        int(-1),
-                        ft,
-                        0.0,
-                    )
-                    for i, ft in enumerate(flush_types)
-                ],
-                schema,
-            )
-            flush2.coalesce(1).write.mode("append").parquet(src)
-            trigger()  # eviction batch: STARTS with the flush-1 watermark
         if flush_filter is None:
             flush_filter = F.col("event_type") != FLUSH_TYPE
-        return spark.read.parquet(out).filter(flush_filter)
+        return sunk.filter(flush_filter)
 
 
 # ---------------------------------------------------------------------------
@@ -239,19 +262,7 @@ def _run_stream(
 # Dws02 pv/dur leg executed as a streaming job; A1/A8/W1/W3).
 # ---------------------------------------------------------------------------
 def streaming_pv_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build(stream: DataFrame) -> DataFrame:
-        return (
-            stream.withColumn("v", money_cents("value"))
-            .withWatermark("ts", "2 seconds")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count(F.lit(1)).alias("pv_ct"),
-                cents_amount(F.sum("v")).alias("dur_sum"),
-            )
-            .select(*window_bounds("w"), "event_type", "pv_ct", "dur_sum")
-        )
-
-    return _run_stream(spark, sf_dir, build)
+    return _events_stream(spark, sf_dir, dws_pv_window_stream)
 
 
 _PV_SQL = """
@@ -283,7 +294,7 @@ def streaming_uv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(*window_bounds("w"), "event_type", "uv_ct")
         )
 
-    return _run_stream(spark, sf_dir, build)
+    return _events_stream(spark, sf_dir, build)
 
 
 _UV_SQL = """
@@ -325,7 +336,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _run_stream(
+    return _events_stream(
         spark, sf_dir, build, flush_filter=F.col("user_id") >= 0
     )
 
@@ -393,7 +404,7 @@ def streaming_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents_amount(F.col("p_cents")).alias("purchase_value"),
         )
 
-    return _run_stream(
+    return _events_stream(
         spark, sf_dir, build, flush_filter=F.col("user_id") >= 0
     )
 
@@ -431,7 +442,7 @@ WHERE v.event_type = 'view' AND p.event_type = 'purchase'
 # Catalyst pushes the deterministic event_type filter below the
 # EventTimeWatermark node, so a synthetic-typed sentinel is gone before
 # the watermark operator sees it and the watermark silently freezes at
-# last-real-row − delay (see _run_stream's flush_types docstring; this
+# last-real-row − delay (see _events_stream's flush_types docstring; this
 # twin is where that was measured). The typed sentinels match nothing:
 # flush view/purchase share one timestamp, and p_ts > v_ts is strict.
 # ---------------------------------------------------------------------------
@@ -474,9 +485,9 @@ def streaming_abandoned_views(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("v_ts", "yyyy-MM-dd HH:mm:ss").alias("view_ts"),
         )
 
-    return _run_stream(
+    return _events_stream(
         spark, sf_dir, build, flush_filter=F.col("user_id") >= 0,
-        double_flush=True, flush_types=("view", "purchase"),
+        flush_types=("view", "purchase"),
     )
 
 
@@ -515,30 +526,25 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.streaming.sinks import upsert_parquet
 
     with _twin_confs(spark):
-        base = tempfile.mkdtemp(prefix="rtdw-incr-")
-        src, store, cp = (os.path.join(base, d) for d in ("src", "store", "cp"))
+        stage = _MicroBatchStage("rtdw-incr-", extra_dirs=("store",))
+        store = stage.store
         events = load_table(spark, sf_dir, "events").select(
             "ts", "event_type", "value"
         )
-        # 4 source files -> 4 micro-batches -> 4 delta merges into the store
-        events.repartition(4).write.parquet(src)
-        schema = spark.read.parquet(src).schema
-
-        from realtimedatawarehouse_self_spark.streaming.sinks import (
-            read_table_meta,
-        )
+        # 4 slices -> 4 micro-batches -> 4 delta merges into the store
+        for i in range(4):
+            stage.stage_slice(
+                events.filter(F.pmod(F.hash("ts", "event_type"), F.lit(4)) == i)
+            )
 
         # Additive merges are not idempotent under foreachBatch replay.
         # The batch-id high-water mark is committed INSIDE the upsert's
-        # atomic swap (`meta=`), so there is no crash window between "data
-        # merged" and "mark advanced" — a replayed batch is skipped iff its
+        # atomic swap (`meta=`), and the upsert skips a batch at or below
+        # it under its table lock — a replayed batch is skipped iff its
         # merge actually committed. (For sinks without transactional meta,
         # `sinks.batch_id_guard` is the standalone recipe, with a
         # documented one-replay window.)
         def merge(batch_df: DataFrame, batch_id: int) -> None:
-            seen = read_table_meta(store)
-            if seen is not None and batch_id <= seen["batch_id"]:
-                return  # replayed batch: its merge already committed
             sess = batch_df.sparkSession
             part = batch_df.groupBy(
                 F.date_trunc("hour", "ts").alias("h"), "event_type"
@@ -569,16 +575,7 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 meta={"batch_id": batch_id},
             )
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
+        stage.run_foreach_batch(stage.read_stream(spark, events.schema), merge)
         return spark.read.parquet(store).select(
             F.date_format("h", TS_FMT).alias("hour_ts"),
             "event_type",
@@ -636,14 +633,6 @@ def streaming_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .persist()
             )
             days = sorted(r[0] for r in events.select("day").distinct().collect())
-            if not days:
-                # empty source: no files to stream — typed empty frame
-                return spark.createDataFrame(
-                    [],
-                    "event_type string, day string, ct bigint, "
-                    "ewma_micro bigint, deviation_micro bigint, "
-                    "is_anomaly bigint",
-                )
             for grp in _day_groups(days, EWMA_DAYS_PER_BATCH):
                 stage.stage_slice(events.filter(F.col("day").isin(grp)))
             sunk = stage.run_to_parquet(
@@ -724,13 +713,6 @@ def streaming_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             days = sorted(
                 r[0] for r in events.select("day").distinct().collect()
             )
-            if not days:
-                return spark.createDataFrame(
-                    [],
-                    "event_type string, day string, ct bigint, "
-                    "cusum_up_micro bigint, cusum_dn_micro bigint, "
-                    "alarm bigint",
-                )
             for grp in _day_groups(days, EWMA_DAYS_PER_BATCH):
                 stage.stage_slice(events.filter(F.col("day").isin(grp)))
             return stage.run_to_parquet(
@@ -764,9 +746,8 @@ def _cusum_stream_sql() -> str:
 # silently drops). Both null-extension directions ride state EVICTION:
 # a side's unmatched row surfaces only when the OTHER side's watermark
 # passes its horizon, so this twin exercises two-sided eviction timing —
-# hence double_flush (eviction uses the batch-START watermark) and
-# REAL-typed sentinels (Catalyst pushes the type filter below the
-# EventTimeWatermark node; see _run_stream's flush_types docstring).
+# hence REAL-typed sentinels (Catalyst pushes the type filter below the
+# EventTimeWatermark node; see _events_stream's flush_types docstring).
 # Sentinels share one timestamp and p_ts > v_ts is strict, so they match
 # nothing and exit as user -1 null-extended rows, dropped by the filter.
 # ---------------------------------------------------------------------------
@@ -818,9 +799,9 @@ def streaming_reconcile_full_outer(
             .alias("match_kind"),
         )
 
-    return _run_stream(
+    return _events_stream(
         spark, sf_dir, build, flush_filter=F.col("user_id") >= 0,
-        double_flush=True, flush_types=("view", "purchase"),
+        flush_types=("view", "purchase"),
     )
 
 
@@ -886,12 +867,6 @@ def streaming_topk_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             days = sorted(
                 r[0] for r in events.select("day").distinct().collect() if r[0]
             )
-            if not days:
-                return spark.createDataFrame(
-                    [],
-                    "event_type string, user_id bigint, event_ct bigint, "
-                    "share_micro bigint",
-                )
             for grp in _day_groups(days, EWMA_DAYS_PER_BATCH):
                 stage.stage_slice(
                     events.filter(F.col("day").isin(grp)).select(
@@ -1097,24 +1072,14 @@ def streaming_dedup_incoming(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 res.write.mode("append").parquet(stage.out)
 
-            q = (
+            # every slice is staged (empty ones too), so every batch runs
+            # `process` and the sink holds at least one typed file
+            stage.run_foreach_batch(
                 stage.read_stream(
                     spark, "doc_id bigint, text string, lang string"
-                )
-                .writeStream.foreachBatch(process)
-                .option("checkpointLocation", stage.cp)
-                .trigger(availableNow=True)
-                .start()
+                ),
+                process,
             )
-            _await_or_raise(q)
-            if not os.path.isdir(stage.out) or not any(
-                f.endswith(".parquet") for f in os.listdir(stage.out)
-            ):
-                return spark.createDataFrame(
-                    [],
-                    "new_doc bigint, corpus_doc bigint, inter_ct bigint, "
-                    "union_ct bigint, is_dup boolean",
-                )
             return spark.read.parquet(stage.out).select(
                 "new_doc", "corpus_doc", "inter_ct", "union_ct", "is_dup"
             )
@@ -1225,7 +1190,7 @@ def streaming_funnel_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
             cents_amount(F.col("p_cents")).alias("purchase_value"),
         )
 
-    return _run_stream(
+    return _events_stream(
         spark,
         sf_dir,
         build,
@@ -1315,17 +1280,11 @@ def streaming_late_drop_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (r["day"], r["shard"])
                 for r in ev.select("day", "shard").distinct().collect()
             )
-            if not pairs:
-                return spark.createDataFrame(
-                    [], "win_start string, event_type string, ct bigint"
-                )
-            max_ts = ev.agg(F.max("ts")).collect()[0][0]
-            d0 = dt.date.fromisoformat(pairs[0][0])
             # delivery slot: shard-0 of day i at 2i, its straggler shard-1
             # at 2i+3 — the same arithmetic the oracle derives from date
             # diffs
             for d, s in pairs:
-                i = (dt.date.fromisoformat(d) - d0).days
+                i = (dt.date.fromisoformat(d) - dt.date.fromisoformat(pairs[0][0])).days
                 seq = 2 * i + (0 if s == 0 else _LATE_STRAGGLER_OFFSET)
                 stage.stage_slice(
                     ev.filter(
@@ -1333,12 +1292,14 @@ def streaming_late_drop_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ).select("ts", "event_type"),
                     seq=seq,
                 )
-            stage.stage_sentinel(
-                spark.createDataFrame(
-                    [(max_ts + dt.timedelta(days=3), FLUSH_TYPE)],
-                    "ts timestamp, event_type string",
+            if pairs:
+                max_ts = ev.agg(F.max("ts")).first()[0]
+                stage.stage_sentinel(
+                    spark.createDataFrame(
+                        [(max_ts + dt.timedelta(days=3), FLUSH_TYPE)],
+                        "ts timestamp, event_type string",
+                    )
                 )
-            )
             sunk = stage.run_to_parquet(
                 spark,
                 stage.read_stream(spark, "ts timestamp, event_type string")
@@ -1445,10 +1406,6 @@ def streaming_dedup_within_watermark(
             days = sorted(
                 r[0] for r in daily.select("day").distinct().collect()
             )
-            if not days:
-                return spark.createDataFrame(
-                    [], "user_id bigint, emit_ts string"
-                )
             for d in days:
                 stage.stage_slice(
                     daily.filter(F.col("day") == d).select("ts", "user_id")
@@ -1486,8 +1443,6 @@ _CFG_V2 = (("view", "t_view"), ("purchase", "t_trade_v2"), ("click", "t_click"))
 
 
 def streaming_config_swap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
     ev = None
     with _twin_confs(spark):
         try:
@@ -1508,6 +1463,9 @@ def streaming_config_swap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             days = sorted(r[0] for r in ev.select("day").distinct().collect())
             if not days:
+                # nothing to stage, so the sink never runs: its output
+                # (batch joined to the rule table) has no stream to take
+                # a schema from
                 return spark.createDataFrame(
                     [],
                     "day string, event_type string, route string, ct bigint",
@@ -1528,24 +1486,16 @@ def streaming_config_swap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .parquet(stage.out)
                 )
 
-            def run():
-                q = (
-                    stage.read_stream(spark, "day string, event_type string")
-                    .writeStream.foreachBatch(route_batch)
-                    .option("checkpointLocation", stage.cp)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                _await_or_raise(q)
-
+            stream = stage.read_stream(spark, "day string, event_type string")
             write_rules(_CFG_V1)
             for d in days[:split]:
                 stage.stage_slice(ev.filter(F.col("day") == d))
-            run()
+            stage.run_foreach_batch(stream, route_batch)
             write_rules(_CFG_V2)
             for d in days[split:]:
                 stage.stage_slice(ev.filter(F.col("day") == d))
-            run()  # resume from the same checkpoint under the swapped rules
+            # resume from the same checkpoint under the swapped rules
+            stage.run_foreach_batch(stream, route_batch)
             return (
                 spark.read.parquet(stage.out)
                 .groupBy("day", "event_type", "route")
@@ -1674,12 +1624,6 @@ def streaming_kmv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .distinct()
                 .persist()
             )
-            if not dh.take(1):
-                return spark.createDataFrame(
-                    [],
-                    "d string, exact_users bigint, kmv_users bigint, "
-                    "err_ppm bigint",
-                )
             for i in range(KMV_STREAM_SLICES):
                 stage.stage_slice(
                     dh.filter(F.col("h") % KMV_STREAM_SLICES == i).select(
@@ -1750,10 +1694,7 @@ def streaming_cdc_apply_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.sources.envelopes import (
         parse_maxwell,
     )
-    from realtimedatawarehouse_self_spark.streaming.sinks import (
-        read_table_meta,
-        upsert_parquet,
-    )
+    from realtimedatawarehouse_self_spark.streaming.sinks import upsert_parquet
 
     with _twin_confs(spark):
         stage = _MicroBatchStage("rtdw-cdc-", extra_dirs=("store",))
@@ -1801,9 +1742,6 @@ def streaming_cdc_apply_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            seen = read_table_meta(store)
-            if seen is not None and batch_id <= seen["batch_id"]:
-                return  # replayed batch: its merge already committed
             rows = parse_maxwell(batch_df).select(
                 F.element_at("data", "id").cast("bigint").alias("order_id"),
                 F.element_at("data", "status").alias("status"),
@@ -1823,20 +1761,10 @@ def streaming_cdc_apply_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 delete_col="is_delete",
             )
 
-        q = (
-            stage.read_stream(spark, "value string")
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", stage.cp)
-            .trigger(availableNow=True)
-            .start()
+        # both slices are always staged, so the store is always written
+        stage.run_foreach_batch(
+            stage.read_stream(spark, "value string"), apply_batch
         )
-        _await_or_raise(q)
-        if not os.path.isdir(store):
-            return spark.createDataFrame(
-                [],
-                "order_id bigint, status string, total_cents bigint, "
-                "last_seq bigint",
-            )
         return spark.read.parquet(store).select(
             "order_id", "status", "total_cents", "last_seq"
         )
@@ -1892,12 +1820,6 @@ def streaming_hll_merge_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             stage = _MicroBatchStage("rtdw-hll-")
             dh = _daily_hashes(spark, sf_dir).persist()
-            if not dh.take(1):
-                return spark.createDataFrame(
-                    [],
-                    "day string, exact_users bigint, hll_users bigint, "
-                    "err_ppm bigint, occupied_regs bigint",
-                )
             dr = dh.select(
                 F.date_format("d", "yyyy-MM-dd").alias("day"),
                 F.expr(f"h div {_HLL_POW_REST}").alias("reg"),
@@ -2047,10 +1969,7 @@ IVM_STREAM_SLICES = 3
 
 def streaming_ivm_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.functions.exprs import money_cents
-    from realtimedatawarehouse_self_spark.streaming.sinks import (
-        read_table_meta,
-        upsert_parquet,
-    )
+    from realtimedatawarehouse_self_spark.streaming.sinks import upsert_parquet
 
     with _twin_confs(spark):
         stage = _MicroBatchStage("rtdw-ivm-", extra_dirs=("store",))
@@ -2073,9 +1992,6 @@ def streaming_ivm_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def merge(batch_df: DataFrame, batch_id: int) -> None:
-            seen = read_table_meta(store)
-            if seen is not None and batch_id <= seen["batch_id"]:
-                return  # replayed batch: its merge already committed
             sess = batch_df.sparkSession
             part = (
                 batch_df.join(
@@ -2125,14 +2041,7 @@ def streaming_ivm_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         schema = "o_orderkey bigint, o_custkey bigint, cents bigint"
-        q = (
-            stage.read_stream(spark, schema)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", stage.cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
+        stage.run_foreach_batch(stage.read_stream(spark, schema), merge)
         return spark.read.parquet(store).select(
             "c_nationkey", "n_orders", "total_cents", "n_batches"
         )
@@ -2208,14 +2117,7 @@ def streaming_update_mode_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("day", "event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cum_events"))
         )
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", stage.cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
+        stage.run_foreach_batch(agg, sink, output_mode="update")
         ev.unpersist()
         return spark.read.parquet(out_rows).select(
             "day", "event_type", "batch_seq", "cum_events"
@@ -2299,14 +2201,7 @@ def streaming_complete_mode_twin(
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("bigint").alias("cum_events"))
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .option("checkpointLocation", stage.cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
+        stage.run_foreach_batch(agg, sink, output_mode="complete")
         ev.unpersist()
         return spark.read.parquet(out_rows).select(
             "event_type", "batch_seq", "cum_events"
@@ -2371,24 +2266,10 @@ def streaming_domain_cap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("host", F.expr(_HOST_EXPR))
             .select("host", F.col("doc_id").cast("long").alias("doc_id"))
         )
-        lo_hi = docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        if lo_hi["lo"] is None:
-            return spark.createDataFrame(
-                [], "host string, doc_id long, admit_seq long"
-            )
         stage = _MicroBatchStage("rtdw-domcap-")
-        lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
         # ascending doc_id ranges → batch i holds strictly smaller ids
         # than batch i+1 (the feeder's half of the arrival contract)
-        step = (hi - lo) // DOMCAP_BATCHES + 1
-        for b in range(DOMCAP_BATCHES):
-            part = docs.filter(
-                (F.col("doc_id") >= lo + b * step)
-                & (F.col("doc_id") < lo + (b + 1) * step)
-            )
-            stage.stage_slice(part)
+        _stage_ranges(stage, docs, "doc_id", DOMCAP_BATCHES)
         schema = "host string, doc_id long"
         return stage.run_to_parquet(
             spark,
@@ -2467,13 +2348,6 @@ def streaming_episode_return_twin(
                 )
                 .persist()
             )
-            if events.limit(1).count() == 0:
-                return spark.createDataFrame(
-                    [],
-                    "user_id bigint, day string, n_steps bigint, "
-                    "total_reward_cents bigint, "
-                    "discounted_return_cents bigint",
-                )
             # three hour bands, staged in order: every key's later-hour
             # rows land in strictly later micro-batches
             for lo in range(0, 24, EPISODE_HOUR_BAND):
@@ -2561,25 +2435,8 @@ def streaming_chunk_owner_twin(
                 .select("chunk_md5", F.col("doc_id").cast("long"))
                 .persist()
             )
-            lo_hi = chunks.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).collect()[0]
-            if lo_hi["lo"] is None:
-                return spark.createDataFrame(
-                    [],
-                    "chunk_md5 string, owner_doc long, n_docs long, "
-                    "n_occurrences long",
-                )
             stage = _MicroBatchStage("rtdw-chunkown-")
-            lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
-            step = (hi - lo) // CHUNK_OWNER_BATCHES + 1
-            for b in range(CHUNK_OWNER_BATCHES):
-                stage.stage_slice(
-                    chunks.filter(
-                        (F.col("doc_id") >= lo + b * step)
-                        & (F.col("doc_id") < lo + (b + 1) * step)
-                    )
-                )
+            _stage_ranges(stage, chunks, "doc_id", CHUNK_OWNER_BATCHES)
             sunk = stage.run_to_parquet(
                 spark,
                 chunk_owner_election(
@@ -2666,17 +2523,12 @@ def streaming_vocab_growth_twin(
                 .filter(F.size("tok_arr") >= 1)
                 .select("doc_id", "tok_arr")
             )
-            lo_hi = docs.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).collect()[0]
-            if lo_hi["lo"] is None:
-                return spark.createDataFrame(
-                    [],
-                    "band int, n_docs bigint, band_tokens bigint, "
-                    "cum_tokens bigint, new_types bigint, cum_vocab bigint, "
-                    "type_token_micro bigint",
-                )
-            lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
+            # an empty source has no bounds; any band expression is then
+            # valid, and _stage_ranges stages nothing
+            lo, hi = (
+                v or 0
+                for v in docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+            )
             banded = docs.withColumn(
                 "band",
                 F.expr(
@@ -2685,15 +2537,13 @@ def streaming_vocab_growth_twin(
                 ),
             ).persist()
             stage = _MicroBatchStage("rtdw-vocabgr-")
-            stream_rows = banded.select(
-                "band", F.explode("tok_arr").alias("tok")
-            ).distinct()
-            for b in range(VOCAB_BANDS):
-                stage.stage_slice(
-                    stream_rows.filter(F.col("band") == b).select(
-                        "tok", "band"
-                    )
-                )
+            # one band per micro-batch, in band order
+            _stage_ranges(
+                stage,
+                banded.select("band", F.explode("tok_arr").alias("tok")).distinct(),
+                "band",
+                VOCAB_BANDS,
+            )
             sunk = stage.run_to_parquet(
                 spark,
                 vocab_first_seen(
@@ -2793,23 +2643,9 @@ def streaming_frontier_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             ranked = docs.withColumn(
                 "rank", F.row_number().over(wr).cast("int")
             ).persist()
-            mx = ranked.agg(F.max("rank").alias("m")).collect()[0]["m"]
-            if mx is None:
-                return spark.createDataFrame(
-                    [],
-                    "host string, fetch_epoch int, n_urls bigint, "
-                    "epoch_chars bigint, first_doc_id bigint, "
-                    "host_epochs bigint",
-                )
             stage = _MicroBatchStage("rtdw-frontier-")
-            step = (int(mx) - 1) // FRONTIER_TWIN_BATCHES + 1
-            for b in range(FRONTIER_TWIN_BATCHES):
-                stage.stage_slice(
-                    ranked.filter(
-                        (F.col("rank") > b * step)
-                        & (F.col("rank") <= (b + 1) * step)
-                    ).select("host", "doc_id", "n_chars", "rank")
-                )
+            # ascending per-host rank ranges (ranks start at 1)
+            _stage_ranges(stage, ranked, "rank", FRONTIER_TWIN_BATCHES)
             sunk = stage.run_to_parquet(
                 spark,
                 frontier_epoch_assign(
@@ -2825,7 +2661,6 @@ def streaming_frontier_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_chars").cast("bigint").alias("epoch_chars"),
                 F.min("doc_id").cast("bigint").alias("first_doc_id"),
             )
-            wh = _W.partitionBy("host")
             return per_cell.withColumn(
                 "host_epochs",
                 F.expr(
@@ -2906,14 +2741,6 @@ def streaming_sft_gate_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .persist()
             )
-            if turns.limit(1).count() == 0:
-                return spark.createDataFrame(
-                    [],
-                    "user_id bigint, day string, n_turns bigint, "
-                    "n_user_turns bigint, n_assistant_turns bigint, "
-                    "alternation_violations bigint, starts_user bigint, "
-                    "ends_assistant bigint, decision string",
-                )
             for lo in range(0, 24, SFT_HOUR_BAND):
                 stage.stage_slice(
                     turns.filter(
@@ -3003,30 +2830,8 @@ def streaming_watermark_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("tok_arr", tokens("text"))
             )
             stats = _wm_doc_stats(docs, "source", "doc_id").persist()
-            lo_hi = stats.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).collect()[0]
-            if lo_hi["lo"] is None:
-                return spark.createDataFrame(
-                    [],
-                    "source string, n_docs bigint, scored bigint, "
-                    "green bigint, z_micro bigint, verdict string",
-                )
-            lo, hi = int(lo_hi["lo"]), int(lo_hi["hi"])
             stage = _MicroBatchStage("rtdw-wmtwin-")
-            banded = stats.withColumn(
-                "band",
-                F.expr(
-                    f"CAST((doc_id - {lo}) * {WM_TWIN_BATCHES}"
-                    f" div ({hi} - {lo} + 1) AS INT)"
-                ),
-            )
-            for b in range(WM_TWIN_BATCHES):
-                stage.stage_slice(
-                    banded.filter(F.col("band") == b).select(
-                        "source", "scored", "green"
-                    )
-                )
+            _stage_ranges(stage, stats, "doc_id", WM_TWIN_BATCHES)
             sunk = stage.run_to_parquet(
                 spark,
                 watermark_pooled_counters(

@@ -4,7 +4,8 @@ tests feed file streams and assert each pipeline's output equals its batch
 twin in plans/core.py on the same fixture.
 
 Topology mapping:
-- BaseLogApp (§3.1)         -> `parse_json_stream` + `visitor_repair` +
+- BaseLogApp (§3.1)         -> `sources/files.py::stream_jsonl` (parse +
+                               dead letters) + `visitor_repair` +
                                `run_baselog_split` (foreachBatch fan-out)
 - DwdTradeOrderDetail (§3.2)-> `order_detail_join_stream` (watermarked
                                stream-stream joins + broadcast lookup)
@@ -21,7 +22,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from realtimedatawarehouse_self_spark.functions.exprs import (
     cents_amount,
@@ -29,27 +29,6 @@ from realtimedatawarehouse_self_spark.functions.exprs import (
     window_bounds,
 )
 from realtimedatawarehouse_self_spark.streaming import sinks
-
-
-# ---------------------------------------------------------------------------
-# P1/P2: permissive JSON parse with dead-letter routing.
-# Reference: BaseLogApp.java:53-69 (side-output), BaseDBApp.java:50-66 (drop).
-# ---------------------------------------------------------------------------
-def parse_json_stream(raw: DataFrame, schema: StructType, value_col: str = "value") -> DataFrame:
-    """Returns the stream with a parsed struct column `j` (null => dirty).
-
-    Callers either `filter(j.isNotNull())` (P2 drop) or fan the complement
-    to a dead-letter sink in foreachBatch (P1 side output).
-    """
-    return raw.withColumn(
-        "j", F.from_json(F.col(value_col), schema, {"mode": "PERMISSIVE"})
-    )
-
-
-def split_clean_dirty(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    clean = parsed.filter(F.col("j").isNotNull()).select("j.*")
-    dirty = parsed.filter(F.col("j").isNull())
-    return clean, dirty
 
 
 # ---------------------------------------------------------------------------
@@ -80,9 +59,14 @@ def dws_uv_window_stream(
 ) -> DataFrame:
     """uv leg of Dws02: daily dedup (T2) chained into the window agg.
 
-    Spark-native chain: dropDuplicates on (user, day) — a supported
-    multi-stateful pipeline (dedup -> agg). The day column makes state keys
-    day-scoped, the exact analogue of the reference's 1-day state TTL.
+    Spark-native chain: dropDuplicates on (user, type, day) — a supported
+    multi-stateful pipeline (dedup -> agg). The day column scopes the
+    dedup to one day, as the reference's 1-day state TTL does, but it does
+    NOT bound the state: the dedup keys exclude the watermarked `ts`, so
+    Spark never evicts a dedup entry and the state grows with every
+    (user, type, day) ever seen. Bounding it needs the watermark on a
+    column inside the dedup keys, while the window needs `ts` as its
+    event time.
     """
     deduped = (
         events.withColumn("dt", F.to_date("ts"))

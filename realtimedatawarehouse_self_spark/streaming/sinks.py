@@ -3,8 +3,7 @@
 The reference's sink surface (SURVEY.md §2.2) maps onto:
 
 - K1 fixed-topic Kafka producer      -> append parquet/kafka sink
-- K2 dynamic-topic producer          -> `partitionBy(route_col)` append (one
-  directory per route, the columnar analogue of per-record topic routing)
+- K2 dynamic-topic producer          -> `sources/kafka.py::write_routed`
 - K3 upsert-Kafka / K5 Phoenix upsert-> `upsert_parquet` keyed merge (the
   Delta-MERGE pattern; Delta itself is not available in this container, so
   the merge is implemented as read+anti-join+atomic-swap over parquet —
@@ -101,8 +100,8 @@ def batch_id_guard(marker_path: str):
     txnVersion/txnAppId, re-expressed for filesystem sinks). Crash window:
     dying between the merge commit and the mark rename replays once —
     close it by committing the mark inside the sink's own swap (as
-    upsert_parquet callers can, the mark being written before the final
-    rename) or by making the merge itself keyed-idempotent."""
+    upsert_parquet does for ``meta={"batch_id": ...}``) or by making the
+    merge itself keyed-idempotent."""
 
     def wrap(fn):
         def inner(batch_df: DataFrame, batch_id: int) -> None:
@@ -123,15 +122,6 @@ def batch_id_guard(marker_path: str):
 
 def append_parquet(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
-
-
-def route_partitioned(df: DataFrame, path: str, route_col: str = "sink_table") -> None:
-    """K2 dynamic routing: one record stream fans out to per-route dirs.
-
-    Reference: MyKafkaUtil.java:65-87 (topic from the record, then removed) —
-    `partitionBy` keeps it a single write job no matter how many routes.
-    """
-    df.write.mode("append").partitionBy(route_col).parquet(path)
 
 
 def upsert_parquet(
@@ -159,7 +149,10 @@ def upsert_parquet(
     (underscore-prefixed files are invisible to parquet directory reads),
     so a transactional marker — e.g. a foreachBatch batch-id high-water
     mark — can never be observed out of sync with the table contents.
-    Read it back with `read_table_meta`.
+    Read it back with `read_table_meta`. A call whose `meta["batch_id"]`
+    is at or below the committed one is a foreachBatch REPLAY whose merge
+    already committed: it is skipped, checked under the table lock so the
+    check and the merge are one atomic step.
 
     `delete_col` (optional) adds the Delta-MERGE "WHEN MATCHED ... THEN
     DELETE" leg: after within-batch last-writer resolution, rows whose
@@ -212,6 +205,10 @@ def _upsert_locked(
     # reading existing state, or this merge would silently rebuild the
     # table from one batch and the cleanup below would destroy the backup.
     recover_table(path)
+    if meta is not None and "batch_id" in meta:
+        seen = read_table_meta(path)
+        if seen is not None and meta["batch_id"] <= seen.get("batch_id", -1):
+            return  # replayed batch: its merge already committed
 
     within = updates
     if order_col:
