@@ -264,9 +264,10 @@ def dws09_trade_sku_order_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     # T6 first-row-per-key dedup as min(struct(order-prefix..., payload)):
     # lexicographic struct-min ≡ row_number()=1 over the same prefix order,
-    # but runs as a hash aggregate with map-side partial combine instead of
-    # a full-width shuffle+sort — and the payload tail makes the pick total
-    # (deterministic even under order-prefix ties).
+    # and the payload tail makes the pick total (deterministic even under
+    # order-prefix ties). A struct aggregation buffer is not
+    # hash-aggregatable, so this plans as a SortAggregate with a partial
+    # combine: a Sort on each side of the exchange.
     first = F.min(
         F.struct(
             "l_shipdate", "l_partkey", "l_extendedprice", "l_discount", "l_tax"

@@ -31,9 +31,11 @@ naturally).
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import datetime as dt
 import os
+import shutil
 import tempfile
 import time as _time
 
@@ -106,10 +108,19 @@ class _MicroBatchStage:
     (real event types, sentinel keys — Catalyst pushes type predicates
     below EventTimeWatermark, SURVEY §9.1) stays the caller's job; this
     class only guarantees the ordering half of the flush contract.
+
+    Every stage's directory sits under one per-process root, removed when
+    the process exits: a returned frame reads its sink lazily, so no
+    earlier point is safe, and no frame outlives the process.
     """
 
+    _root: str | None = None
+
     def __init__(self, prefix: str, extra_dirs: tuple[str, ...] = ()):
-        self.base = tempfile.mkdtemp(prefix=prefix)
+        if _MicroBatchStage._root is None:
+            _MicroBatchStage._root = tempfile.mkdtemp(prefix="rtdw-")
+            atexit.register(shutil.rmtree, _MicroBatchStage._root, True)
+        self.base = tempfile.mkdtemp(prefix=prefix, dir=_MicroBatchStage._root)
         self.src = os.path.join(self.base, "src")
         self.out = os.path.join(self.base, "out")
         self.cp = os.path.join(self.base, "cp")

@@ -11,7 +11,11 @@ configured once, centrally:
 - AQE on (runtime re-planning, skew-join handling, partition coalescing);
 - Arrow on (pandas UDF / toPandas fast path);
 - shuffle partitions sized for the local harness but overridable — on a real
-  cluster this should be ~2-3x total executor cores or left to AQE.
+  cluster this should be ~2-3x total executor cores or left to AQE;
+- the engine's JVM jar (``jvm/rtdw.jar``, the T1 processor) goes on the
+  driver class path. In local mode the tasks run in the driver's JVM, so
+  nothing is shipped; a cluster's executors need the same jar on their
+  class path.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+JVM_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "rtdw.jar")
 
 # Runtime-settable confs applied even when we are handed an existing session
 # (e.g. the driver's): keeps oracle comparisons deterministic.
@@ -85,6 +90,10 @@ def get_spark(
     }
     if extra_conf:
         conf.update(extra_conf)
+    # appended, so a caller's own class path entries keep their precedence
+    conf["spark.driver.extraClassPath"] = os.pathsep.join(
+        filter(None, (conf.get("spark.driver.extraClassPath"), JVM_JAR))
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

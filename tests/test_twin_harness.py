@@ -5,15 +5,20 @@ streaming query (``writeStream``) or make a scratch directory
 (``tempfile.mkdtemp``): every twin stages its input, runs its stream and
 reads its result through it. The check walks the module's AST (no imports
 are run and no Spark session starts), so a violation is reported by line.
+The stages' scratch directories share one per-process root that is removed
+at exit (checked in a child process, again without a Spark session).
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import subprocess
+import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TWINS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    REPO,
     "realtimedatawarehouse_self_spark",
     "plans",
     "streaming_twins.py",
@@ -63,3 +68,23 @@ def test_the_check_sees_uses_outside_the_harness():
         "line 5: writeStream",
         "line 6: imports mkdtemp",
     ]
+
+
+def test_stages_share_one_root_removed_at_exit():
+    """Every stage directory sits under one per-process root, and the
+    process removes that root when it exits."""
+    script = (
+        "from realtimedatawarehouse_self_spark.plans.streaming_twins import"
+        " _MicroBatchStage as S\n"
+        "a, b = S('rtdw-a-'), S('rtdw-b-')\n"
+        "print(a.base); print(b.base); print(S._root)\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=REPO,
+        capture_output=True, text=True, check=True,
+    )
+    a, b, root = done.stdout.split()
+    assert os.path.basename(root).startswith("rtdw-")
+    assert os.path.dirname(a) == os.path.dirname(b) == root
+    assert not os.path.exists(root)
