@@ -1,10 +1,12 @@
 """Oracle-gated queries that execute REAL Structured Streaming jobs.
 
-Every twin runs through ``_MicroBatchStage``: it stages its input as
-parquet slices with strictly increasing mtimes, runs ONE ``availableNow``
-query over them with ``maxFilesPerTrigger=1`` (slice ``i`` is micro-batch
-``i``; only the config-swap twin resumes its query once, on purpose), and
-returns the sink's contents. The driver's DuckDB comparison
+Every twin runs through ``_MicroBatchStage``: it computes each input row's
+slice as a column and stages all slices with ONE partitioned write
+(``stage_by``), one parquet file per slice with mtimes in slice order. It
+then runs ONE ``availableNow`` query over them with
+``maxFilesPerTrigger=1`` (each slice is one micro-batch; only the
+config-swap twin resumes its query once, on purpose), and returns the
+sink's contents. The driver's DuckDB comparison
 therefore validates an actual streaming execution — watermark, window and
 join state, keyed custom state — not just a batch twin.
 
@@ -41,6 +43,7 @@ import time as _time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from realtimedatawarehouse_self_spark.functions.exprs import (
     cents_amount,
@@ -98,16 +101,16 @@ class _MicroBatchStage:
     """The one micro-batch harness of the streaming twins: stage input
     slices, run ONE availableNow query over them, read the result.
 
-    FileStreamSource orders files by MODIFICATION TIME; every staged slice
-    is utime-stamped strictly later than the previous one, so with
-    ``maxFilesPerTrigger=1`` slice ``i`` IS micro-batch ``i`` — the
-    property every twin's oracle derives its batch-sequence arithmetic
-    from. Sentinel slices (``stage_sentinel``) are stamped strictly after
-    ALL staged slices, including ones staged at explicit out-of-order
-    ``seq`` slots (the late-drop twin). The sentinel-TYPING contract
-    (real event types, sentinel keys — Catalyst pushes type predicates
-    below EventTimeWatermark, SURVEY §9.1) stays the caller's job; this
-    class only guarantees the ordering half of the flush contract.
+    FileStreamSource orders files by MODIFICATION TIME; the slice at
+    sequence slot ``v`` is stamped at ``t0 + 10 * v``, so with
+    ``maxFilesPerTrigger=1`` the staged slices are the micro-batches in
+    slot order — the property every twin's oracle derives its
+    batch-sequence arithmetic from. Sentinel slices (``stage_sentinel``)
+    are stamped strictly after ALL staged slots. The sentinel-TYPING
+    contract (real event types, sentinel keys — Catalyst pushes type
+    predicates below EventTimeWatermark, SURVEY §9.1) stays the caller's
+    job; this class only guarantees the ordering half of the flush
+    contract.
 
     Every stage's directory sits under one per-process root, removed when
     the process exits: a returned frame reads its sink lazily, so no
@@ -116,7 +119,7 @@ class _MicroBatchStage:
 
     _root: str | None = None
 
-    def __init__(self, prefix: str, extra_dirs: tuple[str, ...] = ()):
+    def __init__(self, prefix: str):
         if _MicroBatchStage._root is None:
             _MicroBatchStage._root = tempfile.mkdtemp(prefix="rtdw-")
             atexit.register(shutil.rmtree, _MicroBatchStage._root, True)
@@ -124,27 +127,57 @@ class _MicroBatchStage:
         self.src = os.path.join(self.base, "src")
         self.out = os.path.join(self.base, "out")
         self.cp = os.path.join(self.base, "cp")
-        for d in extra_dirs:
-            setattr(self, d, os.path.join(self.base, d))
         os.makedirs(self.src)
         self._t0 = _time.time()
         self._next_seq = 0
 
-    def stage_slice(self, df: DataFrame, seq: int | None = None) -> None:
-        """Write one micro-batch slice (single file) at sequence slot
-        ``seq`` (default: next unused slot)."""
-        if seq is None:
-            seq = self._next_seq
-        self._write(df, f"g{seq:05d}", seq)
+    def stage_by(
+        self, df: DataFrame, slice_col: str, slots: int | None = None
+    ) -> StructType:
+        """Stage ``df`` with ONE partitioned write: the rows whose integer
+        ``slice_col`` is ``v`` become the single-file slice at slot ``v``
+        (``slice_col`` itself is not staged; null slices are dropped).
+        Without ``slots`` only the values present become slices, so the
+        micro-batches are the non-empty slices in value order; ``slots=n``
+        also stages an empty slice for every missing value below ``n``, so
+        slice ``v < n`` is micro-batch ``v``. Returns the staged schema."""
+        parts = os.path.join(self.base, "parts")
+        (
+            df.filter(F.col(slice_col).isNotNull())
+            .repartition(1)
+            .write.partitionBy(slice_col)
+            .parquet(parts)
+        )
+        staged = {
+            int(d.split("=", 1)[1]): os.path.join(parts, d)
+            for d in os.listdir(parts)
+            if d.startswith(f"{slice_col}=")
+        }
+        missing = set(range(slots or 0)) - staged.keys()
+        if missing:
+            empty = os.path.join(parts, "empty")
+            df.drop(slice_col).limit(0).coalesce(1).write.parquet(empty)
+            for v in missing:
+                staged[v] = shutil.copytree(empty, f"{empty}{v}")
+        for v, part in staged.items():
+            dst = os.path.join(self.src, f"g{v:05d}")
+            os.rename(part, dst)
+            self._stamp(dst, v)
+        shutil.rmtree(parts)
+        return df.drop(slice_col).schema
 
     def stage_sentinel(self, df: DataFrame) -> None:
-        """Write a flush slice, mtime-stamped strictly after every slice
-        staged so far (call again for a second flush batch)."""
-        self._write(df, f"zz_flush{self._next_seq:05d}", self._next_seq)
-
-    def _write(self, df: DataFrame, name: str, seq: int) -> None:
-        part = os.path.join(self.src, name)
+        """Write a flush slice, stamped strictly after every slice staged
+        so far (call again for a second flush batch); a no-op while
+        nothing is staged, as there is nothing to flush."""
+        if not self._next_seq:
+            return
+        seq = self._next_seq
+        part = os.path.join(self.src, f"zz_flush{seq:05d}")
         df.coalesce(1).write.parquet(part)
+        self._stamp(part, seq)
+
+    def _stamp(self, part: str, seq: int) -> None:
         ts = self._t0 + seq * 10
         for fname in os.listdir(part):
             os.utime(os.path.join(part, fname), (ts, ts))
@@ -192,24 +225,18 @@ class _MicroBatchStage:
         self._run(stream_df, output_mode, lambda w: w.foreachBatch(fn))
 
 
-def _day_groups(days: list, per_batch: int) -> list[list]:
-    return [days[i : i + per_batch] for i in range(0, len(days), per_batch)]
+def _day_offset(day: str, days_per_slice: int = 1):
+    """Days since the frame's first ``day`` (a date or yyyy-MM-dd column),
+    div ``days_per_slice``."""
+    return F.expr(f"datediff({day}, min({day}) OVER ()) div {days_per_slice}")
 
 
-def _stage_ranges(stage: _MicroBatchStage, df: DataFrame, col: str, n: int) -> None:
-    """Stage ``df`` as ``n`` equal-width ascending ranges of ``col``: slice
-    ``i`` holds strictly smaller values than slice ``i + 1`` (the arrival
-    order the keyed-state twins rely on). An empty ``df`` stages nothing."""
-    lo, hi = df.agg(F.min(col), F.max(col)).first()
-    if lo is None:
-        return
-    step = (hi - lo) // n + 1
-    for b in range(n):
-        stage.stage_slice(
-            df.filter(
-                (F.col(col) >= lo + b * step) & (F.col(col) < lo + (b + 1) * step)
-            )
-        )
+def _range_band(col: str, n: int):
+    """Which of ``n`` equal-width ascending ranges of ``col`` a row falls
+    in: band ``b`` holds strictly smaller values than band ``b + 1`` (the
+    arrival order the keyed-state twins rely on)."""
+    lo = f"min({col}) OVER ()"
+    return F.expr(f"({col} - {lo}) div ((max({col}) OVER () - {lo}) div {n} + 1)")
 
 
 def _events_stream(
@@ -243,23 +270,22 @@ def _events_stream(
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
-        n, max_ts = events.agg(F.count(F.lit(1)), F.max("ts")).first()
-        # no events: nothing is staged, so run_to_parquet returns the typed
-        # empty frame without starting a query
-        if n:
-            # only NULL timestamps: any sentinel time works — there are no
-            # real windows for the flush to close
-            max_ts = max_ts or dt.datetime(1970, 1, 1)
-            stage.stage_slice(events)  # watermark unset: nothing late-dropped
-            stage.stage_sentinel(
-                spark.createDataFrame(
-                    [
-                        (-1 - i, max_ts + dt.timedelta(days=3), -1, ft, 0.0)
-                        for i, ft in enumerate(flush_types)
-                    ],
-                    events.schema,
-                )
+        # one data slice: the watermark is unset, so nothing is late-dropped
+        # (no events: nothing is staged, the sentinel is skipped, and
+        # run_to_parquet returns the typed empty frame without a query)
+        stage.stage_by(events.withColumn("slice", F.lit(0)), "slice")
+        # only NULL timestamps: any sentinel time works — there are no real
+        # windows for the flush to close
+        max_ts = events.agg(F.max("ts")).first()[0] or dt.datetime(1970, 1, 1)
+        stage.stage_sentinel(
+            spark.createDataFrame(
+                [
+                    (-1 - i, max_ts + dt.timedelta(days=3), -1, ft, 0.0)
+                    for i, ft in enumerate(flush_types)
+                ],
+                events.schema,
             )
+        )
         sunk = stage.run_to_parquet(
             spark, build(stage.read_stream(spark, events.schema))
         )
@@ -537,16 +563,17 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.streaming.sinks import upsert_parquet
 
     with _twin_confs(spark):
-        stage = _MicroBatchStage("rtdw-incr-", extra_dirs=("store",))
-        store = stage.store
+        stage = _MicroBatchStage("rtdw-incr-")
+        store = os.path.join(stage.base, "store")
         events = load_table(spark, sf_dir, "events").select(
-            "ts", "event_type", "value"
+            "ts",
+            "event_type",
+            "value",
+            F.pmod(F.hash("ts", "event_type"), F.lit(4)).alias("slice"),
         )
-        # 4 slices -> 4 micro-batches -> 4 delta merges into the store
-        for i in range(4):
-            stage.stage_slice(
-                events.filter(F.pmod(F.hash("ts", "event_type"), F.lit(4)) == i)
-            )
+        # 4 slices -> 4 micro-batches -> 4 delta merges into the store (an
+        # empty slice still merges, so the store exists on empty input)
+        schema = stage.stage_by(events, "slice", slots=4)
 
         # Additive merges are not idempotent under foreachBatch replay.
         # The batch-id high-water mark is committed INSIDE the upsert's
@@ -586,7 +613,7 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 meta={"batch_id": batch_id},
             )
 
-        stage.run_foreach_batch(stage.read_stream(spark, events.schema), merge)
+        stage.run_foreach_batch(stage.read_stream(spark, schema), merge)
         return spark.read.parquet(store).select(
             F.date_format("h", TS_FMT).alias("hour_ts"),
             "event_type",
@@ -606,8 +633,8 @@ def _incr_stream_sql() -> str:
 # ---------------------------------------------------------------------------
 # Streaming EWMA over daily counts: the keyed-CUSTOM-state driver row
 # (T-family `applyInPandasWithState` executed as a real multi-micro-batch
-# streaming job, not just pytest-asserted). Source files are day-grouped
-# with strictly increasing mtimes, so `maxFilesPerTrigger=1` under
+# streaming job, not just pytest-asserted). Source slices hold 7 calendar
+# days each with strictly increasing mtimes, so `maxFilesPerTrigger=1` under
 # availableNow delivers the stream in day order — the sequential-state
 # contract an EWMA needs — and the per-key smoothed level carries across
 # micro-batches in the state store. The recurrence is the batch operator's
@@ -622,54 +649,41 @@ EWMA_DAYS_PER_BATCH = 7
 def streaming_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.streaming.stateful import ewma_daily
 
-    events = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-ewma-")
-            # Same non-NULL contract as the batch twin (the shared oracle
-            # filters identically); persist the 2-column projection so the
-            # per-group staging writes below re-filter this tiny frame
-            # instead of rescanning the events parquet once per group.
-            events = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-                )
-                .select(
-                    "event_type",
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                )
-                .persist()
-            )
-            days = sorted(r[0] for r in events.select("day").distinct().collect())
-            for grp in _day_groups(days, EWMA_DAYS_PER_BATCH):
-                stage.stage_slice(events.filter(F.col("day").isin(grp)))
-            sunk = stage.run_to_parquet(
-                spark, ewma_daily(stage.read_stream(spark, events.schema))
-            )
-            return sunk.select(
+        stage = _MicroBatchStage("rtdw-ewma-")
+        # Same non-NULL contract as the batch twin (the shared oracle
+        # filters identically)
+        events = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
+            .select(
                 "event_type",
-                "day",
-                "ct",
-                F.col("ewma").alias("ewma_micro"),
-                F.expr(
-                    "CASE WHEN prev = 0 THEN cast(0 as bigint) "
-                    "ELSE ct * 1000000 - prev END"
-                ).alias("deviation_micro"),
-                F.expr(
-                    "cast(CASE WHEN prev > 0 AND abs(ct * 1000000 - prev) * 2 "
-                    "> prev THEN 1 ELSE 0 END as bigint)"
-                ).alias("is_anomaly"),
+                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
+                    "day"
+                ),
             )
-        finally:
-            # The persisted staging projection has served its per-group
-            # writes by the time the streaming job runs; without this it
-            # would occupy executor cache for the rest of the session/bench
-            # run (ADVICE r5).
-            if events is not None:
-                events.unpersist()
+        )
+        schema = stage.stage_by(
+            events.withColumn("slice", _day_offset("day", EWMA_DAYS_PER_BATCH)),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark, ewma_daily(stage.read_stream(spark, schema))
+        )
+        return sunk.select(
+            "event_type",
+            "day",
+            "ct",
+            F.col("ewma").alias("ewma_micro"),
+            F.expr(
+                "CASE WHEN prev = 0 THEN cast(0 as bigint) "
+                "ELSE ct * 1000000 - prev END"
+            ).alias("deviation_micro"),
+            F.expr(
+                "cast(CASE WHEN prev > 0 AND abs(ct * 1000000 - prev) * 2 "
+                "> prev THEN 1 ELSE 0 END as bigint)"
+            ).alias("is_anomaly"),
+        )
 
 
 def _ewma_stream_sql() -> str:
@@ -688,57 +702,50 @@ def _ewma_stream_sql() -> str:
 # with the (c_up, c_dn) pair carrying across micro-batches in the state
 # store. Baseline mean rides in statically (stream-static join at staging
 # time), exactly how a production CUSUM takes its reference-period
-# baseline. Same day-grouped-file / mtime-ordered harness as
+# baseline. Same 7-day-slice / mtime-ordered harness as
 # streaming_ewma_daily.
 # ---------------------------------------------------------------------------
 def streaming_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.streaming.stateful import cusum_daily
 
-    events = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-cusum-")
-            ev = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("event_type").isNotNull() & F.col("ts").isNotNull()
-                )
-                .select(
-                    "event_type",
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                )
-            )
-            # Reference-period baseline, computed ONCE batch-side and joined
-            # statically (mirrors the batch operator's stats CTE exactly).
-            daily = ev.groupBy("event_type", "day").agg(
-                F.count(F.lit(1)).cast("bigint").alias("ct")
-            )
-            stats = daily.groupBy("event_type").agg(
-                F.expr("CAST(sum(ct) * 1000000 div count(*) AS BIGINT)").alias(
-                    "mean_micro"
-                )
-            )
-            events = ev.join(F.broadcast(stats), "event_type").persist()
-            days = sorted(
-                r[0] for r in events.select("day").distinct().collect()
-            )
-            for grp in _day_groups(days, EWMA_DAYS_PER_BATCH):
-                stage.stage_slice(events.filter(F.col("day").isin(grp)))
-            return stage.run_to_parquet(
-                spark, cusum_daily(stage.read_stream(spark, events.schema))
-            ).select(
+        stage = _MicroBatchStage("rtdw-cusum-")
+        ev = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("event_type").isNotNull() & F.col("ts").isNotNull())
+            .select(
                 "event_type",
-                "day",
-                "ct",
-                "cusum_up_micro",
-                "cusum_dn_micro",
-                "alarm",
+                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
+                    "day"
+                ),
             )
-        finally:
-            if events is not None:
-                events.unpersist()
+        )
+        # Reference-period baseline, computed ONCE batch-side and joined
+        # statically (mirrors the batch operator's stats CTE exactly).
+        daily = ev.groupBy("event_type", "day").agg(
+            F.count(F.lit(1)).cast("bigint").alias("ct")
+        )
+        stats = daily.groupBy("event_type").agg(
+            F.expr("CAST(sum(ct) * 1000000 div count(*) AS BIGINT)").alias(
+                "mean_micro"
+            )
+        )
+        schema = stage.stage_by(
+            ev.join(F.broadcast(stats), "event_type").withColumn(
+                "slice", _day_offset("day", EWMA_DAYS_PER_BATCH)
+            ),
+            "slice",
+        )
+        return stage.run_to_parquet(
+            spark, cusum_daily(stage.read_stream(spark, schema))
+        ).select(
+            "event_type",
+            "day",
+            "ct",
+            "cusum_up_micro",
+            "cusum_dn_micro",
+            "alarm",
+        )
 
 
 def _cusum_stream_sql() -> str:
@@ -856,77 +863,67 @@ def streaming_topk_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         topk_hitters,
     )
 
-    events = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-topk-")
-            events = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("event_type").isNotNull()
-                    & F.col("user_id").isNotNull()
-                )
-                .select(
-                    "event_type",
-                    "user_id",
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                )
-                .persist()
-            )
-            days = sorted(
-                r[0] for r in events.select("day").distinct().collect() if r[0]
-            )
-            for grp in _day_groups(days, EWMA_DAYS_PER_BATCH):
-                stage.stage_slice(
-                    events.filter(F.col("day").isin(grp)).select(
-                        "event_type",
-                        "user_id",
-                        F.lit(0).cast("int").alias("flush"),
-                    )
-                )
-            # typed sentinel: one flush row per key, stamped strictly last
-            # so every key's counters flush only after all data batches
-            # folded in
-            stage.stage_sentinel(
-                events.select("event_type")
-                .distinct()
-                .select(
-                    "event_type",
-                    F.lit(-1).cast("bigint").alias("user_id"),
-                    F.lit(1).cast("int").alias("flush"),
-                )
-            )
-            schema = "event_type string, user_id bigint, flush int"
-            sunk = stage.run_to_parquet(
-                spark,
-                topk_hitters(stage.read_stream(spark, schema), cap=HH_TYPE_DEN),
-            )
-            candidates = sunk.select("event_type", "user_id").distinct()
-            # exact recount over candidates only (two-pass confirm):
-            # per-type totals broadcast, threshold filter — output
-            # independent of the sketch's decrements and of how days were
-            # grouped into batches
-            per_type = events.groupBy("event_type").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_type")
-            )
-            exact = (
-                events.join(candidates, ["event_type", "user_id"], "left_semi")
-                .groupBy("event_type", "user_id")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("event_ct"))
-                .join(F.broadcast(per_type), "event_type")
-                .filter(F.col("event_ct") * HH_TYPE_DEN >= F.col("n_type"))
-            )
-            return exact.select(
+        stage = _MicroBatchStage("rtdw-topk-")
+        events = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("event_type").isNotNull() & F.col("user_id").isNotNull())
+            .select(
                 "event_type",
                 "user_id",
-                "event_ct",
-                F.expr("event_ct * 1000000 div n_type").alias("share_micro"),
+                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
+                    "day"
+                ),
             )
-        finally:
-            if events is not None:
-                events.unpersist()
+        )
+        # rows without a day have no slice and are not streamed
+        stage.stage_by(
+            events.select(
+                "event_type",
+                "user_id",
+                F.lit(0).cast("int").alias("flush"),
+                _day_offset("day", EWMA_DAYS_PER_BATCH).alias("slice"),
+            ),
+            "slice",
+        )
+        # typed sentinel: one flush row per key, stamped strictly last
+        # so every key's counters flush only after all data batches
+        # folded in
+        stage.stage_sentinel(
+            events.select("event_type")
+            .distinct()
+            .select(
+                "event_type",
+                F.lit(-1).cast("bigint").alias("user_id"),
+                F.lit(1).cast("int").alias("flush"),
+            )
+        )
+        schema = "event_type string, user_id bigint, flush int"
+        sunk = stage.run_to_parquet(
+            spark,
+            topk_hitters(stage.read_stream(spark, schema), cap=HH_TYPE_DEN),
+        )
+        candidates = sunk.select("event_type", "user_id").distinct()
+        # exact recount over candidates only (two-pass confirm):
+        # per-type totals broadcast, threshold filter — output
+        # independent of the sketch's decrements and of how days were
+        # grouped into batches
+        per_type = events.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_type")
+        )
+        exact = (
+            events.join(candidates, ["event_type", "user_id"], "left_semi")
+            .groupBy("event_type", "user_id")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("event_ct"))
+            .join(F.broadcast(per_type), "event_type")
+            .filter(F.col("event_ct") * HH_TYPE_DEN >= F.col("n_type"))
+        )
+        return exact.select(
+            "event_type",
+            "user_id",
+            "event_ct",
+            F.expr("event_ct * 1000000 div n_type").alias("share_micro"),
+        )
 
 
 _TOPK_STREAM_SQL = f"""
@@ -1025,16 +1022,16 @@ def streaming_dedup_incoming(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
             # Incoming raw docs land as one file per micro-batch, mtime-ordered
-            # (maxFilesPerTrigger=1 under availableNow — the day-file feeder
+            # (maxFilesPerTrigger=1 under availableNow — the slice feeder
             # idiom shared by the rollup/ewma twins).
-            inc = docs.filter(F.col("doc_id") % INCOMING_MOD == 0)
-            for i in range(DEDUP_STREAM_GROUPS):
-                stage.stage_slice(
-                    inc.filter(
-                        (F.col("doc_id") / INCOMING_MOD) % DEDUP_STREAM_GROUPS
-                        == i
-                    )
-                )
+            stage.stage_by(
+                docs.filter(F.col("doc_id") % INCOMING_MOD == 0).withColumn(
+                    "slice",
+                    F.expr(f"doc_id div {INCOMING_MOD} % {DEDUP_STREAM_GROUPS}"),
+                ),
+                "slice",
+                slots=DEDUP_STREAM_GROUPS,
+            )
 
             def process(batch_df: DataFrame, batch_id: int) -> None:
                 b = per_doc_stats(batch_df)
@@ -1259,76 +1256,54 @@ _LATE_STRAGGLER_OFFSET = 3  # shard-1 of day i ships at slot 2i+3 (s0 at 2i)
 
 
 def streaming_late_drop_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-late-")
-            ev = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-                )
-                .select(
-                    "ts",
-                    "event_type",
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                    F.coalesce(
-                        F.expr(
-                            "CAST(conv(substring(md5(CAST(user_id AS STRING)),"
-                            f" 1, 15), 16, 10) AS BIGINT) % {LATE_TWIN_SHARDS}"
-                        ),
-                        F.lit(0),
-                    ).alias("shard"),
-                )
-                .persist()
-            )
-            # only NONEMPTY (day, shard) slots become files: an empty file
-            # would still occupy a micro-batch position and shift the
-            # one-batch-behind late watermark off the oracle's frame
-            pairs = sorted(
-                (r["day"], r["shard"])
-                for r in ev.select("day", "shard").distinct().collect()
-            )
-            # delivery slot: shard-0 of day i at 2i, its straggler shard-1
-            # at 2i+3 — the same arithmetic the oracle derives from date
-            # diffs
-            for d, s in pairs:
-                i = (dt.date.fromisoformat(d) - dt.date.fromisoformat(pairs[0][0])).days
-                seq = 2 * i + (0 if s == 0 else _LATE_STRAGGLER_OFFSET)
-                stage.stage_slice(
-                    ev.filter(
-                        (F.col("day") == d) & (F.col("shard") == s)
-                    ).select("ts", "event_type"),
-                    seq=seq,
-                )
-            if pairs:
-                max_ts = ev.agg(F.max("ts")).first()[0]
-                stage.stage_sentinel(
-                    spark.createDataFrame(
-                        [(max_ts + dt.timedelta(days=3), FLUSH_TYPE)],
-                        "ts timestamp, event_type string",
-                    )
-                )
-            sunk = stage.run_to_parquet(
-                spark,
-                stage.read_stream(spark, "ts timestamp, event_type string")
-                .withWatermark("ts", f"{LATE_TWIN_DELAY_S} seconds")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("ct"))
-                .select(
-                    F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                        "win_start"
-                    ),
-                    "event_type",
-                    "ct",
+        stage = _MicroBatchStage("rtdw-late-")
+        ev = load_table(spark, sf_dir, "events").filter(
+            F.col("ts").isNotNull() & F.col("event_type").isNotNull()
+        )
+        shard = F.coalesce(
+            F.expr(
+                "CAST(conv(substring(md5(CAST(user_id AS STRING)),"
+                f" 1, 15), 16, 10) AS BIGINT) % {LATE_TWIN_SHARDS}"
+            ),
+            F.lit(0),
+        )
+        # delivery slot: shard-0 of day i at 2i, its straggler shard-1 at
+        # 2i+3 — the same arithmetic the oracle derives from date diffs.
+        # Only NONEMPTY slots become files (no `slots`): an empty file would
+        # still occupy a micro-batch position and shift the one-batch-behind
+        # late watermark off the oracle's frame.
+        stage.stage_by(
+            ev.select(
+                "ts",
+                "event_type",
+                (
+                    2 * _day_offset("to_date(ts)")
+                    + F.when(shard == 0, 0).otherwise(_LATE_STRAGGLER_OFFSET)
+                ).alias("slice"),
+            ),
+            "slice",
+        )
+        stage.stage_sentinel(
+            ev.agg(
+                (F.max("ts") + F.expr("INTERVAL 3 DAYS")).alias("ts")
+            ).select("ts", F.lit(FLUSH_TYPE).alias("event_type"))
+        )
+        sunk = stage.run_to_parquet(
+            spark,
+            stage.read_stream(spark, "ts timestamp, event_type string")
+            .withWatermark("ts", f"{LATE_TWIN_DELAY_S} seconds")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("ct"))
+            .select(
+                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
+                    "win_start"
                 ),
-            )
-            return sunk.filter(F.col("event_type") != FLUSH_TYPE)
-        finally:
-            if ev is not None:
-                ev.unpersist()
+                "event_type",
+                "ct",
+            ),
+        )
+        return sunk.filter(F.col("event_type") != FLUSH_TYPE)
 
 
 _LATE_TWIN_SQL = f"""
@@ -1394,45 +1369,30 @@ DDW_DELAY_S = 172_800  # 2-day dedup horizon
 def streaming_dedup_within_watermark(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    daily = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-ddw-")
-            # one row per (day, user): the user's min event time that day —
-            # within-batch dedup is then deterministic by construction
-            daily = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("ts").isNotNull() & F.col("user_id").isNotNull()
-                )
-                .groupBy(
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                    "user_id",
-                )
-                .agg(F.min("ts").alias("ts"))
-                .persist()
-            )
-            days = sorted(
-                r[0] for r in daily.select("day").distinct().collect()
-            )
-            for d in days:
-                stage.stage_slice(
-                    daily.filter(F.col("day") == d).select("ts", "user_id")
-                )
-            return stage.run_to_parquet(
-                spark,
-                stage.read_stream(spark, "ts timestamp, user_id bigint")
-                .withWatermark("ts", f"{DDW_DELAY_S} seconds")
-                .dropDuplicatesWithinWatermark(["user_id"]),
-            ).select(
-                "user_id",
-                F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("emit_ts"),
-            )
-        finally:
-            if daily is not None:
-                daily.unpersist()
+        stage = _MicroBatchStage("rtdw-ddw-")
+        # one row per (day, user): the user's min event time that day —
+        # within-batch dedup is then deterministic by construction; one
+        # non-empty day per micro-batch (the oracle's positions)
+        daily = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+            .groupBy(F.to_date("ts").alias("day"), "user_id")
+            .agg(F.min("ts").alias("ts"))
+        )
+        stage.stage_by(
+            daily.select("ts", "user_id", _day_offset("day").alias("slice")),
+            "slice",
+        )
+        return stage.run_to_parquet(
+            spark,
+            stage.read_stream(spark, "ts timestamp, user_id bigint")
+            .withWatermark("ts", f"{DDW_DELAY_S} seconds")
+            .dropDuplicatesWithinWatermark(["user_id"]),
+        ).select(
+            "user_id",
+            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("emit_ts"),
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -1443,8 +1403,8 @@ def streaming_dedup_within_watermark(
 # rule table — the engine's documented substitution for Flink's
 # broadcast-state stream, streaming/pipelines.py:184 idiom), so a rule
 # update takes effect at the next batch. The twin runs the first half of
-# the day files under rule set v1, swaps the rule table, then RESUMES
-# from the same checkpoint over the second half under v2 — proving both
+# the days (one slice) under rule set v1, swaps the rule table, then
+# RESUMES from the same checkpoint over the second half under v2 — proving both
 # the per-batch consult and that the swap composes with exactly-once
 # restart. The oracle routes each day by the rule version active when
 # its batch ran (deterministic: versions change only between runs).
@@ -1454,67 +1414,62 @@ _CFG_V2 = (("view", "t_view"), ("purchase", "t_trade_v2"), ("click", "t_click"))
 
 
 def streaming_config_swap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-cfg-", extra_dirs=("rules",))
-            rules = stage.rules
-            ev = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-                )
-                .select(
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                    "event_type",
-                )
-                .persist()
+        stage = _MicroBatchStage("rtdw-cfg-")
+        rules = os.path.join(stage.base, "rules")
+        ev = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
+            .select(
+                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
+                    "day"
+                ),
+                "event_type",
             )
-            days = sorted(r[0] for r in ev.select("day").distinct().collect())
-            if not days:
-                # nothing to stage, so the sink never runs: its output
-                # (batch joined to the rule table) has no stream to take
-                # a schema from
-                return spark.createDataFrame(
-                    [],
-                    "day string, event_type string, route string, ct bigint",
-                )
-            split = len(days) // 2  # days[:split] under v1, rest under v2
+            .withColumn("day_idx", F.expr("dense_rank() OVER (ORDER BY day) - 1"))
+        )
+        # slice 0: the first n_days // 2 days (v1); slice 1: the rest (v2)
+        half = ev.select(
+            "day",
+            "event_type",
+            F.expr("CAST(day_idx >= (max(day_idx) OVER () + 1) div 2 AS INT)")
+            .alias("slice"),
+        )
 
-            def write_rules(pairs):
-                spark.createDataFrame(
-                    list(pairs), "event_type string, route string"
-                ).coalesce(1).write.mode("overwrite").parquet(rules)
+        def write_rules(pairs):
+            spark.createDataFrame(
+                list(pairs), "event_type string, route string"
+            ).coalesce(1).write.mode("overwrite").parquet(rules)
 
-            def route_batch(batch_df, batch_id):
-                # the per-batch config consult (T7): re-read the rule table
-                rule_df = batch_df.sparkSession.read.parquet(rules)
-                (
-                    batch_df.join(F.broadcast(rule_df), "event_type")
-                    .write.mode("append")
-                    .parquet(stage.out)
-                )
-
-            stream = stage.read_stream(spark, "day string, event_type string")
-            write_rules(_CFG_V1)
-            for d in days[:split]:
-                stage.stage_slice(ev.filter(F.col("day") == d))
-            stage.run_foreach_batch(stream, route_batch)
-            write_rules(_CFG_V2)
-            for d in days[split:]:
-                stage.stage_slice(ev.filter(F.col("day") == d))
-            # resume from the same checkpoint under the swapped rules
-            stage.run_foreach_batch(stream, route_batch)
-            return (
-                spark.read.parquet(stage.out)
-                .groupBy("day", "event_type", "route")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("ct"))
+        def route_batch(batch_df, batch_id):
+            # the per-batch config consult (T7): re-read the rule table
+            rule_df = batch_df.sparkSession.read.parquet(rules)
+            (
+                batch_df.join(F.broadcast(rule_df), "event_type")
+                .write.mode("append")
+                .parquet(stage.out)
             )
-        finally:
-            if ev is not None:
-                ev.unpersist()
+
+        stream = stage.read_stream(spark, "day string, event_type string")
+        write_rules(_CFG_V1)
+        stage.stage_by(half.filter(F.col("slice") == 0), "slice")
+        stage.run_foreach_batch(stream, route_batch)
+        write_rules(_CFG_V2)
+        stage.stage_by(half.filter(F.col("slice") == 1), "slice")
+        # resume from the same checkpoint under the swapped rules
+        stage.run_foreach_batch(stream, route_batch)
+        if not _has_parquet(stage.out):
+            # no events: nothing was staged, so the sink never ran, and its
+            # output (batch joined to the rule table) is not the stream's
+            # schema
+            return spark.createDataFrame(
+                [], "day string, event_type string, route string, ct bigint"
+            )
+        return (
+            spark.read.parquet(stage.out)
+            .groupBy("day", "event_type", "route")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("ct"))
+        )
 
 
 def _cfg_swap_sql() -> str:
@@ -1616,64 +1571,61 @@ def streaming_kmv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from realtimedatawarehouse_self_spark.streaming.stateful import kmv_kmin
 
-    dh = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-kmv-")
-            # (day, h) distinct — the SAME grain as the shared batch
-            # oracle's dh CTE; slices key on the hash so the frame needs
-            # no user column
-            dh = (
-                load_table(spark, sf_dir, "events")
-                .filter(F.col("user_id").isNotNull())
-                .select(
-                    F.date_format(
-                        F.date_trunc("day", "ts"), "yyyy-MM-dd"
-                    ).alias("day"),
-                    _h60("user_id").alias("h"),
-                )
-                .distinct()
-                .persist()
+        stage = _MicroBatchStage("rtdw-kmv-")
+        # (day, h) distinct — the SAME grain as the shared batch
+        # oracle's dh CTE; slices key on the hash so the frame needs
+        # no user column
+        dh = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("user_id").isNotNull())
+            .select(
+                F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
+                    "day"
+                ),
+                _h60("user_id").alias("h"),
             )
-            for i in range(KMV_STREAM_SLICES):
-                stage.stage_slice(
-                    dh.filter(F.col("h") % KMV_STREAM_SLICES == i).select(
-                        "day", "h", F.lit(0).cast("int").alias("flush")
-                    )
-                )
-            stage.stage_sentinel(
-                dh.select("day")
-                .distinct()
-                .select(
-                    "day",
-                    F.lit(0).cast("bigint").alias("h"),
-                    F.lit(1).cast("int").alias("flush"),
-                )
+            .distinct()
+        )
+        stage.stage_by(
+            dh.select(
+                "day",
+                "h",
+                F.lit(0).cast("int").alias("flush"),
+                (F.col("h") % KMV_STREAM_SLICES).alias("slice"),
+            ),
+            "slice",
+        )
+        stage.stage_sentinel(
+            dh.select("day")
+            .distinct()
+            .select(
+                "day",
+                F.lit(0).cast("bigint").alias("h"),
+                F.lit(1).cast("int").alias("flush"),
             )
-            schema = "day string, h bigint, flush int"
-            sketch = stage.run_to_parquet(
-                spark, kmv_kmin(stage.read_stream(spark, schema), k=KMV_K)
-            ).select("day", "h_k", "n_in")
-            exact = dh.groupBy("day").agg(
-                F.count(F.lit(1)).cast("bigint").alias("exact_users")
-            )
-            est = sketch.join(exact, "day").select(
-                F.col("day").alias("d"),
-                "exact_users",
-                _kmv_estimate("h_k", "n_in").alias("kmv_users"),
-            )
-            return est.select(
-                "d",
-                "exact_users",
-                "kmv_users",
-                F.expr(
-                    "CAST(abs(kmv_users - exact_users) * 1000000"
-                    " div exact_users AS BIGINT)"
-                ).alias("err_ppm"),
-            )
-        finally:
-            if dh is not None:
-                dh.unpersist()
+        )
+        schema = "day string, h bigint, flush int"
+        sketch = stage.run_to_parquet(
+            spark, kmv_kmin(stage.read_stream(spark, schema), k=KMV_K)
+        ).select("day", "h_k", "n_in")
+        exact = dh.groupBy("day").agg(
+            F.count(F.lit(1)).cast("bigint").alias("exact_users")
+        )
+        est = sketch.join(exact, "day").select(
+            F.col("day").alias("d"),
+            "exact_users",
+            _kmv_estimate("h_k", "n_in").alias("kmv_users"),
+        )
+        return est.select(
+            "d",
+            "exact_users",
+            "kmv_users",
+            F.expr(
+                "CAST(abs(kmv_users - exact_users) * 1000000"
+                " div exact_users AS BIGINT)"
+            ).alias("err_ppm"),
+        )
 
 
 def _kmv_stream_sql() -> str:
@@ -1708,8 +1660,8 @@ def streaming_cdc_apply_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.streaming.sinks import upsert_parquet
 
     with _twin_confs(spark):
-        stage = _MicroBatchStage("rtdw-cdc-", extra_dirs=("store",))
-        store = stage.store
+        stage = _MicroBatchStage("rtdw-cdc-")
+        store = os.path.join(stage.base, "store")
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -1728,28 +1680,23 @@ def streaming_cdc_apply_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         inserts = orders.select(
             F.expr(
                 env.format(typ="'insert'", seq=1, status="o_orderstatus")
-            ).alias("value")
+            ).alias("value"),
+            F.lit(0).alias("slice"),
         )
         updates = orders.filter(F.col("o_orderkey") % 3 == 0).select(
-            F.col("o_orderkey").alias("k"),
             F.expr(env.format(typ="'update'", seq=2, status="'U'")).alias(
                 "value"
             ),
+            (F.col("o_orderkey") % 2).alias("slice"),
         )
         deletes = orders.filter(F.col("o_orderkey") % 13 == 0).select(
             F.expr(
                 env.format(typ="'delete'", seq=3, status="o_orderstatus")
-            ).alias("value")
+            ).alias("value"),
+            F.lit(1).alias("slice"),
         )
-        stage.stage_slice(
-            inserts.unionByName(
-                updates.filter(F.col("k") % 2 == 0).select("value")
-            )
-        )
-        stage.stage_slice(
-            updates.filter(F.col("k") % 2 == 1)
-            .select("value")
-            .unionByName(deletes)
+        stage.stage_by(
+            inserts.unionByName(updates).unionByName(deletes), "slice", slots=2
         )
 
         def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1772,7 +1719,7 @@ def streaming_cdc_apply_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 delete_col="is_delete",
             )
 
-        # both slices are always staged, so the store is always written
+        # both slots are always staged, so the store is always written
         stage.run_foreach_batch(
             stage.read_stream(spark, "value string"), apply_batch
         )
@@ -1826,12 +1773,11 @@ def streaming_hll_merge_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_register_merge,
     )
 
-    dh = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-hll-")
-            dh = _daily_hashes(spark, sf_dir).persist()
-            dr = dh.select(
+        stage = _MicroBatchStage("rtdw-hll-")
+        dh = _daily_hashes(spark, sf_dir)
+        stage.stage_by(
+            dh.select(
                 F.date_format("d", "yyyy-MM-dd").alias("day"),
                 F.expr(f"h div {_HLL_POW_REST}").alias("reg"),
                 F.expr(
@@ -1839,71 +1785,62 @@ def streaming_hll_merge_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"ELSE {_HLL_RANK_MAX} - length(bin(h % {_HLL_POW_REST}))"
                     f" END"
                 ).alias("rank"),
-                F.col("h"),
-            )
-            for i in range(HLL_STREAM_SLICES):
-                stage.stage_slice(
-                    dr.filter(F.col("h") % HLL_STREAM_SLICES == i).select(
-                        "day",
-                        "reg",
-                        "rank",
-                        F.lit(0).cast("int").alias("flush"),
-                    )
-                )
-            stage.stage_sentinel(
-                dh.select(F.date_format("d", "yyyy-MM-dd").alias("day"))
-                .distinct()
-                .select(
-                    "day",
-                    F.lit(0).cast("bigint").alias("reg"),
-                    F.lit(0).cast("bigint").alias("rank"),
-                    F.lit(1).cast("int").alias("flush"),
-                )
-            )
-            schema = "day string, reg bigint, rank bigint, flush int"
-            sketch = stage.run_to_parquet(
-                spark,
-                hll_register_merge(
-                    stage.read_stream(spark, schema),
-                    m=HLL_M,
-                    rank_max=_HLL_RANK_MAX,
-                ),
-            ).select("day", "occupied_regs", "s_occ")
-            exact = dh.groupBy(
-                F.date_format("d", "yyyy-MM-dd").alias("day")
-            ).agg(F.count(F.lit(1)).cast("bigint").alias("exact_users"))
-            est = (
-                sketch.join(exact, "day")
-                .withColumn(
-                    "s_total",
-                    F.expr(
-                        f"s_occ + ({HLL_M} - occupied_regs)"
-                        f" * CAST({_HLL_SCALE} AS BIGINT)"
-                    ),
-                )
-                .withColumn(
-                    "hll_users",
-                    F.expr(
-                        f"CAST(CAST({HLL_ALPHA_MICRO} AS DECIMAL(38,0))"
-                        f" * {HLL_M} * {HLL_M} * {_HLL_SCALE}"
-                        f" div (CAST(s_total AS DECIMAL(38,0)) * 1000000)"
-                        f" AS BIGINT)"
-                    ),
-                )
-            )
-            return est.select(
+                F.lit(0).cast("int").alias("flush"),
+                (F.col("h") % HLL_STREAM_SLICES).alias("slice"),
+            ),
+            "slice",
+        )
+        stage.stage_sentinel(
+            dh.select(F.date_format("d", "yyyy-MM-dd").alias("day"))
+            .distinct()
+            .select(
                 "day",
-                "exact_users",
+                F.lit(0).cast("bigint").alias("reg"),
+                F.lit(0).cast("bigint").alias("rank"),
+                F.lit(1).cast("int").alias("flush"),
+            )
+        )
+        schema = "day string, reg bigint, rank bigint, flush int"
+        sketch = stage.run_to_parquet(
+            spark,
+            hll_register_merge(
+                stage.read_stream(spark, schema),
+                m=HLL_M,
+                rank_max=_HLL_RANK_MAX,
+            ),
+        ).select("day", "occupied_regs", "s_occ")
+        exact = dh.groupBy(
+            F.date_format("d", "yyyy-MM-dd").alias("day")
+        ).agg(F.count(F.lit(1)).cast("bigint").alias("exact_users"))
+        est = (
+            sketch.join(exact, "day")
+            .withColumn(
+                "s_total",
+                F.expr(
+                    f"s_occ + ({HLL_M} - occupied_regs)"
+                    f" * CAST({_HLL_SCALE} AS BIGINT)"
+                ),
+            )
+            .withColumn(
                 "hll_users",
                 F.expr(
-                    "CAST(abs(hll_users - exact_users) * 1000000"
-                    " div exact_users AS BIGINT)"
-                ).alias("err_ppm"),
-                "occupied_regs",
+                    f"CAST(CAST({HLL_ALPHA_MICRO} AS DECIMAL(38,0))"
+                    f" * {HLL_M} * {HLL_M} * {_HLL_SCALE}"
+                    f" div (CAST(s_total AS DECIMAL(38,0)) * 1000000)"
+                    f" AS BIGINT)"
+                ),
             )
-        finally:
-            if dh is not None:
-                dh.unpersist()
+        )
+        return est.select(
+            "day",
+            "exact_users",
+            "hll_users",
+            F.expr(
+                "CAST(abs(hll_users - exact_users) * 1000000"
+                " div exact_users AS BIGINT)"
+            ).alias("err_ppm"),
+            "occupied_regs",
+        )
 
 
 def _hll_stream_sql() -> str:
@@ -1983,8 +1920,8 @@ def streaming_ivm_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     from realtimedatawarehouse_self_spark.streaming.sinks import upsert_parquet
 
     with _twin_confs(spark):
-        stage = _MicroBatchStage("rtdw-ivm-", extra_dirs=("store",))
-        store = stage.store
+        stage = _MicroBatchStage("rtdw-ivm-")
+        store = os.path.join(stage.base, "store")
         orders = (
             load_table(spark, sf_dir, "orders")
             .filter(F.col("o_custkey").isNotNull())
@@ -1997,10 +1934,11 @@ def streaming_ivm_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust = load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey"
         )
-        for i in range(IVM_STREAM_SLICES):
-            stage.stage_slice(
-                orders.filter(F.col("o_orderkey") % IVM_STREAM_SLICES == i)
-            )
+        stage.stage_by(
+            orders.withColumn("slice", F.col("o_orderkey") % IVM_STREAM_SLICES),
+            "slice",
+            slots=IVM_STREAM_SLICES,
+        )
 
         def merge(batch_df: DataFrame, batch_id: int) -> None:
             sess = batch_df.sparkSession
@@ -2109,12 +2047,9 @@ def streaming_update_mode_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "event_type",
                 (_h60("user_id") % UPDATE_TWIN_SLICES).alias("slice"),
             )
-            .persist()
         )
-        for i in range(UPDATE_TWIN_SLICES):
-            stage.stage_slice(
-                ev.filter(F.col("slice") == i).select("day", "event_type")
-            )
+        # slice i is micro-batch i (the oracle's batch_seq), empty or not
+        stage.stage_by(ev, "slice", slots=UPDATE_TWIN_SLICES)
 
         out_rows = os.path.join(stage.base, "emissions")
 
@@ -2129,7 +2064,6 @@ def streaming_update_mode_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).cast("bigint").alias("cum_events"))
         )
         stage.run_foreach_batch(agg, sink, output_mode="update")
-        ev.unpersist()
         return spark.read.parquet(out_rows).select(
             "day", "event_type", "batch_seq", "cum_events"
         )
@@ -2193,12 +2127,9 @@ def streaming_complete_mode_twin(
                     " THEN 0 WHEN event_type = 'click' THEN 2 ELSE 1 END"
                 ).alias("slice"),
             )
-            .persist()
         )
-        for i in range(3):
-            stage.stage_slice(
-                ev.filter(F.col("slice") == i).select("event_type")
-            )
+        # slice i is micro-batch i (the oracle's batch_seq), empty or not
+        stage.stage_by(ev, "slice", slots=3)
 
         out_rows = os.path.join(stage.base, "emissions")
 
@@ -2213,7 +2144,6 @@ def streaming_complete_mode_twin(
             .agg(F.count(F.lit(1)).cast("bigint").alias("cum_events"))
         )
         stage.run_foreach_batch(agg, sink, output_mode="complete")
-        ev.unpersist()
         return spark.read.parquet(out_rows).select(
             "event_type", "batch_seq", "cum_events"
         )
@@ -2280,7 +2210,10 @@ def streaming_domain_cap_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = _MicroBatchStage("rtdw-domcap-")
         # ascending doc_id ranges → batch i holds strictly smaller ids
         # than batch i+1 (the feeder's half of the arrival contract)
-        _stage_ranges(stage, docs, "doc_id", DOMCAP_BATCHES)
+        stage.stage_by(
+            docs.withColumn("slice", _range_band("doc_id", DOMCAP_BATCHES)),
+            "slice",
+        )
         schema = "host string, doc_id long"
         return stage.run_to_parquet(
             spark,
@@ -2333,76 +2266,50 @@ def streaming_episode_return_twin(
         episode_returns,
     )
 
-    events = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-episode-")
-            events = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-                )
-                .select(
-                    "user_id",
-                    F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                    F.expr(
-                        "CAST(unix_micros(ts) AS BIGINT)"
-                    ).alias("ts_micro"),
-                    F.coalesce("event_id", F.lit(-1))
-                    .cast("bigint")
-                    .alias("ord_eid"),
-                    F.expr(
-                        "CAST(floor(coalesce(value, 0.0) * 100 + 0.5)"
-                        " AS BIGINT)"
-                    ).alias("r"),
-                    F.hour("ts").alias("hr"),
-                )
-                .persist()
+        stage = _MicroBatchStage("rtdw-episode-")
+        # three hour bands, staged in order: every key's later-hour rows
+        # land in strictly later micro-batches
+        schema = stage.stage_by(
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+            .select(
+                "user_id",
+                F.date_format("ts", "yyyy-MM-dd").alias("day"),
+                F.expr("CAST(unix_micros(ts) AS BIGINT)").alias("ts_micro"),
+                F.coalesce("event_id", F.lit(-1)).cast("bigint").alias("ord_eid"),
+                F.expr(
+                    "CAST(floor(coalesce(value, 0.0) * 100 + 0.5) AS BIGINT)"
+                ).alias("r"),
+                F.expr(f"hour(ts) div {EPISODE_HOUR_BAND}").alias("slice"),
+            ),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark, episode_returns(stage.read_stream(spark, schema))
+        )
+        return (
+            sunk.groupBy("user_id", "day")
+            .agg(
+                F.max_by(
+                    F.struct(
+                        "n_steps",
+                        "total_reward_cents",
+                        "discounted_return_cents",
+                    ),
+                    "n_steps",
+                ).alias("fin")
             )
-            # three hour bands, staged in order: every key's later-hour
-            # rows land in strictly later micro-batches
-            for lo in range(0, 24, EPISODE_HOUR_BAND):
-                stage.stage_slice(
-                    events.filter(
-                        (F.col("hr") >= lo)
-                        & (F.col("hr") < lo + EPISODE_HOUR_BAND)
-                    ).drop("hr")
-                )
-            sunk = stage.run_to_parquet(
-                spark,
-                episode_returns(
-                    stage.read_stream(
-                        spark, events.drop("hr").schema
-                    )
+            .select(
+                "user_id",
+                "day",
+                F.col("fin.n_steps").alias("n_steps"),
+                F.col("fin.total_reward_cents").alias("total_reward_cents"),
+                F.col("fin.discounted_return_cents").alias(
+                    "discounted_return_cents"
                 ),
             )
-            return (
-                sunk.groupBy("user_id", "day")
-                .agg(
-                    F.max_by(
-                        F.struct(
-                            "n_steps",
-                            "total_reward_cents",
-                            "discounted_return_cents",
-                        ),
-                        "n_steps",
-                    ).alias("fin")
-                )
-                .select(
-                    "user_id",
-                    "day",
-                    F.col("fin.n_steps").alias("n_steps"),
-                    F.col("fin.total_reward_cents").alias(
-                        "total_reward_cents"
-                    ),
-                    F.col("fin.discounted_return_cents").alias(
-                        "discounted_return_cents"
-                    ),
-                )
-            )
-        finally:
-            if events is not None:
-                events.unpersist()
+        )
 
 
 def _episode_stream_sql() -> str:
@@ -2438,46 +2345,41 @@ def streaming_chunk_owner_twin(
         chunk_owner_election,
     )
 
-    chunks = None
     with _twin_confs(spark):
-        try:
-            chunks = (
-                _cdc_chunk_frame(spark, sf_dir)
-                .select("chunk_md5", F.col("doc_id").cast("long"))
-                .persist()
+        stage = _MicroBatchStage("rtdw-chunkown-")
+        stage.stage_by(
+            _cdc_chunk_frame(spark, sf_dir).select(
+                "chunk_md5",
+                F.col("doc_id").cast("long"),
+                _range_band("doc_id", CHUNK_OWNER_BATCHES).alias("slice"),
+            ),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark,
+            chunk_owner_election(
+                stage.read_stream(spark, "chunk_md5 string, doc_id long")
+            ),
+        )
+        # cumulative emissions: final row per hash = max occurrences;
+        # report duplicated chunks only (n_docs >= 2), matching the
+        # batch op's dup semantics
+        fin = (
+            sunk.groupBy("chunk_md5")
+            .agg(
+                F.max_by(
+                    F.struct("owner_doc", "n_docs", "n_occurrences"),
+                    "n_occurrences",
+                ).alias("fin")
             )
-            stage = _MicroBatchStage("rtdw-chunkown-")
-            _stage_ranges(stage, chunks, "doc_id", CHUNK_OWNER_BATCHES)
-            sunk = stage.run_to_parquet(
-                spark,
-                chunk_owner_election(
-                    stage.read_stream(
-                        spark, "chunk_md5 string, doc_id long"
-                    )
-                ),
+            .select(
+                "chunk_md5",
+                F.col("fin.owner_doc").alias("owner_doc"),
+                F.col("fin.n_docs").alias("n_docs"),
+                F.col("fin.n_occurrences").alias("n_occurrences"),
             )
-            # cumulative emissions: final row per hash = max occurrences;
-            # report duplicated chunks only (n_docs >= 2), matching the
-            # batch op's dup semantics
-            fin = (
-                sunk.groupBy("chunk_md5")
-                .agg(
-                    F.max_by(
-                        F.struct("owner_doc", "n_docs", "n_occurrences"),
-                        "n_occurrences",
-                    ).alias("fin")
-                )
-                .select(
-                    "chunk_md5",
-                    F.col("fin.owner_doc").alias("owner_doc"),
-                    F.col("fin.n_docs").alias("n_docs"),
-                    F.col("fin.n_occurrences").alias("n_occurrences"),
-                )
-            )
-            return fin.filter(F.col("n_docs") >= 2)
-        finally:
-            if chunks is not None:
-                chunks.unpersist()
+        )
+        return fin.filter(F.col("n_docs") >= 2)
 
 
 def _chunk_owner_stream_sql() -> str:
@@ -2514,6 +2416,8 @@ HAVING count(DISTINCT doc_id) >= 2
 def streaming_vocab_growth_twin(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
+    from pyspark.sql import Window as _W
+
     from realtimedatawarehouse_self_spark.functions.exprs import tokens
     from realtimedatawarehouse_self_spark.plans.corpus_ops import (
         VOCAB_BANDS,
@@ -2522,89 +2426,70 @@ def streaming_vocab_growth_twin(
         vocab_first_seen,
     )
 
-    banded = None
     with _twin_confs(spark):
-        try:
-            docs = (
-                load_table(spark, sf_dir, "documents")
-                .where(
-                    F.col("text").isNotNull() & F.col("doc_id").isNotNull()
-                )
-                .withColumn("tok_arr", tokens("text"))
-                .filter(F.size("tok_arr") >= 1)
-                .select("doc_id", "tok_arr")
-            )
-            # an empty source has no bounds; any band expression is then
-            # valid, and _stage_ranges stages nothing
-            lo, hi = (
-                v or 0
-                for v in docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-            )
-            banded = docs.withColumn(
-                "band",
+        banded = (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("text").isNotNull() & F.col("doc_id").isNotNull())
+            .withColumn("tok_arr", tokens("text"))
+            .filter(F.size("tok_arr") >= 1)
+            .select(
+                "tok_arr",
                 F.expr(
-                    f"CAST((doc_id - {lo}) * {VOCAB_BANDS}"
-                    f" div ({hi} - {lo} + 1) AS INT)"
-                ),
-            ).persist()
-            stage = _MicroBatchStage("rtdw-vocabgr-")
-            # one band per micro-batch, in band order
-            _stage_ranges(
-                stage,
-                banded.select("band", F.explode("tok_arr").alias("tok")).distinct(),
+                    f"CAST((doc_id - min(doc_id) OVER ()) * {VOCAB_BANDS}"
+                    " div (max(doc_id) OVER () - min(doc_id) OVER () + 1)"
+                    " AS INT)"
+                ).alias("band"),
+            )
+        )
+        stage = _MicroBatchStage("rtdw-vocabgr-")
+        # one band per micro-batch, in band order
+        stage.stage_by(
+            banded.select(
+                "band", F.explode("tok_arr").alias("tok"), F.col("band").alias("slice")
+            ).distinct(),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark,
+            vocab_first_seen(stage.read_stream(spark, "tok string, band int")),
+        )
+        # cumulative emissions re-state a constant row once set
+        new_types = (
+            sunk.select("tok", "first_band")
+            .distinct()
+            .groupBy(F.col("first_band").alias("band"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("new_types"))
+        )
+        band_docs = banded.groupBy("band").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum(F.size("tok_arr")).cast("bigint").alias("band_tokens"),
+        )
+        curve = band_docs.join(new_types, "band", "left").withColumn(
+            "new_types", F.coalesce("new_types", F.lit(0)).cast("bigint")
+        )
+        wcum = (
+            _W.partitionBy()
+            .orderBy("band")
+            .rowsBetween(_W.unboundedPreceding, _W.currentRow)
+        )
+        return (
+            curve.withColumn(
+                "cum_tokens",
+                F.sum("band_tokens").over(wcum).cast("bigint"),
+            )
+            .withColumn("cum_vocab", F.sum("new_types").over(wcum).cast("bigint"))
+            .select(
                 "band",
-                VOCAB_BANDS,
-            )
-            sunk = stage.run_to_parquet(
-                spark,
-                vocab_first_seen(
-                    stage.read_stream(spark, "tok string, band int")
+                "n_docs",
+                "band_tokens",
+                "cum_tokens",
+                "new_types",
+                "cum_vocab",
+                F.expr("cum_vocab * 1000000 div cum_tokens").alias(
+                    "type_token_micro"
                 ),
             )
-            # cumulative emissions re-state a constant row once set
-            new_types = (
-                sunk.select("tok", "first_band")
-                .distinct()
-                .groupBy(F.col("first_band").alias("band"))
-                .agg(F.count(F.lit(1)).cast("bigint").alias("new_types"))
-            )
-            band_docs = banded.groupBy("band").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum(F.size("tok_arr")).cast("bigint").alias("band_tokens"),
-            )
-            curve = band_docs.join(new_types, "band", "left").withColumn(
-                "new_types", F.coalesce("new_types", F.lit(0)).cast("bigint")
-            )
-            from pyspark.sql import Window as _W
-
-            wcum = (
-                _W.partitionBy()
-                .orderBy("band")
-                .rowsBetween(_W.unboundedPreceding, _W.currentRow)
-            )
-            return (
-                curve.withColumn(
-                    "cum_tokens",
-                    F.sum("band_tokens").over(wcum).cast("bigint"),
-                )
-                .withColumn(
-                    "cum_vocab", F.sum("new_types").over(wcum).cast("bigint")
-                )
-                .select(
-                    "band",
-                    "n_docs",
-                    "band_tokens",
-                    "cum_tokens",
-                    "new_types",
-                    "cum_vocab",
-                    F.expr("cum_vocab * 1000000 div cum_tokens").alias(
-                        "type_token_micro"
-                    ),
-                )
-            )
-        finally:
-            if banded is not None:
-                banded.unpersist()
+        )
 
 
 def _vocab_growth_stream_sql() -> str:
@@ -2639,56 +2524,52 @@ def streaming_frontier_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window as _W
 
-    ranked = None
     with _twin_confs(spark):
-        try:
-            docs = (
-                load_table(spark, sf_dir, "documents")
-                .where(F.col("text").isNotNull())
-                .withColumn("host", F.expr(_HOST_EXPR))
-                .select("doc_id", "host", "n_chars")
-            )
-            wr = _W.partitionBy("host").orderBy(
-                F.col("n_chars").desc(), "doc_id"
-            )
-            ranked = docs.withColumn(
-                "rank", F.row_number().over(wr).cast("int")
-            ).persist()
-            stage = _MicroBatchStage("rtdw-frontier-")
-            # ascending per-host rank ranges (ranks start at 1)
-            _stage_ranges(stage, ranked, "rank", FRONTIER_TWIN_BATCHES)
-            sunk = stage.run_to_parquet(
-                spark,
-                frontier_epoch_assign(
-                    stage.read_stream(
-                        spark,
-                        "host string, doc_id long, n_chars long, rank int",
-                    ),
-                    HOST_FETCH_RATE,
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .where(F.col("text").isNotNull())
+            .withColumn("host", F.expr(_HOST_EXPR))
+            .select("doc_id", "host", "n_chars")
+        )
+        wr = _W.partitionBy("host").orderBy(F.col("n_chars").desc(), "doc_id")
+        ranked = docs.withColumn("rank", F.row_number().over(wr).cast("int"))
+        stage = _MicroBatchStage("rtdw-frontier-")
+        # ascending per-host rank ranges (ranks start at 1)
+        stage.stage_by(
+            ranked.withColumn(
+                "slice", _range_band("rank", FRONTIER_TWIN_BATCHES)
+            ),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark,
+            frontier_epoch_assign(
+                stage.read_stream(
+                    spark,
+                    "host string, doc_id long, n_chars long, rank int",
                 ),
-            )
-            per_cell = sunk.groupBy("host", "fetch_epoch").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_urls"),
-                F.sum("n_chars").cast("bigint").alias("epoch_chars"),
-                F.min("doc_id").cast("bigint").alias("first_doc_id"),
-            )
-            return per_cell.withColumn(
-                "host_epochs",
-                F.expr(
-                    f"CAST((sum(n_urls) OVER (PARTITION BY host) - 1)"
-                    f" div {HOST_FETCH_RATE} + 1 AS BIGINT)"
-                ),
-            ).select(
-                "host",
-                "fetch_epoch",
-                "n_urls",
-                "epoch_chars",
-                "first_doc_id",
-                "host_epochs",
-            )
-        finally:
-            if ranked is not None:
-                ranked.unpersist()
+                HOST_FETCH_RATE,
+            ),
+        )
+        per_cell = sunk.groupBy("host", "fetch_epoch").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_urls"),
+            F.sum("n_chars").cast("bigint").alias("epoch_chars"),
+            F.min("doc_id").cast("bigint").alias("first_doc_id"),
+        )
+        return per_cell.withColumn(
+            "host_epochs",
+            F.expr(
+                f"CAST((sum(n_urls) OVER (PARTITION BY host) - 1)"
+                f" div {HOST_FETCH_RATE} + 1 AS BIGINT)"
+            ),
+        ).select(
+            "host",
+            "fetch_epoch",
+            "n_urls",
+            "epoch_chars",
+            "first_doc_id",
+            "host_epochs",
+        )
 
 
 def _frontier_stream_sql() -> str:
@@ -2723,72 +2604,48 @@ def streaming_sft_gate_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         sft_gate_fold,
     )
 
-    turns = None
     with _twin_confs(spark):
-        try:
-            stage = _MicroBatchStage("rtdw-sftgate-")
-            turns = (
-                load_table(spark, sf_dir, "events")
-                .filter(
-                    F.col("ts").isNotNull()
-                    & F.col("user_id").isNotNull()
-                    & F.col("event_type").isNotNull()
-                )
-                .select(
-                    "user_id",
-                    F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                    F.expr("CAST(unix_micros(ts) AS BIGINT)").alias(
-                        "ts_micro"
-                    ),
-                    F.coalesce("event_id", F.lit(-1))
-                    .cast("bigint")
-                    .alias("ord_eid"),
-                    F.when(
-                        F.col("event_type").isin(*_USER_TYPES), "user"
-                    )
-                    .otherwise("assistant")
-                    .alias("role"),
-                    F.hour("ts").alias("hr"),
-                )
-                .persist()
+        stage = _MicroBatchStage("rtdw-sftgate-")
+        schema = stage.stage_by(
+            load_table(spark, sf_dir, "events")
+            .filter(
+                F.col("ts").isNotNull()
+                & F.col("user_id").isNotNull()
+                & F.col("event_type").isNotNull()
             )
-            for lo in range(0, 24, SFT_HOUR_BAND):
-                stage.stage_slice(
-                    turns.filter(
-                        (F.col("hr") >= lo)
-                        & (F.col("hr") < lo + SFT_HOUR_BAND)
-                    ).drop("hr")
-                )
-            sunk = stage.run_to_parquet(
-                spark,
-                sft_gate_fold(
-                    stage.read_stream(spark, turns.drop("hr").schema),
-                    MIN_TURNS,
-                ),
+            .select(
+                "user_id",
+                F.date_format("ts", "yyyy-MM-dd").alias("day"),
+                F.expr("CAST(unix_micros(ts) AS BIGINT)").alias("ts_micro"),
+                F.coalesce("event_id", F.lit(-1)).cast("bigint").alias("ord_eid"),
+                F.when(F.col("event_type").isin(*_USER_TYPES), "user")
+                .otherwise("assistant")
+                .alias("role"),
+                F.expr(f"hour(ts) div {SFT_HOUR_BAND}").alias("slice"),
+            ),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark, sft_gate_fold(stage.read_stream(spark, schema), MIN_TURNS)
+        )
+        fin_cols = [
+            "n_turns",
+            "n_user_turns",
+            "n_assistant_turns",
+            "alternation_violations",
+            "starts_user",
+            "ends_assistant",
+            "decision",
+        ]
+        return (
+            sunk.groupBy("user_id", "day")
+            .agg(F.max_by(F.struct(*fin_cols), "n_turns").alias("fin"))
+            .select(
+                "user_id",
+                "day",
+                *[F.col(f"fin.{c}").alias(c) for c in fin_cols],
             )
-            fin_cols = [
-                "n_turns",
-                "n_user_turns",
-                "n_assistant_turns",
-                "alternation_violations",
-                "starts_user",
-                "ends_assistant",
-                "decision",
-            ]
-            return (
-                sunk.groupBy("user_id", "day")
-                .agg(
-                    F.max_by(F.struct(*fin_cols), "n_turns").alias("fin")
-                )
-                .select(
-                    "user_id",
-                    "day",
-                    *[F.col(f"fin.{c}").alias(c) for c in fin_cols],
-                )
-            )
-        finally:
-            if turns is not None:
-                turns.unpersist()
+        )
 
 
 def _sft_gate_stream_sql() -> str:
@@ -2828,55 +2685,51 @@ def streaming_watermark_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark_pooled_counters,
     )
 
-    stats = None
     with _twin_confs(spark):
-        try:
-            docs = (
-                load_table(spark, sf_dir, "documents")
-                .filter(
-                    F.col("text").isNotNull()
-                    & F.col("source").isNotNull()
-                    & F.col("doc_id").isNotNull()
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .filter(
+                F.col("text").isNotNull()
+                & F.col("source").isNotNull()
+                & F.col("doc_id").isNotNull()
+            )
+            .withColumn("tok_arr", tokens("text"))
+        )
+        stats = _wm_doc_stats(docs, "source", "doc_id")
+        stage = _MicroBatchStage("rtdw-wmtwin-")
+        stage.stage_by(
+            stats.withColumn("slice", _range_band("doc_id", WM_TWIN_BATCHES)),
+            "slice",
+        )
+        sunk = stage.run_to_parquet(
+            spark,
+            watermark_pooled_counters(
+                stage.read_stream(
+                    spark,
+                    "source string, scored bigint, green bigint",
                 )
-                .withColumn("tok_arr", tokens("text"))
+            ),
+        )
+        fin = (
+            sunk.groupBy("source")
+            .agg(
+                F.max_by(
+                    F.struct("n_docs", "scored", "green"), "n_docs"
+                ).alias("fin")
             )
-            stats = _wm_doc_stats(docs, "source", "doc_id").persist()
-            stage = _MicroBatchStage("rtdw-wmtwin-")
-            _stage_ranges(stage, stats, "doc_id", WM_TWIN_BATCHES)
-            sunk = stage.run_to_parquet(
-                spark,
-                watermark_pooled_counters(
-                    stage.read_stream(
-                        spark,
-                        "source string, scored bigint, green bigint",
-                    )
-                ),
+            .select(
+                "source",
+                F.col("fin.n_docs").alias("n_docs"),
+                F.col("fin.scored").alias("scored"),
+                F.col("fin.green").alias("green"),
             )
-            fin = (
-                sunk.groupBy("source")
-                .agg(
-                    F.max_by(
-                        F.struct("n_docs", "scored", "green"), "n_docs"
-                    ).alias("fin")
-                )
-                .select(
-                    "source",
-                    F.col("fin.n_docs").alias("n_docs"),
-                    F.col("fin.scored").alias("scored"),
-                    F.col("fin.green").alias("green"),
-                )
-            )
-            return fin.withColumn(
-                "z_micro", F.expr(WM_Z_EXPR)
-            ).withColumn(
-                "verdict",
-                F.when(
-                    F.col("z_micro") >= WM_Z_KEEP_MICRO, "watermarked"
-                ).otherwise("clean"),
-            )
-        finally:
-            if stats is not None:
-                stats.unpersist()
+        )
+        return fin.withColumn("z_micro", F.expr(WM_Z_EXPR)).withColumn(
+            "verdict",
+            F.when(F.col("z_micro") >= WM_Z_KEEP_MICRO, "watermarked").otherwise(
+                "clean"
+            ),
+        )
 
 
 def _watermark_twin_sql() -> str:

@@ -25,7 +25,12 @@ State design (100 TB notes):
   (value state with native `ttlDurationMs`) would be the production API,
   but its state server requires protobuf, which this container lacks
   (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE); day-scoped state is
-  the TTL equivalent, and the bodies port to transformWithState unchanged.
+  the TTL equivalent, and the bodies port to transformWithState unchanged;
+- T6 (first row per key, the reference's join-retraction defense) needs
+  no processor here: Spark's ``dropDuplicatesWithinWatermark`` bounds
+  the dedup state to the watermark horizon (pinned by
+  ``tests/test_streaming.py::test_drop_duplicates_within_watermark`` and
+  the oracle-gated query ``streaming_dedup_within_watermark``).
 
 Citations: T1 BaseLogApp.java:76-106; T2 Dws02...java:81-153;
 T4 Dws04...java:82-125; T5 Dws06...java:68-105; T6 Dws09...java:99-145.
@@ -172,35 +177,6 @@ def login_back_flags(events: DataFrame, key: str = "uid") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# T6: first-row-per-key dedup (join-retraction defense).
-# ---------------------------------------------------------------------------
-def first_row_per_key(events: DataFrame, key: str, payload_cols: list[str]) -> DataFrame:
-    """Keeps only the first arrival per key (Dws09...java:99-145; 5 s TTL in
-    the reference bounds state to the retraction window — here state is a
-    single marker per key; production would use
-    `dropDuplicatesWithinWatermark([key])`, which this engine prefers —
-    this processor exists for semantic parity tests).
-    """
-    fields = [StructField(key, StringType())]
-    fields += [StructField(c, StringType()) for c in payload_cols]
-    schema = StructType(fields)
-    state_schema = StructType([StructField("seen", StringType())])
-
-    def fn(key_tuple, pdfs, state) -> Iterator[pd.DataFrame]:
-        seen = state.exists
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if seen or pdf.empty:
-            yield pdf.iloc[0:0]
-        else:
-            state.update(("1",))
-            yield pdf.iloc[0:1]
-
-    return events.groupBy(key).applyInPandasWithState(
-        fn, schema, state_schema, "append", "NoTimeout"
-    )
-
-
-# ---------------------------------------------------------------------------
 # Floor-at-zero running balance — streaming twin of
 # plans/state_ops.py::running_balance_floor (the batch side computes the
 # same values via the reflection identity over two window functions; here
@@ -261,7 +237,7 @@ def ewma_daily(events: DataFrame, key: str = "event_type") -> DataFrame:
 
     Contract: days must arrive in non-decreasing order across micro-batches
     (the sequential-state contract any EWMA consumer needs; the streaming
-    twin harness writes day-grouped source files with increasing mtimes).
+    twin harness stages 7-day slices with increasing mtimes).
     Scale note: counting inside the pandas fn is the test-harness shape —
     at corpus scale the daily counts would be pre-aggregated (foreachBatch
     or the batch operator) and only the per-(key, day) count rows would
@@ -317,7 +293,7 @@ def cusum_daily(events: DataFrame, key: str = "event_type") -> DataFrame:
     per-key baseline mean joined on statically (a production CUSUM's
     baseline comes from a reference period the same way). State is the
     (c_up, c_dn) pair of bigints; days fold in order within and across
-    micro-batches (same sequential-state contract and day-grouped-file
+    micro-batches (same sequential-state contract and day-sliced
     harness as ewma_daily).
     """
     from pyspark.sql.types import LongType
@@ -382,7 +358,7 @@ def topk_hitters(
     harness's final sentinel file carries one flush=1 row per key (no
     watermark/filter in the stream graph, so the W5 sentinel-pushdown trap
     does not apply). On flush the key emits its counter table and drops
-    its state.
+    its state; any other batch emits nothing.
     """
     from pyspark.sql.types import LongType
 
@@ -431,13 +407,6 @@ def topk_hitters(
                     [int(c) for c in counters.to_numpy()],
                 )
             )
-            yield pd.DataFrame(
-                {
-                    key: pd.Series([], dtype="str"),
-                    "user_id": pd.Series([], dtype="int64"),
-                    "approx_ct": pd.Series([], dtype="int64"),
-                }
-            )
 
     return events.groupBy(key).applyInPandasWithState(
         fn, schema, state_schema, "append", "NoTimeout"
@@ -458,7 +427,7 @@ def kmv_kmin(events: DataFrame, k: int = 8) -> DataFrame:
     Input rows: (day, h, flush). Data rows have flush=0; the harness's
     final sentinel file carries one flush=1 row per day. On flush the key
     emits (day, h_k, n_in) — the sketch summary the batch-side estimator
-    consumes — and drops its state.
+    consumes — and drops its state; any other batch emits nothing.
     """
     from pyspark.sql.types import LongType
 
@@ -491,13 +460,6 @@ def kmv_kmin(events: DataFrame, k: int = 8) -> DataFrame:
             )
         else:
             state.update(([int(x) for x in sorted(hs)],))
-            yield pd.DataFrame(
-                {
-                    "day": pd.Series([], dtype="str"),
-                    "h_k": pd.Series([], dtype="int64"),
-                    "n_in": pd.Series([], dtype="int64"),
-                }
-            )
 
     return events.groupBy("day").applyInPandasWithState(
         fn, schema, state_schema, "append", "NoTimeout"
@@ -523,9 +485,9 @@ def hll_register_merge(
     harness's final sentinel carries one flush=1 row per day. On flush
     the key emits (day, occupied_regs, s_occ) — the two sufficient
     statistics of the shifted harmonic sum (s_occ = sum over occupied
-    registers of 2^(rank_max - M_j)) — and drops its state; the
-    JVM-side plan composes the same alpha/harmonic estimate as the
-    batch operator.
+    registers of 2^(rank_max - M_j)) — and drops its state; any other
+    batch emits nothing. The JVM-side plan composes the same
+    alpha/harmonic estimate as the batch operator.
     """
     from pyspark.sql.types import LongType
 
@@ -562,13 +524,6 @@ def hll_register_merge(
             )
         else:
             state.update(([int(v) for v in regs],))
-            yield pd.DataFrame(
-                {
-                    "day": pd.Series([], dtype="str"),
-                    "occupied_regs": pd.Series([], dtype="int64"),
-                    "s_occ": pd.Series([], dtype="int64"),
-                }
-            )
 
     return events.groupBy("day").applyInPandasWithState(
         fn, schema, state_schema, "append", "NoTimeout"

@@ -552,8 +552,8 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     """T6 production path: Spark's native dropDuplicatesWithinWatermark
     bounds dedup state to the watermark horizon (the reference's 5 s
     Dws09 TTL expressed as engine machinery instead of custom state).
-    first_row_per_key (streaming/stateful.py) is the semantic-parity
-    processor; this pins the native operator on the same fixture shape."""
+    This is COVERAGE row T6's streaming implementation; the oracle-gated
+    query streaming_dedup_within_watermark pins its re-emission cadence."""
     from datetime import datetime
 
     rows = [
@@ -785,7 +785,6 @@ def test_login_back_flags_matches_dws04(spark):
     import __spark_entry__ as e
     from realtimedatawarehouse_self_spark.plans.streaming_twins import (
         _MicroBatchStage,
-        _day_groups,
     )
     from realtimedatawarehouse_self_spark.streaming.stateful import (
         login_back_flags,
@@ -803,8 +802,10 @@ def test_login_back_flags_matches_dws04(spark):
     days = sorted(r[0] for r in logins.select("dt").distinct().collect())
     assert len(days) > 7  # the back flag needs an 8-day gap to fire
     stage = _MicroBatchStage("rtdw-t4-")
-    for grp in _day_groups(days, 3):
-        stage.stage_slice(logins.filter(F.col("dt").isin(grp)))
+    # three calendar days per micro-batch
+    stage.stage_by(
+        logins.withColumn("b", F.expr(f"datediff(dt, '{days[0]}') div 3")), "b"
+    )
     flags = stage.run_to_parquet(
         spark,
         login_back_flags(stage.read_stream(spark, "uid string, dt string")),

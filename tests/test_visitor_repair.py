@@ -62,10 +62,13 @@ def test_visitor_repair_rules_across_micro_batches(spark):
 
     with _twin_confs(spark):
         stage = _MicroBatchStage("rtdw-t1-rules-")
-        for batch in BATCHES:
-            stage.stage_slice(
-                spark.createDataFrame([r[:4] for r in batch], SCHEMA)
-            )
+        stage.stage_by(
+            spark.createDataFrame(
+                [(*r[:4], b) for b, batch in enumerate(BATCHES) for r in batch],
+                "mid string, dt string, is_new string, payload string, b int",
+            ),
+            "b",
+        )
         out = stage.run_to_parquet(
             spark, visitor_repair(stage.read_stream(spark, SCHEMA))
         )
@@ -82,7 +85,7 @@ def test_visitor_repair_stream_matches_batch_twin(spark):
     )
     from realtimedatawarehouse_self_spark.plans.streaming_twins import (
         _MicroBatchStage,
-        _stage_ranges,
+        _range_band,
         _twin_confs,
     )
     from realtimedatawarehouse_self_spark.sources.tables import load_table
@@ -97,12 +100,12 @@ def test_visitor_repair_stream_matches_batch_twin(spark):
             F.unix_date(F.to_date("ts")).alias("day"),
         )
         stage = _MicroBatchStage("rtdw-t1-parity-")
-        _stage_ranges(stage, events, "day", 4)
+        schema = stage.stage_by(
+            events.withColumn("band", _range_band("day", 4)).drop("day"), "band"
+        )
         out = stage.run_to_parquet(
             spark,
-            visitor_repair(
-                stage.read_stream(spark, events.schema).drop("day"), key="user_id"
-            ),
+            visitor_repair(stage.read_stream(spark, schema), key="user_id"),
         )
         got = {int(r.payload): int(r.is_new) for r in out.collect()}
     want = {
