@@ -34,6 +34,7 @@ from realtimedatawarehouse_self_spark.plans.llm_ops import (
     _SHINGLE_CTE,
     _docs,
     _doc_shingles,
+    materialize_repeated_ctes,
 )
 
 # eval/benchmark membership: deterministic id slice (stand-in for a real
@@ -4435,7 +4436,7 @@ ORACLE = {
     "epoch_shard_plan": _EPOCH_SHARD_SQL,
     "warc_record_parse": _WARC_PARSE_SQL,
     "web_front_door_recipe": _FRONT_DOOR_SQL,
-    "crawl_to_train_funnel": _crawl_funnel_sql(),
+    "crawl_to_train_funnel": materialize_repeated_ctes(_crawl_funnel_sql()),
     "curriculum_order_plan": _CURRICULUM_SQL,
     "robots_rule_eval": _ROBOTS_RULE_SQL,
     "crawl_frontier_plan": _FRONTIER_SQL,

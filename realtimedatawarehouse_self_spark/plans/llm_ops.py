@@ -26,6 +26,8 @@ the whole module runs inside whole-stage codegen.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -3149,6 +3151,27 @@ def exact_dedup_ctes(src: str = "q") -> str:
 kept AS (SELECT {src}.* FROM {src} JOIN keep USING (doc_id))"""
 
 
+_CTE_DEF = re.compile(r"(\bWITH|,)(\s*)(\w+) AS \(")
+
+
+def materialize_repeated_ctes(sql: str) -> str:
+    """Mark each CTE named more than once outside its definition
+    ``AS MATERIALIZED``. DuckDB 1.0 inlines a CTE at every reference, so
+    along a chain of stages each read twice the work multiplies; a
+    materialized CTE is computed once. Names are counted as words: a CTE
+    whose name is also a column or alias may be marked with one reference,
+    which changes no row (the oracles' CTEs are deterministic)."""
+    shared = {
+        n
+        for n in {m[3] for m in _CTE_DEF.finditer(sql)}
+        if len(re.findall(rf"\b{n}\b", sql)) > 2
+    }
+    return _CTE_DEF.sub(
+        lambda m: f"{m[1]}{m[2]}{m[3]} AS MATERIALIZED (" if m[3] in shared else m[0],
+        sql,
+    )
+
+
 def quality_sql_ctes(extra_cols: str = "") -> str:
     """DuckDB twin of quality_gate + exact_dedup_first: CTEs tok/q/keep/
     kept over `documents`. `extra_cols` adds projected columns to tok."""
@@ -3853,7 +3876,7 @@ ORACLE = {
     "dedup_ngram_jaccard": _JACCARD_SQL,
     "dedup_jaccard_prefix_filter": _JACCARD_PREFIX_SQL,
     "cross_source_dup_matrix": _CROSS_SOURCE_SQL,
-    "minhash_band_tuning": _band_tuning_sql(),
+    "minhash_band_tuning": materialize_repeated_ctes(_band_tuning_sql()),
     "dedup_containment": _CONTAINMENT_SQL,
     "dedup_minhash_lsh": _minhash_sql(),
     "dedup_simhash": _simhash_sql(),

@@ -46,6 +46,7 @@ from realtimedatawarehouse_self_spark.functions.exprs import (
     ordered_pair_structs,
     tokens,
 )
+from realtimedatawarehouse_self_spark.plans.llm_ops import materialize_repeated_ctes
 from realtimedatawarehouse_self_spark.session import apply_runtime_confs
 from realtimedatawarehouse_self_spark.sources.tables import load_table
 
@@ -1903,7 +1904,7 @@ ORACLE = {
     "kcore_peeling_rounds": _kcore_sql(),
     "audience_overlap_jaccard": _OVERLAP_SQL,
     "embedding_gram_matrix": _GRAM_SQL,
-    "embedding_power_iteration": _power_iter_sql(),
+    "embedding_power_iteration": materialize_repeated_ctes(_power_iter_sql()),
     "lm_bigram_coverage": _LM_SQL,
     "lm_quality_probability": _LM_PROB_SQL,
     "keyphrase_rake": _rake_sql(),

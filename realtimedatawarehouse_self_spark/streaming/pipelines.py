@@ -1,7 +1,9 @@
 """Structured Streaming pipelines mirroring the reference's app topologies
-(SURVEY.md §3). Sources are pluggable streaming DataFrames (file/rate/kafka);
-tests feed file streams and assert each pipeline's output equals its batch
-twin in plans/core.py on the same fixture.
+(SURVEY.md §3). Sources are pluggable streaming DataFrames: file and rate
+here; on a cluster, Spark's built-in `readStream.format("kafka")` source
+(no wrapper, and no kafka connector jar in this container). Tests feed file
+streams and assert each pipeline's output equals its batch twin in
+plans/core.py on the same fixture.
 
 Topology mapping:
 - BaseLogApp (§3.1)         -> `sources/files.py::stream_jsonl` (parse +

@@ -2,8 +2,11 @@
 
 The reference's sink surface (SURVEY.md §2.2) maps onto:
 
-- K1 fixed-topic Kafka producer      -> append parquet/kafka sink
-- K2 dynamic-topic producer          -> `sources/kafka.py::write_routed`
+- K1 fixed-topic Kafka producer      -> `append_parquet`; on a cluster,
+  Spark's built-in `writeStream.format("kafka")` sink with a `topic` option
+- K2 dynamic-topic producer          -> the same built-in kafka sink without
+  the `topic` option: it routes each row by its own `topic` column
+  (no wrapper here, and no kafka connector jar in this container)
 - K3 upsert-Kafka / K5 Phoenix upsert-> `upsert_parquet` keyed merge (the
   Delta-MERGE pattern; Delta itself is not available in this container, so
   the merge is implemented as read+anti-join+atomic-swap over parquet —

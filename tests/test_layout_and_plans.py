@@ -3,18 +3,10 @@ and plan-shape regression tests enforcing the PLANS.md invariants."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 import pytest
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.conftest import explain_text as _plan
 
 
 def test_date_partition_pruning(spark, tmp_path):
@@ -67,17 +59,6 @@ def test_bucketed_join_skips_shuffle(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Plan-shape regression: the invariants PLANS.md documents must hold.
 # ---------------------------------------------------------------------------
-SF = None  # filled from conftest TESTDATA at call time
-
-
-@pytest.fixture()
-def sf(tmp_path):
-    from tests.conftest import TESTDATA
-    import os
-
-    return os.path.join(TESTDATA, "sf0.001")
-
-
 def test_q3_pushdown_and_broadcast(spark, sf):
     import __spark_entry__ as e
 
@@ -137,16 +118,15 @@ def _python_path_queries():
 PYTHON_PATH_QUERIES = _python_path_queries()
 
 
-def test_no_python_udf_in_oracle_queries(spark, sf):
+def test_no_python_udf_in_oracle_queries(registry_builds):
     """Every oracle-gated query stays JVM-side (no BatchEvalPython /
     ArrowEvalPython / MapInPandas in any plan) except the explicitly
-    Arrow-batched python_path module."""
-    import __spark_entry__ as e
-
-    for name, q in e.queries().items():
+    Arrow-batched python_path module. Plans come from the session's one
+    sf0.001 build pass (`registry_builds` in conftest)."""
+    for name, build in registry_builds.items():
         if name.startswith("streaming_") or name in PYTHON_PATH_QUERIES:
             continue  # eager-executing / intentionally-Python queries
-        plan = _plan(q(spark, sf))
+        plan = build.plan
         assert "EvalPython" not in plan and "InPandas" not in plan, name
 
 

@@ -1,12 +1,14 @@
 """Guard for the untimed-construction hole (VERDICT r10 "What's wrong" #2).
 
-bench.py times the noop action on a freshly rebuilt frame; query
-CONSTRUCTION runs outside the stopwatch. Any Spark job launched during
-construction is therefore real work the bench never sees — the r10 round
-found kmeans_ivf_train running its whole training that way (fixed in r11:
-lazy persist, training now runs inside the timed action).
+Query CONSTRUCTION should only declare a plan. perfbench's `dws_serving`
+workload times the build separately from the action (`plans.build_ms_p50`),
+so a Spark job launched during construction is work charged to the build
+rather than to the query it serves — the r10 round found kmeans_ivf_train
+running its whole training that way (fixed in r11: lazy persist, training
+now runs inside the action).
 
-This test builds EVERY declared query once and asserts no Spark job ran,
+This test reads the build of EVERY declared query (the session's one build
+pass, `registry_builds` in conftest) and asserts no Spark job ran,
 except for a small documented allowlist. The allowlist is checked exactly
 (no new offender can slip in, and an entry that stops running jobs must be
 removed, as must an entry that names no registered query):
@@ -14,7 +16,7 @@ removed, as must an entry that names no registered query):
 - convergence loops: their loop control (`isEmpty` per round) IS a driver
   action by nature — the iteration count is data-dependent and cannot be
   deferred into the action without changing the declared algorithm. Their
-  bench rows time only the final pass; documented in OPTIMIZATION_r11.md.
+  action runs only the final pass; documented in OPTIMIZATION_r11.md.
 - plan_range_partitions: range boundaries are a two-pass algorithm by
   declaration (sample quantiles, then assign); the ≤15-row boundary fetch
   is the first pass. It runs pre-persist (r10 audit), so it cannot
@@ -23,15 +25,13 @@ removed, as must an entry that names no registered query):
   an unpersisted scan sizes the codebook. Same class: a tiny sizing probe
   that fills no cache.
 
-Jobs are counted per query: each build runs under its own job group, the
-listener bus is drained, and the group's job ids are read back. The global
-`AppStatusStore` job list would be capped by `spark.ui.retainedJobs` and
-could lag the asynchronous listener bus.
+Jobs are counted per query at its first build in the session: each build
+runs under its own job group, the listener bus is drained, and the group's
+job ids are read back. The global `AppStatusStore` job list would be capped
+by `spark.ui.retainedJobs` and could lag the asynchronous listener bus.
 """
 
 from __future__ import annotations
-
-from tests.conftest import SF_SMOKE
 
 # Queries whose CONSTRUCTION may run Spark jobs, with the reason class.
 BUILD_JOB_ALLOWLIST = {
@@ -67,37 +67,18 @@ BUILD_JOB_ALLOWLIST = {
 STREAMING_PREFIX = "streaming_"
 
 
-def test_no_jobs_at_query_construction(spark):
-    import __spark_entry__ as e
-    from realtimedatawarehouse_self_spark.sources.tables import (
-        TABLES,
-        load_table,
-    )
-
-    # Warm the per-path schema cache: the FIRST read of a table in a
-    # process legitimately pays one footer-inference job (tables.py).
-    for t in TABLES:
-        load_table(spark, SF_SMOKE, t)
-
-    sc = spark.sparkContext
-    qs = e.queries()
-    unknown = BUILD_JOB_ALLOWLIST - set(qs)
+def test_no_jobs_at_query_construction(registry_builds):
+    unknown = BUILD_JOB_ALLOWLIST - set(registry_builds)
     assert not unknown, f"allowlist names no registered query: {unknown}"
     offenders: dict[str, int] = {}
     clean_allowlisted: list[str] = []
-    for name in sorted(qs):
+    for name, build in sorted(registry_builds.items()):
         if name.startswith(STREAMING_PREFIX):
             continue
-        group = f"build:{name}"
-        sc.setJobGroup(group, "query construction")
-        qs[name](spark, SF_SMOKE)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ran = len(sc.statusTracker().getJobIdsForGroup(group))
-        if ran > 0 and name not in BUILD_JOB_ALLOWLIST:
-            offenders[name] = ran
-        if ran == 0 and name in BUILD_JOB_ALLOWLIST:
+        if build.jobs > 0 and name not in BUILD_JOB_ALLOWLIST:
+            offenders[name] = build.jobs
+        if build.jobs == 0 and name in BUILD_JOB_ALLOWLIST:
             clean_allowlisted.append(name)
-    sc.setLocalProperty("spark.jobGroup.id", None)
     assert not offenders, (
         f"queries ran Spark jobs during CONSTRUCTION (untimed work — move "
         f"it inside the action or allowlist with justification): {offenders}"

@@ -14,27 +14,12 @@
 
 from __future__ import annotations
 
-import contextlib
 import hashlib
-import io
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-
-@pytest.fixture()
-def sf():
-    from tests.conftest import TESTDATA
-
-    return os.path.join(TESTDATA, "sf0.001")
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.conftest import explain_text as _plan
 
 
 def _h60(s: str) -> int:

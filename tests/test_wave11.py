@@ -16,15 +16,7 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture()
-def sf():
-    from tests.conftest import TESTDATA
-
-    return os.path.join(TESTDATA, "sf0.001")
 
 
 def test_kmv_intersection_exact_matches_recount_and_bounds(spark, sf):

@@ -14,15 +14,7 @@ from __future__ import annotations
 import os
 from collections import Counter, defaultdict
 
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture()
-def sf():
-    from tests.conftest import TESTDATA
-
-    return os.path.join(TESTDATA, "sf0.001")
 
 
 def _parts(spark, sf):
