@@ -4,10 +4,9 @@ The reference pins every job's parallelism to the Kafka partition count and
 hard-codes zone +08:00 (``DateFormatUtil.java:11-39``). Here the session is
 configured once, centrally:
 
-- session time zone defaults to UTC so that results are bit-identical to the
-  DuckDB oracle reading the same (naive-timestamp) parquet; production parity
-  with the reference's +08:00 day-bucketing is a one-line config
-  (``timezone="Asia/Shanghai"``);
+- the session time zone is UTC, set again on every session the engine is
+  handed (``apply_runtime_confs``), so that results are bit-identical to the
+  DuckDB oracle reading the same (naive-timestamp) parquet;
 - AQE on (runtime re-planning, skew-join handling, partition coalescing);
 - Arrow on (pandas UDF / toPandas fast path);
 - shuffle partitions sized for the local harness but overridable — on a real
@@ -55,7 +54,6 @@ def get_spark(
     app_name: str = "rtdw-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    timezone: str = "UTC",
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession."""
@@ -67,7 +65,6 @@ def get_spark(
 
     conf = {
         **RUNTIME_CONFS,
-        "spark.sql.session.timeZone": timezone,
         "spark.sql.shuffle.partitions": str(
             shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
         ),

@@ -87,17 +87,3 @@ def duck():
     yield con
     con.close()
 
-
-def pytest_collection_modifyitems(config, items):
-    """Default-skip items marked `exhaustive` (see pytest.ini) unless
-    SPARK_GRAFT_FULL_TESTS=1. The driver's budgeted `pytest tests/ -x -q`
-    then completes; the full sweep stays one env var away and is run as
-    the end-of-round seal."""
-    if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
-        return
-    skip = pytest.mark.skip(
-        reason="exhaustive sweep — set SPARK_GRAFT_FULL_TESTS=1"
-    )
-    for item in items:
-        if "exhaustive" in item.keywords:
-            item.add_marker(skip)

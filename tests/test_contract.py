@@ -1,109 +1,33 @@
-"""Driver-contract regression guards: registry rotation, oracle coverage
-and the testdata contracts the oracles rely on (a silent registry-rotation
-typo was one of round 1's interop failures)."""
+"""Driver-contract regression guards: registry order, oracle coverage and
+the testdata contracts the oracles rely on."""
 
 from __future__ import annotations
 
-import json
-import re
-
 
 def test_registry_rotation_list_is_valid():
-    """_VERIFY_FIRST drives which queries the external verifier re-proves;
-    a typo silently drops a query from rotation (the _ordered() helper
-    skips unknown names)."""
+    """Every registered query is oracle-gated (r4: approx_daily_users got a
+    deterministic oracle via its exact-companion columns), every query is
+    callable and every oracle is a SELECT."""
     from realtimedatawarehouse_self_spark import plans
 
     qs = plans.all_queries()
     oracles = plans.all_oracles()
-    missing = [k for k in plans._VERIFY_FIRST if k not in qs]
-    assert missing == [], f"rotation names not in registry: {missing}"
-    # every registered query is oracle-gated (r4: approx_daily_users got a
-    # deterministic oracle via its exact-companion columns)
     rows_only = set(qs) - set(oracles)
     assert rows_only == set(), rows_only
-    # every query callable and oracle is non-trivially defined
     assert all(callable(v) for v in qs.values())
     assert all(isinstance(v, str) and "SELECT" in v.upper() for v in oracles.values())
 
 
-def test_rotation_advances_coverage():
-    """Rotation invariant (ADVICE r2/r3, re-tightened per VERDICT r6 #2):
-    the HEAD of _VERIFY_FIRST — the only part a ~50-query driver budget
-    ever reaches — must consist of queries that have never received green
-    driver evidence in ANY recorded round. A full ordering that merely
-    *contains* the uncovered names somewhere satisfies nothing (the r6
-    regression); this test is positional: the first
-    min(DRIVER_BUDGET, |uncovered|) entries must all be uncovered.
-    With full coverage (zero uncovered, the r8 state) the invariant
-    extends to evidence *freshness* (VERDICT r8 #1): queries whose MOST
-    RECENT driver record is a fail (the r3 loader-outage reds) must
-    precede every query whose record already ends green, so no registry
-    row's evidence trail ends on a red once the driver's budget reaches
-    it. Renamed/removed queries in old records are ignored."""
-    import glob
-    import os
-
+def test_registry_order_starts_with_core():
+    """The registry is returned in module order, so the reference pipelines
+    (`plans.core`) come first, in their own order: a reader of
+    __spark_entry__.queries() meets the warehouse before the extensions."""
     from realtimedatawarehouse_self_spark import plans
+    from realtimedatawarehouse_self_spark.plans import core
 
-    DRIVER_BUDGET = 50  # every round so far recorded exactly ~50 rows
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    records = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    if not records:  # fresh clone without driver artifacts
-        return
-    ever_green: set[str] = set()
-    latest: dict[str, tuple[int, bool]] = {}
-    for rec in records:
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", rec).group(1))
-        with open(rec) as f:
-            for name, row in json.load(f).items():
-                ok = bool(
-                    row.get("rows_match")
-                    and row.get("schema_match")
-                    and row.get("hash_match") in (True, None)
-                )
-                if rnd >= latest.get(name, (0, False))[0]:
-                    latest[name] = (rnd, ok)
-                if ok:
-                    ever_green.add(name)
-    registry = set(plans.all_queries())
-    rotation = plans._VERIFY_FIRST
-    assert len(rotation) == len(set(rotation)), "duplicate rotation entries"
-    uncovered = registry - ever_green
-    missing = uncovered - set(rotation)
-    assert missing == set(), (
-        f"queries with no driver evidence in any record are absent from "
-        f"_VERIFY_FIRST: {sorted(missing)}"
-    )
-    # positional: the head the driver will actually run must be uncovered
-    n = min(DRIVER_BUDGET, len(uncovered))
-    head = rotation[:n]
-    stale_in_head = [q for q in head if q in ever_green]
-    assert stale_in_head == [], (
-        f"{len(stale_in_head)} already-driver-proven queries occupy the "
-        f"rotation head while {len(uncovered)} queries still lack any "
-        f"driver evidence: {stale_in_head}"
-    )
-    # freshness: red-latest queries (proven before, but newest record is
-    # a fail) fill the budget remaining after the uncovered tier, ahead
-    # of any query whose record already ends green.
-    red_latest = {
-        q
-        for q, (_, ok) in latest.items()
-        if not ok and q in registry and q in ever_green
-    }
-    m = min(DRIVER_BUDGET, len(uncovered) + len(red_latest))
-    green_in_priority_head = [
-        q
-        for q in rotation[:m]
-        if q in ever_green and q not in red_latest
-    ]
-    assert green_in_priority_head == [], (
-        f"{len(green_in_priority_head)} green-record queries occupy the "
-        f"rotation head while {len(red_latest)} queries' latest driver "
-        f"record is still a fail: {green_in_priority_head}"
-    )
+    head = list(plans.all_queries())[: len(core.QUERIES)]
+    assert head == list(core.QUERIES)
+    assert list(plans.all_oracles())[: len(core.ORACLE)] == list(core.ORACLE)
 
 
 def test_no_vacuous_queries_at_driver_scale(duck):

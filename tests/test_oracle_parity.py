@@ -1,8 +1,8 @@
 """The repo's own correctness gate: every query in __spark_entry__.queries()
-with an oracle must hash-match DuckDB on the sf0.001 tables (fast) — the
-driver runs the same comparison at sf0.01.
+has an oracle, and every one of them must hash-match DuckDB on the sf0.001
+tables in every run of the suite.
 
-Set SPARK_GRAFT_PARITY_SF=sf0.01 to run the full-size check locally.
+Set SPARK_GRAFT_PARITY_SF=sf0.01 to run the same check at the larger scale.
 """
 
 from __future__ import annotations
@@ -23,30 +23,7 @@ def _all_names():
     return sorted(e.oracle_sql().keys())
 
 
-def _params():
-    """Every oracle-gated query, with the tail marked `exhaustive` so the
-    DEFAULT run (what the external driver's budgeted pytest executes)
-    stays fast while still covering (a) the driver's ENTIRE next
-    verification window — the first 120 of the rotation order, ~2.4x its
-    observed ~50-query budget — and (b) a deterministic 1-in-5 sample of
-    everything else. SPARK_GRAFT_FULL_TESTS=1 runs all (the end-of-round
-    seal does; see pytest.ini)."""
-    from realtimedatawarehouse_self_spark.plans import _VERIFY_FIRST
-
-    rotation = {n: i for i, n in enumerate(_VERIFY_FIRST)}
-    names = sorted(_all_names(), key=lambda n: rotation.get(n, 10**6))
-    out = []
-    for i, n in enumerate(names):
-        fast = i < 120 or i % 5 == 0
-        out.append(
-            pytest.param(n, id=n)
-            if fast
-            else pytest.param(n, id=n, marks=pytest.mark.exhaustive)
-        )
-    return out
-
-
-@pytest.mark.parametrize("name", _params())
+@pytest.mark.parametrize("name", _all_names())
 def test_oracle_parity(spark, duck, name):
     import __spark_entry__ as e
 
